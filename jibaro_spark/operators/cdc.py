@@ -506,11 +506,7 @@ def incremental_minmax_apply(
     # merged is one row per touched-or-stored key — exactly the view
     # the maintenance pipeline rewrites anyway, so materializing it to
     # executor blocks is the pipeline's own output cost, not new work.
-    # ``JIBARO_SPARK_IVM_PIN=0`` disables (A/B measurement gate).
-    import os
-
-    if os.environ.get("JIBARO_SPARK_IVM_PIN", "1") != "0":
-        merged = merged.localCheckpoint(eager=True)
+    merged = merged.localCheckpoint(eager=True)
     # dirty: a removal touches the stored extremum, or the key is new
     # to the aggregate (no stored row), or everything was deleted
     dirty_cond = (
@@ -693,8 +689,6 @@ def incremental_topk_apply(
     pinned by the q_incremental_topk oracle (scratch recompute) and
     branch units.
     """
-    import os
-
     from pyspark.sql.window import Window
 
     dec = f"decimal(28,{scale})"
@@ -711,17 +705,12 @@ def incremental_topk_apply(
     # q_incremental_topk plan had 50 parquet scans / 13 Window nodes
     # for logically 3 windows.  Both frames are bounded: view is
     # ≤ k rows/key (executor-distributed blocks, never collected),
-    # dirty_keys by the change batch.  ``JIBARO_SPARK_IVM_PIN=0``
-    # disables (A/B measurement gate).
-    _pin = os.environ.get("JIBARO_SPARK_IVM_PIN", "1") != "0"
-    if _pin:
-        view = view.localCheckpoint(eager=True)
+    # dirty_keys by the change batch.
+    view = view.localCheckpoint(eager=True)
     removals = changes.filter(F.col(op_col).isin("u", "d")).select(*keys, id_col)
     dirty_keys = (
         removals.join(view, keys + [id_col], "left_semi").select(*keys).distinct()
-    )
-    if _pin:
-        dirty_keys = dirty_keys.localCheckpoint(eager=True)
+    ).localCheckpoint(eager=True)
     inserts = changes.filter(F.col(op_col) != "d").select(
         *keys,
         F.col(id_col).alias(id_col),

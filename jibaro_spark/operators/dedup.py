@@ -32,7 +32,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from jibaro_spark.operators.util import dense_exchange, ensure_parallelism
+from jibaro_spark.operators.util import (
+    dense_exchange,
+    ensure_parallelism,
+    size_route,
+)
 
 _ROW_NUM = "__jibaro_rn"
 
@@ -816,33 +820,23 @@ def _block_join_skew_safe(
     """Block equi-join for the edit-distance verify: dense exchange on
     balanced blocks, k×k deterministic salt grid past the hot-block
     bound (see the call site for the full rationale).  Probe cost is
-    one keys-only aggregate over both sides (map-side partial counts).
+    one keys-only aggregate over both sides (map-side partial counts),
+    routed per side.
     """
     import math
-    import os
 
-    if os.environ.get("JIBARO_SPARK_EDJ_SKEW", "1") == "0":
-        return dense_exchange(l, "__blk").join(r, ["__blk"])
     spark = l.sparkSession
     n_parts = max(
         spark.sparkContext.defaultParallelism,
         int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
     )
-    stats = (
-        l.select("__blk").withColumn("__s", F.lit(0))
-        .unionByName(r.select("__blk").withColumn("__s", F.lit(1)))
-        .groupBy("__s", "__blk")
-        .agg(F.count(F.lit(1)).alias("__c"))
-        .groupBy("__s")
-        .agg(F.max("__c").alias("mx"), F.sum("__c").alias("n"))
-        .collect()
+    blocks = l.select("__blk").withColumn("__s", F.lit(0)).unionByName(
+        r.select("__blk").withColumn("__s", F.lit(1))
     )
-    hot = any(
-        (row["mx"] or 0) > _EDJ_BLOCK_MAX_ABS
-        and (row["mx"] or 0) > _EDJ_BLOCK_SHARE * (row["n"] or 0) / n_parts
-        for row in stats
-    )
-    if not hot:
+    if size_route(
+        blocks, ["__blk"], max_abs=_EDJ_BLOCK_MAX_ABS, share=_EDJ_BLOCK_SHARE,
+        n_parts=n_parts, per=["__s"],
+    ).plain:
         return dense_exchange(l, "__blk").join(r, ["__blk"])
     k = max(int(math.ceil(math.sqrt(n_parts))), 2)
     # salts on BOTH sides must be the same type (long) — an int/long
@@ -1022,7 +1016,6 @@ def edit_distance_join(
         # the hot block's quadratic verify spreads over k² tasks.
         # Each (l, r) pair matches exactly one (sl, sr) cell → results
         # identical (pinned in tests/test_round13_edj_skew.py).
-        # JIBARO_SPARK_EDJ_SKEW=0 restores the r12 unprobed route.
         if on:
             joined = _block_join_skew_safe(l, r, left_id, right_id)
         else:
@@ -1275,8 +1268,7 @@ def sorted_neighborhood_pairs(
     # route: ranked feeds BOTH sides of the bucket self-join below,
     # and without it each side re-runs the global window.
     ranked = global_row_number(
-        df.select(id_col, *sort_cols), [*sort_cols, id_col], out_col="__rn",
-        adaptive=True,
+        df.select(id_col, *sort_cols), [*sort_cols, id_col], out_col="__rn"
     ).select(
         id_col, "__rn", F.expr(f"(__rn - 1) div {window}").alias("__b")
     ).localCheckpoint(eager=False)

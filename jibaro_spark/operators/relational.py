@@ -14,6 +14,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from jibaro_spark.operators.util import size_route
+
 
 def asof_join(
     left: DataFrame,
@@ -97,7 +99,7 @@ def asof_join(
     ).unionByName(ltag)
 
     # ONE shared group-size probe for every carry (r13, VERDICT r12
-    # #6): per-carry ``adaptive=True`` was measured a net loss here —
+    # #6): a probe per carry was measured a net loss here —
     # ``nearest`` runs TWO carries, so two probe jobs outweighed the
     # chunked forms they replaced.  Instead the union frame is pinned
     # (lazy — the probe's count job materializes it and the carries
@@ -107,14 +109,12 @@ def asof_join(
     # sort direction differs.  Balanced keys route through plain
     # windows — and the two windows of ``nearest`` hash-partition on
     # the same __k, so the second reuses the first's exchange.  A hot
-    # key keeps the chunked stitch.  JIBARO_SPARK_ASOF_ADAPTIVE=0
-    # forces the r12 behavior (always-chunked, no probe; A/B gate).
-    import os
-
-    route = None
-    if os.environ.get("JIBARO_SPARK_ASOF_ADAPTIVE", "1") != "0":
-        u = u.localCheckpoint(eager=False)
-        route = carry_routes_plain(u, ["__k"])
+    # key keeps the chunked stitch.
+    u = u.localCheckpoint(eager=False)
+    route_plain = size_route(
+        u, ["__k"], max_abs=_CARRY_PLAIN_MAX_ABS, share=_CARRY_PLAIN_SHARE,
+        n_parts=u.sparkSession.sparkContext.defaultParallelism,
+    ).plain
 
     # Ordering invariant: within equal __t, rights (side 0) precede
     # lefts (side 1) so inclusive <=/>= semantics hold; among equal
@@ -135,7 +135,7 @@ def asof_join(
         # any direction (same fence as the window form).
         c = grouped_running_carry(
             u_df, ["__k"], order, last_cols=["__rpay"], last_out=[out],
-            route_plain=route,
+            route_plain=route_plain,
         )
         return c.withColumn(
             out, F.when(F.col("__t").isNotNull(), F.col(out))
@@ -762,7 +762,6 @@ def global_row_number(
     order_cols: Sequence[str],
     num_partitions: int | None = None,
     out_col: str = "__rn",
-    adaptive: bool = False,
     with_count: bool = False,
 ) -> "DataFrame | tuple[DataFrame, int]":
     """Exact 1-based global row number under a total order WITHOUT a
@@ -780,38 +779,37 @@ def global_row_number(
     ``order_cols`` (include a unique id) for the number to be
     deterministic.
 
-    ``adaptive=True`` (r12, same routing as :func:`ntile_exact`): one
-    ``count()`` probe routes inputs under the single-task sort floor
-    (``_CARRY_PLAIN_MAX_ABS`` rows) through a plain
-    ``row_number().over(Window.orderBy(...))`` — one stage instead of
-    the 3 jobs above (range sampling, eager checkpoint, offset
-    collect).  Bit-identity pinned in
-    tests/test_round12_ntile_adaptive.py; opt-in per caller (the probe
-    re-executes the input subtree, so feed it a pinned/cheap frame).
-    ``JIBARO_SPARK_NTILE_ADAPTIVE=0`` forces the chunked route.
+    Cost-based (r12, same routing as :func:`ntile_exact`): a
+    groupless :func:`size_route` probe (one ``count()``) routes inputs
+    under the single-task sort floor (``_CARRY_PLAIN_MAX_ABS`` rows)
+    through a plain ``row_number().over(Window.orderBy(...))`` — one
+    stage instead of the 3 jobs above (range sampling, eager
+    checkpoint, offset collect).  Bit-identity pinned in
+    tests/test_round12_ntile_adaptive.py.  The probe re-executes the
+    input subtree, so callers feed it a pinned or cheap frame.
 
     ``with_count=True`` (r13, ADVICE r12 #3) returns ``(df, n)`` —
-    BOTH routes already know the exact row count (the adaptive probe
-    counts; the chunked route sums its per-partition counts), so a
-    caller that also needs N (decile formulas, rank-fraction mapping)
-    reuses it instead of paying a second count job over the same
-    subtree.
+    BOTH routes already know the exact row count (the probe counts;
+    the chunked route sums its per-partition counts), so a caller that
+    also needs N (decile formulas, rank-fraction mapping) reuses it
+    instead of paying a second count job over the same subtree.
     """
-    import os
-
-    if adaptive and os.environ.get("JIBARO_SPARK_NTILE_ADAPTIVE", "1") != "0":
-        n = df.count()
-        if n <= _CARRY_PLAIN_MAX_ABS:
-            w = Window.orderBy(*[F.col(c) for c in order_cols])
-            # nullif against an impossible value (row_number >= 1) keeps
-            # the column NULLABLE like the chunked route's offset-map add
-            out = df.withColumn(
-                out_col,
-                F.nullif(F.row_number().over(w).cast("long"), F.lit(-1)),
-            )
-            return (out, n) if with_count else out
+    n_parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+    route = size_route(
+        df, (), max_abs=_CARRY_PLAIN_MAX_ABS, share=_CARRY_PLAIN_SHARE,
+        n_parts=n_parts,
+    )
+    if route.plain:
+        w = Window.orderBy(*[F.col(c) for c in order_cols])
+        # nullif against an impossible value (row_number >= 1) keeps
+        # the column NULLABLE like the chunked route's offset-map add
+        out = df.withColumn(
+            out_col,
+            F.nullif(F.row_number().over(w).cast("long"), F.lit(-1)),
+        )
+        return (out, route.total) if with_count else out
     numbered, total = _global_row_number_with_total(
-        df, order_cols, num_partitions, out_col
+        df, order_cols, n_parts, out_col
     )
     return (numbered, total) if with_count else numbered
 
@@ -859,7 +857,6 @@ def ntile_exact(
     order_cols: Sequence[str],
     out_col: str = "__ntile",
     num_partitions: int | None = None,
-    adaptive: bool = False,
 ) -> DataFrame:
     """SQL ``NTILE(k)`` semantics (first ``n % k`` buckets get the
     extra row) computed from :func:`global_row_number` — i.e. without
@@ -867,28 +864,25 @@ def ntile_exact(
     The row count the bucket formula needs is taken from the same
     bounded per-partition count pass.
 
-    ``adaptive=True`` (r12, the carry/prefix-sum routing pattern —
-    guide §1.2): one ``count()`` probe routes inputs under the
-    single-task sort floor (``_CARRY_PLAIN_MAX_ABS`` rows) through the
-    native ``NTILE(k)`` window — one stage, none of the chunked form's
-    range-sampling pass, eager checkpoint, or offset collect (3 jobs
-    per call; q_rfm_segments pays them three times).  The two routes
-    are the same function by the SQL NTILE definition (bit-identity
-    pinned in tests/test_round12_ntile_adaptive.py).  Opt-in per
-    caller, NOT default: the probe re-executes whatever sits below it,
-    so callers must feed it a pinned/cheap input (the adaboost cells
-    lesson).  ``JIBARO_SPARK_NTILE_ADAPTIVE=0`` forces the chunked
-    route (A/B measurement gate).
+    Cost-based (r12, the carry/prefix-sum routing pattern — guide
+    §1.2): a groupless :func:`size_route` probe (one ``count()``)
+    routes inputs under the single-task sort floor
+    (``_CARRY_PLAIN_MAX_ABS`` rows) through the native ``NTILE(k)``
+    window — one stage, none of the chunked form's range-sampling
+    pass, eager checkpoint, or offset collect (3 jobs per call;
+    q_rfm_segments would pay them three times).  The two routes are
+    the same function by the SQL NTILE definition (bit-identity pinned
+    in tests/test_round12_ntile_adaptive.py).  The probe re-executes
+    whatever sits below it, so callers feed it a pinned or cheap input
+    (the adaboost cells lesson).
     """
     if k < 1:
         raise ValueError(f"ntile_exact: k must be >= 1, got {k}")
-    import os
-
-    if (
-        adaptive
-        and os.environ.get("JIBARO_SPARK_NTILE_ADAPTIVE", "1") != "0"
-        and df.count() <= _CARRY_PLAIN_MAX_ABS
-    ):
+    n_parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+    if size_route(
+        df, (), max_abs=_CARRY_PLAIN_MAX_ABS, share=_CARRY_PLAIN_SHARE,
+        n_parts=n_parts,
+    ).plain:
         w = Window.orderBy(*[F.col(c) for c in order_cols])
         # nullif against a value NTILE can never produce (it is >= 1)
         # keeps the column NULLABLE like the chunked route's output —
@@ -898,7 +892,7 @@ def ntile_exact(
             out_col,
             F.nullif(F.ntile(k).over(w).cast("long"), F.lit(-1)),
         )
-    rn, n = _global_row_number_with_total(df, order_cols, num_partitions, "__rn")
+    rn, n = _global_row_number_with_total(df, order_cols, n_parts, "__rn")
     q, r = divmod(n, k)
     threshold = (q + 1) * r
     # integer `div` throughout — double division would misplace bucket
@@ -921,8 +915,7 @@ def grouped_prefix_sum(
     num_partitions: int | None = None,
     total_cols: "Sequence[str] | None" = None,
     broadcast_totals: bool = True,
-    adaptive: bool = False,
-    route_plain: "bool | None" = None,
+    route_plain: bool = False,
 ) -> DataFrame:
     """Exact per-group running sum of ``value_col`` under
     ``order_cols`` WITHOUT a per-group single-task scan ([ext] scale
@@ -974,6 +967,14 @@ def grouped_prefix_sum(
     classes); pass ``False`` for a high-cardinality group key so the
     rejoin runs as a keyed shuffle join instead of materializing every
     group on every executor.
+
+    ``route_plain=True`` computes the same columns with plain
+    ``Window.partitionBy(group)`` windows instead — cheaper when no
+    group is hot.  The operator never probes: the caller decides with
+    :func:`~jibaro_spark.operators.util.size_route` over
+    ``_CARRY_PLAIN_MAX_ABS`` / ``_CARRY_PLAIN_SHARE``, once per frame,
+    and may reuse one decision for several calls over the same key
+    groups (asof's two ``nearest`` carries, AdaBoost's second round).
     """
     vcols = [value_col] if isinstance(value_col, str) else list(value_col)
     outs = [out_col] if isinstance(out_col, str) else list(out_col)
@@ -989,22 +990,14 @@ def grouped_prefix_sum(
     gcols = [F.col(c) for c in group_cols]
     ocols = [F.col(c) for c in order_cols]
     n_parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    # route_plain (r13): a caller that already KNOWS the routing — from
-    # carry_routes_plain() on a shared/equivalent frame (asof's two
-    # nearest-direction carries; adaboost's round-2 cells, whose key
-    # domain equals round 1's) — passes it here and skips this call's
-    # probe job.  None preserves the r12 behavior (probe iff adaptive).
-    if route_plain is None:
-        route_plain = adaptive and _carry_routes_plain(df, gcols, n_parts)
     if route_plain:
-        # COST-BASED plain-window route (r12, same probe as
-        # grouped_running_carry): when no group exceeds the hot-key
-        # bound, the plain windows are balanced and skip the range
-        # sampling pass, the eager checkpoint, the chunk-total
-        # aggregation, and the offset join.  Identical values and
-        # NULL contract — the chunked form's combine exists precisely
-        # to reproduce the plain window (pinned in
-        # tests/test_round12_carry_adaptive.py's prefix-sum case).
+        # plain-window route: when no group exceeds the hot-key bound,
+        # the plain windows are balanced and skip the range sampling
+        # pass, the eager checkpoint, the chunk-total aggregation, and
+        # the offset join.  Identical values and NULL contract — the
+        # chunked form's combine exists precisely to reproduce the
+        # plain window (pinned in tests/test_round12_carry_adaptive.py's
+        # prefix-sum case).
         run_w = (
             Window.partitionBy(*gcols)
             .orderBy(*ocols)
@@ -1107,8 +1100,9 @@ def grouped_prefix_sum(
     )
 
 
-#: Plain-window routing bounds for the adaptive carry/prefix-sum
-#: (r12): a group is "hot" — worth the chunked stitch — only when it
+#: Plain-window routing bounds (r12) that every :func:`size_route` probe
+#: for the carry / prefix-sum / global-row-number routes reads at call
+#: time: a group is "hot" — worth the chunked stitch — only when it
 #: exceeds BOTH an absolute floor (a single-task in-memory sort of
 #: ~2M narrow rows is ~1 s on any executor — negligible next to the
 #: chunked form's range-sampling pass + checkpoint + stitch join; the
@@ -1116,50 +1110,11 @@ def grouped_prefix_sum(
 #: operators.graph) and half a fair partition share (past that, one
 #: hash partition of the plain window holds a straggler's worth of
 #: rows).  A 10^8-row hot key — the 100 TB failure mode the chunked
-#: form exists for — exceeds both and keeps the chunked route.
+#: form exists for — exceeds both and keeps the chunked route.  The
+#: groupless probes (:func:`global_row_number`, :func:`ntile_exact`)
+#: treat the whole frame as one group, so only the floor can pass them.
 _CARRY_PLAIN_MAX_ABS = 2_000_000
 _CARRY_PLAIN_SHARE = 0.5
-
-
-def _carry_routes_plain(df: DataFrame, gcols, n_parts: int) -> bool:
-    """COST-BASED carry routing probe (r12, the collapse-probe pattern
-    — guide §1.2): the chunked form exists for hot-key skew, but it
-    costs a range-boundary sampling pass, the chunk-total aggregation,
-    the offset window, and the stitch join — measured ~2× the plain
-    window on balanced corpora at sf0.1.  One group-size probe
-    (keys-only shuffle, map-side partial counts) decides at
-    construction: when the BIGGEST group is at most half a fair
-    partition share (or under the absolute floor), hash-partitioned
-    plain windows are balanced and strictly cheaper; a hot key past
-    that routes chunked.  Outputs are identical either way (pinned
-    both-regimes in tests/test_round12_carry_adaptive.py on top of the
-    r11 chunked≡plain equivalence tests)."""
-    st = (
-        df.groupBy(*gcols)
-        .agg(F.count(F.lit(1)).alias("__c"))
-        .agg(F.max("__c").alias("mx"), F.sum("__c").alias("n"))
-        .first()
-    )
-    mx, n = st["mx"] or 0, st["n"] or 0
-    return mx <= _CARRY_PLAIN_MAX_ABS or mx <= _CARRY_PLAIN_SHARE * n / n_parts
-
-
-def carry_routes_plain(
-    df: DataFrame, group_cols: Sequence[str], num_partitions: int | None = None
-) -> bool:
-    """Public form of the carry/prefix-sum routing probe (r13): ONE
-    group-size probe job whose decision a caller can feed to SEVERAL
-    :func:`grouped_running_carry` / :func:`grouped_prefix_sum` calls
-    via ``route_plain=`` — the per-call ``adaptive=True`` probe charges
-    one count job each, which is exactly what made per-join adaptive
-    routing a net loss for asof_join's two nearest-direction carries
-    (VERDICT r12 #6).  Feed it a pinned/cheap frame (the probe executes
-    the input subtree).  Same bounds as the internal probe."""
-    gcols = [F.col(c) for c in group_cols]
-    n_parts = (
-        num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    )
-    return _carry_routes_plain(df, gcols, n_parts)
 
 
 def grouped_running_carry(
@@ -1173,8 +1128,7 @@ def grouped_running_carry(
     rev_last_cols: Sequence[str] = (),
     rev_last_out: Sequence[str] = (),
     num_partitions: int | None = None,
-    adaptive: bool = False,
-    route_plain: "bool | None" = None,
+    route_plain: bool = False,
 ) -> DataFrame:
     """Exact per-group running ``last(col, ignorenulls=True)`` and/or
     running ``sum(col)`` under ``order_by`` WITHOUT a per-group
@@ -1220,7 +1174,8 @@ def grouped_running_carry(
     are handled (the offset join is null-safe), matching the plain
     window's NULL-groups-together semantics.  Sum columns follow
     :func:`grouped_prefix_sum`'s typing contract (integer/decimal for
-    bit-exact cross-engine results).
+    bit-exact cross-engine results).  ``route_plain`` works as in
+    :func:`grouped_prefix_sum`.
     """
     lasts = list(zip(last_cols, last_out))
     sums = list(zip(sum_cols, sum_out))
@@ -1235,33 +1190,26 @@ def grouped_running_carry(
         raise ValueError("grouped_running_carry: nothing to compute")
     gcols = [F.col(c) for c in group_cols]
     n_parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    # route_plain: see grouped_prefix_sum — a shared precomputed probe
-    # decision; None = probe iff adaptive (the r12 behavior).
-    if route_plain is None:
-        route_plain = adaptive and _carry_routes_plain(df, gcols, n_parts)
     if route_plain:
-            run_w = (
-                Window.partitionBy(*group_cols)
-                .orderBy(*order_by)
-                .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            )
-            rev_w = (
-                Window.partitionBy(*group_cols)
-                .orderBy(*order_by)
-                .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-            )
-            out = df
-            for vc, oc in lasts:
-                out = out.withColumn(
-                    oc, F.last(vc, ignorenulls=True).over(run_w)
-                )
-            for vc, oc in revs:
-                out = out.withColumn(
-                    oc, F.first(vc, ignorenulls=True).over(rev_w)
-                )
-            for vc, oc in sums:
-                out = out.withColumn(oc, F.sum(vc).over(run_w))
-            return out
+        # plain-window route (see grouped_prefix_sum)
+        run_w = (
+            Window.partitionBy(*group_cols)
+            .orderBy(*order_by)
+            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        )
+        rev_w = (
+            Window.partitionBy(*group_cols)
+            .orderBy(*order_by)
+            .rowsBetween(Window.currentRow, Window.unboundedFollowing)
+        )
+        out = df
+        for vc, oc in lasts:
+            out = out.withColumn(oc, F.last(vc, ignorenulls=True).over(run_w))
+        for vc, oc in revs:
+            out = out.withColumn(oc, F.first(vc, ignorenulls=True).over(rev_w))
+        for vc, oc in sums:
+            out = out.withColumn(oc, F.sum(vc).over(run_w))
+        return out
     # pinned range exchange (grouped_prefix_sum discipline): both the
     # local-carry branch and the carry-in branch derive from `s`;
     # without the checkpoint a stage retry could re-sample range

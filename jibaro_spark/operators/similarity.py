@@ -971,25 +971,11 @@ def train_pq_codebook(
     bounded collect).  Per-centroid means can differ from the per-sub
     jobs at the last ulp (different partial-aggregation grouping) —
     inside this family's recall-pinned contract (test_approx_ops), the
-    same variance class the r12 input spread already accepted.
-    ``JIBARO_SPARK_PQ_FOLD=0`` restores the per-subspace loop.
+    same variance class the r12 input spread already accepted.  The
+    per-subspace loop survives as the reference in
+    tests/test_round13_pq_fold.py.
     """
-    import os
-
     spark = df.sparkSession
-    if os.environ.get("JIBARO_SPARK_PQ_FOLD", "1") == "0":
-        rows = []
-        for s in range(m):
-            sub = df.select(
-                F.col(id_col),
-                F.slice(F.col(vec_col), s * sub_dim + 1, sub_dim).alias("__sv"),
-            )
-            seeds = seed_centroids(sub, id_col, "__sv", n_centroids=k)
-            cents = kmeans_refine(sub, "__sv", seeds, iterations=iterations)
-            for cid, c in enumerate(cents):
-                rows.append((s, cid, [float(x) for x in c]))
-        return spark.createDataFrame(rows, "sub int, cid int, cvec array<float>")
-
     from pyspark.sql.types import NumericType
 
     # --- seeds: one strided collect of FULL vectors (seed_centroids'

@@ -2,7 +2,11 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from dataclasses import dataclass
+from typing import Sequence
+
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 
 
 def ensure_parallelism(
@@ -24,24 +28,73 @@ def ensure_parallelism(
     cache-plan matching and ReusedExchange — operators that scan their
     input more than once (e.g. ``exact_quantiles_bucketed``) need a
     deterministic exchange or every pass repeats the scan+shuffle.
-
-    ``JIBARO_SPARK_ENSURE_PARALLELISM=0`` disables the spread globally
-    (measurement/debug gate for within-session A/B comparisons).
     """
-    import os
-
-    if os.environ.get("JIBARO_SPARK_ENSURE_PARALLELISM", "1") == "0":
-        return df
     sc = df.sparkSession.sparkContext
     target = min_partitions or sc.defaultParallelism
     if df.rdd.getNumPartitions() < target:
-        from pyspark.sql import functions as F
-
         if by is not None:
             cols = [by] if isinstance(by, str) else list(by)
             return df.repartition(target, *[F.col(c) for c in cols])
         return df.repartition(target)
     return df
+
+
+@dataclass(frozen=True)
+class Route:
+    """One probe-then-route decision and the counts behind it:
+    ``plain`` iff ``max_group <= bound``."""
+
+    plain: bool
+    max_group: int
+    total: int
+    bound: float
+
+
+def size_route(
+    df: DataFrame,
+    group_cols: "Sequence[str | Column]",
+    *,
+    max_abs: float,
+    share: float,
+    n_parts: int,
+    per: "Sequence[str]" = (),
+) -> Route:
+    """Group-size probe shared by every probe-then-route operator.
+
+    Operators with a cheap plain form (one window, one equi-join) and
+    a skew-safe form (chunked stitch, salt grid) pick a route from the
+    size of the biggest group.  The route is plain when that group
+    holds at most ``max_abs`` rows, or at most ``share`` of a fair
+    partition (``share * total / n_parts``): a group under either
+    bound costs one task no more than the skew-safe form's extra
+    passes do.
+
+    One keys-only aggregate with map-side partial counts, collected as
+    one row per ``per`` value.  ``group_cols=()`` treats the whole
+    frame as one group, so ``total`` is the row count and the probe
+    runs the same jobs as ``df.count()``.  With ``per=``, max and
+    total are taken per value of the ``per`` columns and the route is
+    plain only when every value passes; the returned counts are those
+    of the value furthest over (or closest to) its bound.
+
+    The probe executes ``df``'s subtree: callers that read the frame
+    again afterwards pin it first.
+    """
+    keys = [*per, *group_cols]
+    stats = (
+        df.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("__c"))
+        .groupBy(*per)
+        .agg(F.max("__c").alias("mx"), F.sum("__c").alias("n"))
+        .collect()
+    )
+
+    def route(mx: int, n: int) -> Route:
+        bound = float(max(max_abs, share * n / n_parts))
+        return Route(mx <= bound, mx, n, bound)
+
+    routes = [route(r["mx"] or 0, r["n"] or 0) for r in stats] or [route(0, 0)]
+    return max(routes, key=lambda r: r.max_group - r.bound)
 
 
 def dense_exchange(df: DataFrame, *cols: str, n: int | None = None) -> DataFrame:
@@ -65,15 +118,7 @@ def dense_exchange(df: DataFrame, *cols: str, n: int | None = None) -> DataFrame
     opts out of AQE skew-splitting for that join; use only where the
     key distribution is bounded by construction (df-ordered prefix
     grams, capped posting lists).
-
-    ``JIBARO_SPARK_DENSE_EXCHANGE=0`` disables (A/B measurement gate).
     """
-    import os
-
-    from pyspark.sql import functions as F
-
-    if os.environ.get("JIBARO_SPARK_DENSE_EXCHANGE", "1") == "0":
-        return df
     spark = df.sparkSession
     if n is None:
         n = max(

@@ -306,7 +306,6 @@ def q_ntile_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         4,
         ["__neg_bal", "c_custkey"],
         out_col="wealth_quartile",
-        adaptive=True,
     )
     return (
         binned.select(

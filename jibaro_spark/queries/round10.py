@@ -619,7 +619,8 @@ SELECT * FROM (
     description="Two AdaBoost rounds over two-feature decision stumps: integer round-1 errors, round(exp(±α),10)-decimal round-2 weights, TakeOrdered argmins — the distributed boosting primitive (training [ext])",
 )
 def q_adaboost_round(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from jibaro_spark.operators.relational import grouped_prefix_sum
+    from jibaro_spark.operators import relational as rel
+    from jibaro_spark.operators.util import size_route
 
     o = load_tables(spark, sf_dir, "orders")["orders"]
     # NULL contract (relational fuzz sweep): both stump feature axes
@@ -645,33 +646,17 @@ def q_adaboost_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     # interaction with the lazily-checkpointed cells probe costs more
     # than the one-core partial agg saves.  The unspread scan stays.
     #
-    # r13 (VERDICT r12 #4, gated JIBARO_SPARK_R13_ADA): with the cells
-    # frames now lazily pinned, re-attack the residual differently —
-    # (a) spread ex AND pin it lazily, so BOTH rounds' cells
-    # aggregations read one 32-partition cached projection instead of
-    # two single-row-group parquet scans (round 2's ex3 crossJoin +
-    # explode otherwise re-runs scan+project on one core); (b) the
-    # round-2 (cells2 → wcells) two-step collapses to ONE aggregation
-    # straight off ex3 — decimal sums are exact, so
-    # sum_rows(w(correct)) ≡ sum_groups(n·w(correct)) bit-for-bit and
-    # the second crossJoin of the stump disappears; (c) best1's pin
-    # goes LAZY — the b-broadcast build materializes it, the union
-    # branch reads the cache, no standalone construction job.
-    import os
-
-    _r13 = os.environ.get("JIBARO_SPARK_R13_ADA", "1") != "0"
-    # Both re-measured variants of feeding ex to round 2 lost or
-    # washed again in r13 ABAB (steal ≤0.3%): spread+pin 3.62 vs 3.39
-    # plain-pin; pin-only 3.94 vs 3.86 unpinned.  Default OFF — the
+    # r13 (VERDICT r12 #4): with the cells frames lazily pinned, the
+    # residual is attacked differently — (a) the round-2 (cells2 →
+    # wcells) two-step collapses to ONE aggregation straight off ex3
+    # (see wcells below); (b) best1's pin goes LAZY — the b-broadcast
+    # build materializes it, the union branch reads the cache, no
+    # standalone construction job.  Feeding ex to both rounds from a
+    # pinned copy lost or washed in r13 ABAB (steal ≤0.3%): spread+pin
+    # 3.62 vs 3.39 s plain-pin; pin-only 3.94 vs 3.86 s unpinned — the
     # projected scan is cheaper than materializing it.
-    if _r13 and os.environ.get("JIBARO_SPARK_R13_ADA_SPREAD", "0") != "0":
-        from jibaro_spark.operators.util import ensure_parallelism
 
-        ex = ensure_parallelism(ex, by="price").localCheckpoint(eager=False)
-    elif _r13 and os.environ.get("JIBARO_SPARK_R13_ADA_PIN", "0") != "0":
-        ex = ex.localCheckpoint(eager=False)
-
-    def feat_cells(df: DataFrame, extra: list[str]) -> DataFrame:
+    def feat_cells(df: DataFrame) -> DataFrame:
         # ONE scan for both feature axes (guide §1.2 "don't make two
         # passes when one suffices"): explode each example into its
         # (feat, v) projections and aggregate once — the r11 form
@@ -689,53 +674,49 @@ def q_adaboost_round(spark: SparkSession, sf_dir: str) -> DataFrame:
                     )
                 ).alias("fv"),
                 "pos",
-                *extra,
             )
-            .groupBy(F.col("fv.feat").alias("feat"), F.col("fv.v").alias("v"), *extra)
+            .groupBy(F.col("fv.feat").alias("feat"), F.col("fv.v").alias("v"))
             .agg(
                 F.count(F.lit(1)).alias("n"),
                 F.sum("pos").alias("npos"),
             )
         )
 
-    cells = feat_cells(ex, [])
-
     # The cumulative-error scan must NOT be Window.partitionBy("feat"):
     # with feat ∈ {price, day} that is a 2-task stage, and `price` is
     # cents-granular (~5×10^7 distinct values at 100×).  grouped_prefix_sum
     # computes the identical running sums chunk-parallel (both measures in
     # one pass), and the per-feature TOTALS collapse to a 2-row broadcast.
-    def cum_and_tot(cdf, ncol, pcol, nl, pl, nt, pt, route=None):
+    #
+    # LAZY checkpoint so the routing probe's group-size job materializes
+    # the cells aggregation ONCE and the routed windows read cached
+    # blocks (an unpinned probe re-ran the whole subtree and measured
+    # 7.3 s vs 5.9 s; with the pin the plain route wins).  When the
+    # value domain trips the hot-group bound (cents-granular at 100×),
+    # the chunked route pays one extra cells-table read — a bounded
+    # distinct-value table, not the raw input.
+    #
+    # r13: round 2 reuses round 1's decision, skipping its own probe
+    # job — round 2's wcells has EXACTLY round 1's (feat, v) key set
+    # (one row per distinct cell of the same examples), so its per-feat
+    # group sizes are identical and the decision provably transfers at
+    # any scale.
+    cells = feat_cells(ex).localCheckpoint(eager=False)
+    route_plain = size_route(
+        cells, ["feat"], max_abs=rel._CARRY_PLAIN_MAX_ABS,
+        share=rel._CARRY_PLAIN_SHARE,
+        n_parts=spark.sparkContext.defaultParallelism,
+    ).plain
+
+    def cum_and_tot(cdf, ncol, pcol, nl, pl, nt, pt):
         # running sums AND per-feature totals from ONE pass — the
         # totals come from the chunk totals the pipeline already owns,
         # so the cell collapse underneath is scanned exactly once
-        # LAZY checkpoint so the adaptive probe's group-size job
-        # materializes the cells aggregation ONCE and the routed
-        # windows read cached blocks (an unpinned probe re-ran the
-        # whole subtree and measured 7.3 s vs 5.9 s; with the pin the
-        # plain route wins).  When the value domain trips the
-        # hot-group bound (cents-granular at 100×), the chunked route
-        # pays one extra cells-table read — a bounded distinct-value
-        # table, not the raw input.
-        #
-        # r13: ``route`` reuses a prior probe's decision (route_plain),
-        # skipping this call's probe job — round 2's wcells has
-        # EXACTLY round 1's (feat, v) key set (one row per distinct
-        # cell of the same examples), so its per-feat group sizes are
-        # identical and the decision provably transfers at any scale.
-        from jibaro_spark.operators.relational import carry_routes_plain
-
-        cdf = cdf.localCheckpoint(eager=False)
-        if route is None:
-            route = carry_routes_plain(cdf, ["feat"])
-        return (
-            grouped_prefix_sum(
-                cdf, ["feat"], ["v"], [ncol, pcol], [nl, pl],
-                total_cols=[nt, pt],
-                route_plain=route,
-            ).select("feat", "v", nl, pl, nt, pt),
-            route,
-        )
+        return rel.grouped_prefix_sum(
+            cdf, ["feat"], ["v"], [ncol, pcol], [nl, pl],
+            total_cols=[nt, pt],
+            route_plain=route_plain,
+        ).select("feat", "v", nl, pl, nt, pt)
 
     def both_polarities(cdf, err_le_pos, err_le_neg, err_name):
         # ONE pass over the cumulative scan for both polarities (the
@@ -765,7 +746,7 @@ def q_adaboost_round(spark: SparkSession, sf_dir: str) -> DataFrame:
             *[c for c in cdf.columns if c not in ("feat", "v")],
         )
 
-    c1, _route1 = cum_and_tot(cells, "n", "npos", "nl", "pl", "nt", "pt")
+    c1 = cum_and_tot(cells, "n", "npos", "nl", "pl", "nt", "pt")
     e1 = both_polarities(
         c1,
         (F.col("nl") - F.col("pl")) + (F.col("pt") - F.col("pl")),
@@ -791,9 +772,7 @@ def q_adaboost_round(spark: SparkSession, sf_dir: str) -> DataFrame:
         # round-1 aggregation pipeline runs once.  r13: LAZY — the
         # b-broadcast build is the first consumer and materializes it;
         # eager spent a whole extra job on a 1-row frame.
-        .localCheckpoint(
-            eager=not (_r13 and os.environ.get("JIBARO_SPARK_R13_ADA_LAZYB1", "1") != "0")
-        )
+        .localCheckpoint(eager=False)
     )
     b = F.broadcast(
         best1.select(
@@ -815,43 +794,31 @@ def q_adaboost_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     w_right = F.round(F.exp(-F.col("alpha1")), 10).cast("decimal(28,10)")
     w_wrong = F.round(F.exp(F.col("alpha1")), 10).cast("decimal(28,10)")
     wexpr = F.when(F.col("correct") == 1, w_right).otherwise(w_wrong)
-    if _r13:
-        # ONE aggregation straight off ex3 (r13): fixed-scale decimal
-        # addition is exact, so summing w(correct) per row equals the
-        # grouped n·w(correct) / npos·w(correct) products bit-for-bit
-        # (same decimal(28,0)×decimal(28,10) product expression shape,
-        # so the result type is unchanged too).  Drops the
-        # (feat, v, correct) intermediate shuffle and the second
-        # crossJoin of the stump.
-        wcells = (
-            ex3.select(
-                F.explode(
-                    F.array(
-                        F.struct(
-                            F.lit("price").alias("feat"), F.col("price").alias("v")
-                        ),
-                        F.struct(F.lit("day").alias("feat"), F.col("day").alias("v")),
-                    )
-                ).alias("fv"),
-                (F.lit(1).cast("decimal(28,0)") * wexpr).alias("__w"),
-                (F.col("pos").cast("decimal(28,0)") * wexpr).alias("__wp"),
-            )
-            .groupBy(F.col("fv.feat").alias("feat"), F.col("fv.v").alias("v"))
-            .agg(F.sum("__w").alias("wn"), F.sum("__wp").alias("wpos"))
+    # ONE aggregation straight off ex3 (r13): fixed-scale decimal
+    # addition is exact, so summing w(correct) per row equals the
+    # grouped n·w(correct) / npos·w(correct) products bit-for-bit
+    # (same decimal(28,0)×decimal(28,10) product expression shape,
+    # so the result type is unchanged too).  Drops the
+    # (feat, v, correct) intermediate shuffle and the second
+    # crossJoin of the stump.
+    wcells = (
+        ex3.select(
+            F.explode(
+                F.array(
+                    F.struct(
+                        F.lit("price").alias("feat"), F.col("price").alias("v")
+                    ),
+                    F.struct(F.lit("day").alias("feat"), F.col("day").alias("v")),
+                )
+            ).alias("fv"),
+            (F.lit(1).cast("decimal(28,0)") * wexpr).alias("__w"),
+            (F.col("pos").cast("decimal(28,0)") * wexpr).alias("__wp"),
         )
-    else:
-        cells2 = feat_cells(ex3, ["correct"])
-        wcells = (
-            cells2.crossJoin(b.drop("feat1", "v1", "pol1"))
-            .groupBy("feat", "v")
-            .agg(
-                F.sum(F.col("n").cast("decimal(28,0)") * wexpr).alias("wn"),
-                F.sum(F.col("npos").cast("decimal(28,0)") * wexpr).alias("wpos"),
-            )
-        )
-    c2, _ = cum_and_tot(
-        wcells, "wn", "wpos", "wl", "pwl", "wnt", "pwt",
-        route=_route1 if _r13 else None,
+        .groupBy(F.col("fv.feat").alias("feat"), F.col("fv.v").alias("v"))
+        .agg(F.sum("__w").alias("wn"), F.sum("__wp").alias("wpos"))
+    )
+    c2 = cum_and_tot(
+        wcells.localCheckpoint(eager=False), "wn", "wpos", "wl", "pwl", "wnt", "pwt"
     )
     e2 = both_polarities(
         c2,

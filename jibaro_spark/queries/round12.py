@@ -36,8 +36,6 @@ Cross-engine conventions follow ``queries/registry.py``.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -275,14 +273,10 @@ def _co_edges(spark: SparkSession, sf_dir: str):
     # so its own materialization is one cheap shuffle over cached
     # blocks.  At 100 TB the edge list is the object every pass
     # iterates; storing it once beats re-running the order-fan-out
-    # join 3-6×.  JIBARO_SPARK_QPIN=0 disables (A/B measurement gate).
-    if os.environ.get("JIBARO_SPARK_QPIN", "1") != "0":
-        s0 = s0.localCheckpoint(eager=False)
-        dg = s0.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-        dg = dg.localCheckpoint(eager=False)
-    else:
-        dg = s0.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    return s0, dg
+    # join 3-6×.
+    s0 = s0.localCheckpoint(eager=False)
+    dg = s0.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+    return s0, dg.localCheckpoint(eager=False)
 
 
 QDA_ORACLE = f"""

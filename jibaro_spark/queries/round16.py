@@ -132,11 +132,7 @@ def q_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one filtered branch per group) — unpinned, each consumer
     # re-planned the events→first_ev/first_buy join subtree
     # (16 parquet scans / 46 Exchange nodes).
-    # JIBARO_SPARK_QPIN=0 disables (A/B measurement gate).
-    import os
-
-    if os.environ.get("JIBARO_SPARK_QPIN", "1") != "0":
-        at_risk = at_risk.localCheckpoint(eager=True)
+    at_risk = at_risk.localCheckpoint(eager=True)
     times = at_risk.select("dur").distinct()
     # densify: each group's at-risk count at EVERY event time is its
     # next-at-or-after cumulative (at-risk is right-continuous,
@@ -464,12 +460,7 @@ def q_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     # by |event_type|² and feeds states, tc2→p AND (through p) every
     # power-iteration step — unpinned, the events window subtree was
     # re-planned per consumer (16 parquet scans / 22 Window nodes).
-    # JIBARO_SPARK_QPIN=0 disables (A/B measurement gate).
-    import os
-
-    _qpin = os.environ.get("JIBARO_SPARK_QPIN", "1") != "0"
-    if _qpin:
-        tc = tc.localCheckpoint(eager=True)
+    tc = tc.localCheckpoint(eager=True)
     states = tc.select(F.col("prev").alias("s")).distinct()
     tc2 = tc.join(
         F.broadcast(states.withColumnRenamed("s", "nxt")), "nxt", "left_semi"
@@ -483,8 +474,7 @@ def q_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("p"),
     )
     # p is joined once per iteration (3 consumers) — same pin rationale
-    if _qpin:
-        p = p.localCheckpoint(eager=True)
+    p = p.localCheckpoint(eager=True)
     ns = states.agg(F.count(F.lit(1)).alias("ns"))
     pi = states.crossJoin(F.broadcast(ns)).select(
         "s",

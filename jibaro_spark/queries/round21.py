@@ -23,8 +23,6 @@ Cross-engine conventions follow ``queries/registry.py``.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -127,9 +125,8 @@ def q_ipf_raking(spark: SparkSession, sf_dir: str) -> DataFrame:
         # iteration — 632 Exchange nodes over a ≤(segments × nations)-
         # row table, and the 2.9 s wall was scheduling/planning, not
         # data.  Lazy: the next margin sum's job materializes the
-        # ≤125-row frame.  JIBARO_SPARK_QPIN=0 disables (A/B gate).
-        if os.environ.get("JIBARO_SPARK_QPIN", "1") != "0":
-            w = w.localCheckpoint(eager=False)
+        # ≤125-row frame.
+        w = w.localCheckpoint(eager=False)
     return w.select(
         "seg", "nat", "n", F.round("w", 6).alias("raked_w")
     ).orderBy("seg", "nat")
@@ -289,9 +286,8 @@ def q_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Pin each step's matvec (r12, guide §3.3): u feeds both the
         # norm and the renormalized v, so the unpinned loop doubled
         # the plan per step (154 Exchange nodes over 4-row frames).
-        # Lazy; 4 rows.  JIBARO_SPARK_QPIN=0 disables (A/B gate).
-        if os.environ.get("JIBARO_SPARK_QPIN", "1") != "0":
-            u = u.localCheckpoint(eager=False)
+        # Lazy; 4 rows.
+        u = u.localCheckpoint(eager=False)
         nrm_df = u.agg(
             F.sqrt(
                 F.sum(

@@ -1244,7 +1244,6 @@ def q_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         8,
         ["o_totalprice", "o_orderkey"],
         out_col="bin",
-        adaptive=True,
     )
     return (
         binned.groupBy(F.col("bin").cast("long").alias("bin"))

@@ -653,7 +653,7 @@ def q_calibration_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single-task sort floor through the native window; bigger inputs
     # keep the distributed range-partition form (never a
     # single-partition window over a corpus that doesn't fit one task)
-    d = ntile_exact(s, 10, ["score", "doc_id"], out_col="decile", adaptive=True)
+    d = ntile_exact(s, 10, ["score", "doc_id"], out_col="decile")
     return (
         d.groupBy(F.col("decile").cast("long").alias("decile"))
         .agg(
@@ -745,9 +745,9 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def quintile(col_expr, name: str):
         keyed = r.select("user_id", col_expr.alias("__k"))
-        return ntile_exact(
-            keyed, 5, ["__k", "user_id"], out_col=name, adaptive=True
-        ).select("user_id", name)
+        return ntile_exact(keyed, 5, ["__k", "user_id"], out_col=name).select(
+            "user_id", name
+        )
 
     q = (
         r.join(quintile(F.col("recency_days"), "r_q"), "user_id")

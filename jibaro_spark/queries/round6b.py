@@ -781,7 +781,8 @@ def q_attribution_credit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pass: first-touch (min (tts, tid)) — at the lower boundary
     # touches at exactly pts-7d are IN the window, so they scan before
     # the early probe (side desc).
-    from jibaro_spark.operators.relational import grouped_running_carry
+    from jibaro_spark.operators import relational as rel
+    from jibaro_spark.operators.util import size_route
 
     u = (
         u.withColumn(
@@ -796,7 +797,7 @@ def q_attribution_credit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # range exchange as a rev_last carry — one exchange + checkpoint
     # instead of two (the r10-close bench attributed the second pass
     # at ~1.5 s of the query's 3.3× move).
-    u = grouped_running_carry(
+    u = rel.grouped_running_carry(
         u,
         ["__u"],
         [
@@ -814,7 +815,11 @@ def q_attribution_credit(spark: SparkSession, sf_dir: str) -> DataFrame:
         # hot-key insurance; one group-size probe takes the cheaper
         # plain windows whenever no user owns more than half a fair
         # partition share (identical output either regime)
-        adaptive=True,
+        route_plain=size_route(
+            u, ["__u"], max_abs=rel._CARRY_PLAIN_MAX_ABS,
+            share=rel._CARRY_PLAIN_SHARE,
+            n_parts=spark.sparkContext.defaultParallelism,
+        ).plain,
     )
     # per-purchase-ROW keying (ADVICE r10): __pid alone merges probes
     # of purchases sharing an event_id (duplicate or NULL) and F.first

@@ -190,14 +190,12 @@ def q_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         ob.select("o_orderkey", "o_totalprice"),
         ["o_totalprice", "o_orderkey"],
         out_col="rp",
-        adaptive=True,
         with_count=True,
     )
     c, nc_ = global_row_number(
         cb.select("c_acctbal", "c_custkey"),
         ["c_acctbal", "c_custkey"],
         out_col="rc",
-        adaptive=True,
         with_count=True,
     )
     mapped = o.withColumn(

@@ -298,21 +298,17 @@ def q_naive_bayes_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     # token set counts already holds, so deriving it from the pinned
     # counts (instead of a second pass over train_tok) runs the
     # tokenization explode — the CPU-dense stage — ONCE instead of
-    # twice.  JIBARO_SPARK_QPIN=0 disables (A/B measurement gate).
-    import os
-
-    if os.environ.get("JIBARO_SPARK_QPIN", "1") != "0":
-        # r13 re-ABAB on a quiet box (VERDICT r12 #2): the driver's
-        # 2.15 s was ambient — baseline min today is 0.97 s.  Eager pin
-        # vs no pin min-of-8: 1.187 vs 1.148 (3%, inside either mode's
-        # within-series spread → neutral); a LAZY pin variant measured
-        # 5-10% worse (cache-on-first-broadcast overhead) and was
-        # rejected.  The pin stays: at 100 TB it halves the
-        # tokenize-explode passes for a bench-neutral cost.
-        counts = counts.localCheckpoint(eager=True)
-        vocab = counts.select("tok").distinct()
-    else:
-        vocab = train_tok.select("tok").distinct()
+    # twice.
+    #
+    # r13 re-ABAB on a quiet box (VERDICT r12 #2): the bench's 2.15 s
+    # was ambient — baseline min today is 0.97 s.  Eager pin vs no pin
+    # min-of-8: 1.187 vs 1.148 (3%, inside either mode's within-series
+    # spread → neutral); a LAZY pin variant measured 5-10% worse
+    # (cache-on-first-broadcast overhead) and was rejected.  The pin
+    # stays: at 100 TB it halves the tokenize-explode passes for a
+    # bench-neutral cost.
+    counts = counts.localCheckpoint(eager=True)
+    vocab = counts.select("tok").distinct()
     totals = counts.groupBy("lang").agg(F.sum("cnt").alias("total"))
     vsize = vocab.agg(F.count(F.lit(1)).alias("v"))
     priors = (

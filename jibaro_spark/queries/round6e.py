@@ -429,8 +429,7 @@ def q_lorenz_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both routes already know it — instead of a third pass
     spend = spend.localCheckpoint(eager=False)
     ranked, n_total = global_row_number(
-        spend, ["s", "o_custkey"], out_col="rn", adaptive=True,
-        with_count=True,
+        spend, ["s", "o_custkey"], out_col="rn", with_count=True
     )
     deciled = ranked.withColumn(
         "decile",

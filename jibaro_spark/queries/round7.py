@@ -700,13 +700,10 @@ def q_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     # to 1-2 partitions, so the ~1.5M OR-predicate evaluations and the
     # pooled partial aggs ran on 1-2 cores.  A value-keyed dense
     # exchange keeps that stage parallel (the r12 spread-at-the-
-    # CPU-dense-map pattern).  JIBARO_SPARK_KS_SPREAD=0 disables.
-    import os
+    # CPU-dense-map pattern).
+    from jibaro_spark.operators.util import dense_exchange
 
-    if os.environ.get("JIBARO_SPARK_KS_SPREAD", "1") != "0":
-        from jibaro_spark.operators.util import dense_exchange as _dx
-
-        d = _dx(d, "v")
+    d = dense_exchange(d, "v")
     prs = d.select("pr").distinct()
     pairs = (
         prs.alias("a")

@@ -1,17 +1,19 @@
 #!/usr/bin/env python
-"""Round-13 optimization tooling (r12_tools with plans/r13 output): time and/or capture formatted plans
-for a subset of declared queries.
+"""Time and/or capture formatted plans for a subset of declared queries.
 
 Usage:
-    python scripts/r12_tools.py time  q_a q_b ...   [--runs N]
-    python scripts/r12_tools.py plan  q_a q_b ...   [--tag before|after]
-    python scripts/r12_tools.py both  q_a q_b ...
+    python scripts/plan_tools.py time  q_a q_b ...   [--runs N]
+    python scripts/plan_tools.py plan  q_a q_b ...   [--tag before|after] [--plan-dir DIR]
+    python scripts/plan_tools.py both  q_a q_b ...   [--sf-dir DIR]
 
 Timing methodology matches bench.py exactly: noop sink, N runs
-(default 2), report min.  Plans go to plans/r13/<name>_<tag>.txt.
+(default 2), report min.  Plans go to <plan-dir>/<name>_<tag>.txt
+(default plan dir: ./plans, git-ignored).  The fixture directory is
+--sf-dir, or $SPARK_GRAFT_SF_DIR when the flag is left out.
 """
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -22,25 +24,21 @@ sys.path.insert(0, REPO)
 
 
 def main() -> None:
-    mode = sys.argv[1]
-    args = sys.argv[2:]
-    runs = 2
-    tag = "before"
-    names = []
-    i = 0
-    while i < len(args):
-        if args[i] == "--runs":
-            runs = int(args[i + 1]); i += 2
-        elif args[i] == "--tag":
-            tag = args[i + 1]; i += 2
-        else:
-            names.append(args[i]); i += 1
-
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("mode", choices=("time", "plan", "both"))
+    ap.add_argument("names", nargs="+")
+    ap.add_argument("--runs", type=int, default=2)
+    ap.add_argument("--tag", default="before")
+    ap.add_argument("--plan-dir", default="plans")
+    ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR"))
+    args = ap.parse_args()
+    if not args.sf_dir:
+        ap.error("no fixture: pass --sf-dir or set SPARK_GRAFT_SF_DIR")
+    sf_dir = args.sf_dir
 
     from jibaro_spark.session import build_session
 
-    spark = build_session(app_name="r12_tools")
+    spark = build_session(app_name="plan_tools")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     from jibaro_spark.queries import REGISTRY
 
@@ -51,25 +49,23 @@ def main() -> None:
         except Exception:
             pass
 
-    plan_dir = os.path.join(REPO, "plans", "r13")
-    os.makedirs(plan_dir, exist_ok=True)
-
     timings: dict[str, float] = {}
-    for name in names:
+    for name in args.names:
         dq = REGISTRY[name]
-        if mode in ("plan", "both"):
+        if args.mode in ("plan", "both"):
+            os.makedirs(args.plan_dir, exist_ok=True)
             df = dq.fn(spark, sf_dir)
             txt = df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore
                 df._jdf.queryExecution(), "formatted"
             )
-            out = os.path.join(plan_dir, f"{name}_{tag}.txt")
+            out = os.path.join(args.plan_dir, f"{name}_{args.tag}.txt")
             with open(out, "w") as f:
                 f.write(txt)
             print(f"plan -> {out}", flush=True)
-        if mode in ("time", "both"):
+        if args.mode in ("time", "both"):
             spark.sparkContext.setJobDescription(name)
             rs = []
-            for _ in range(runs):
+            for _ in range(args.runs):
                 t0 = time.perf_counter()
                 dq.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
                 rs.append(time.perf_counter() - t0)

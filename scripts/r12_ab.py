@@ -8,10 +8,8 @@ each query in ABAB... alternation INSIDE one session — both modes see
 the same ambient load — and reports per-mode minima plus the steal%
 observed during the run.
 
-Mode switching is via an env toggle read per-call by the code under
-test (e.g. JIBARO_SPARK_SPREAD_SCANS), or a runtime SQL conf.  Usage:
+Modes are two values of a runtime SQL conf.  Usage:
 
-    python scripts/r12_ab.py ENV_VAR q_a q_b ... [--rounds N]
     python scripts/r12_ab.py --conf KEY ON_VAL OFF_VAL q_a ... [--rounds N]
 """
 from __future__ import annotations
@@ -33,13 +31,10 @@ def _cpu_snap():
 
 
 def main() -> None:
-    conf_key = env_var = None
-    if sys.argv[1] == "--conf":
-        conf_key, on_val, off_val = sys.argv[2:5]
-        args = sys.argv[5:]
-    else:
-        env_var = sys.argv[1]
-        args = sys.argv[2:]
+    if sys.argv[1:2] != ["--conf"]:
+        sys.exit(__doc__)
+    conf_key, on_val, off_val = sys.argv[2:5]
+    args = sys.argv[5:]
     rounds = 2
     names = []
     i = 0
@@ -68,15 +63,9 @@ def main() -> None:
         dq = REGISTRY[name]
         a_runs, b_runs = [], []
         for _ in range(rounds):
-            for mode, runs in (("1", a_runs), ("0", b_runs)):
-                if conf_key is not None:
-                    val = on_val if mode == "1" else off_val
-                    spark.conf.set(conf_key, val)
-                    label = f"{name}[{conf_key}={val}]"
-                else:
-                    os.environ[env_var] = mode
-                    label = f"{name}[{env_var}={mode}]"
-                spark.sparkContext.setJobDescription(label)
+            for val, runs in ((on_val, a_runs), (off_val, b_runs)):
+                spark.conf.set(conf_key, val)
+                spark.sparkContext.setJobDescription(f"{name}[{conf_key}={val}]")
                 t0 = time.perf_counter()
                 dq.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
                 runs.append(time.perf_counter() - t0)

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 
@@ -37,3 +38,39 @@ def duck():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_ORACLE
+
+
+@pytest.fixture
+def chunked_route(monkeypatch):
+    """``with chunked_route():`` forces every carry / row-number
+    ``size_route`` probe in the block onto the chunked route: no
+    non-empty group fits under a negative floor or a zero partition
+    share.  ``chunked_route(False)`` leaves the bounds alone."""
+    from jibaro_spark.operators import relational as rel
+
+    @contextlib.contextmanager
+    def forced(on: bool = True):
+        with monkeypatch.context() as m:
+            if on:
+                m.setattr(rel, "_CARRY_PLAIN_MAX_ABS", -1)
+                m.setattr(rel, "_CARRY_PLAIN_SHARE", 0)
+            yield
+
+    return forced
+
+
+@pytest.fixture(scope="session")
+def hot_sides(spark):
+    """Edit-distance-join block sides: 400 rows/side, 200 of them in
+    one hot block, the rest over 50 blocks."""
+    lrows = [
+        (i, f"s{i % 7}", "hot" if i < 200 else f"b{i % 50}")
+        for i in range(400)
+    ]
+    rrows = [
+        (10_000 + i, f"s{(i + 1) % 7}", "hot" if i < 200 else f"b{i % 50}")
+        for i in range(400)
+    ]
+    l = spark.createDataFrame(lrows, "lid long, __ls string, __blk string")
+    r = spark.createDataFrame(rrows, "rid long, __rs string, __blk string")
+    return l, r

@@ -1,11 +1,13 @@
-"""Round-12 guards for the ADAPTIVE plain-window routing of
+"""Round-12 guards for the cost-based plain-window routing of
 ``grouped_running_carry``.
 
 The chunked carry (range partition + per-chunk carries + stitch join)
 is hot-key insurance; round 12 adds a construction-time group-size
-probe (``_carry_routes_plain``) that routes balanced inputs through
-plain ``Window.partitionBy(group)`` windows instead — measured ~2×
-cheaper at sf0.1 where no group is hot.  Pinned here:
+probe (now ``size_route`` over ``_CARRY_PLAIN_MAX_ABS`` /
+``_CARRY_PLAIN_SHARE``, its decision passed as ``route_plain=``) that
+routes balanced inputs through plain ``Window.partitionBy(group)``
+windows instead — measured ~2× cheaper at sf0.1 where no group is
+hot.  Pinned here:
 
 * the routing decision: balanced input → plain, one dominant group
   (with the absolute floor lowered so a test-sized corpus can trip
@@ -22,6 +24,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import jibaro_spark.operators.relational as rel
+from jibaro_spark.operators.util import size_route
 
 
 @pytest.fixture(scope="module")
@@ -40,7 +43,7 @@ def balanced(spark):
     return spark.createDataFrame(rows, "k string, t int, v int, s int")
 
 
-def _run(df, adaptive):
+def _run(df, route_plain):
     out = rel.grouped_running_carry(
         df,
         ["k"],
@@ -51,7 +54,7 @@ def _run(df, adaptive):
         sum_out=["ss"],
         rev_last_cols=["v"],
         rev_last_out=["rv"],
-        adaptive=adaptive,
+        route_plain=route_plain,
     )
     return sorted(
         (
@@ -62,9 +65,16 @@ def _run(df, adaptive):
     )
 
 
-def test_routing_decision(spark, balanced):
+def _carry_route(df):
+    return size_route(
+        df, ["k"], max_abs=rel._CARRY_PLAIN_MAX_ABS,
+        share=rel._CARRY_PLAIN_SHARE, n_parts=4,
+    )
+
+
+def test_routing_decision(spark, balanced, monkeypatch):
     # balanced: biggest group 40 rows, far under the floor → plain
-    assert rel._carry_routes_plain(balanced, [F.col("k")], 4)
+    assert _carry_route(balanced).plain
     hot = balanced.unionByName(
         spark.range(2000).select(
             F.lit("hot").alias("k"),
@@ -75,18 +85,14 @@ def test_routing_decision(spark, balanced):
     )
     # hot group = 2000 of 2320 rows: over half a 4-partition fair
     # share; drop the absolute floor so test-sized data can trip it
-    old = rel._CARRY_PLAIN_MAX_ABS
-    try:
-        rel._CARRY_PLAIN_MAX_ABS = 100
-        assert not rel._carry_routes_plain(hot, [F.col("k")], 4)
-    finally:
-        rel._CARRY_PLAIN_MAX_ABS = old
+    monkeypatch.setattr(rel, "_CARRY_PLAIN_MAX_ABS", 100)
+    assert not _carry_route(hot).plain
 
 
 def test_plain_equals_chunked(spark, balanced):
     """THE r12 invariant: same input, both regimes, identical rows —
-    forced via adaptive=True (routes plain: max group 40) vs
-    adaptive=False (always chunked)."""
+    route_plain=True (what the probe picks: max group 40) vs
+    route_plain=False (chunked)."""
     assert _run(balanced, True) == _run(balanced, False)
 
 
@@ -94,24 +100,24 @@ def test_schema_identical_across_regimes(spark, balanced):
     a = rel.grouped_running_carry(
         balanced, ["k"], [F.col("t").asc()], last_cols=["v"],
         last_out=["lv"], sum_cols=["s"], sum_out=["ss"],
-        rev_last_cols=["v"], rev_last_out=["rv"], adaptive=True,
+        rev_last_cols=["v"], rev_last_out=["rv"], route_plain=True,
     )
     b = rel.grouped_running_carry(
         balanced, ["k"], [F.col("t").asc()], last_cols=["v"],
         last_out=["lv"], sum_cols=["s"], sum_out=["ss"],
-        rev_last_cols=["v"], rev_last_out=["rv"], adaptive=False,
+        rev_last_cols=["v"], rev_last_out=["rv"], route_plain=False,
     )
     assert a.schema == b.schema
 
 
 def test_prefix_sum_plain_equals_chunked(spark, balanced):
-    """Same invariant for grouped_prefix_sum's adaptive route,
+    """Same invariant for grouped_prefix_sum's plain route,
     including the total_cols lane and the running-sum NULL contract."""
 
-    def run(adaptive):
+    def run(route_plain):
         out = rel.grouped_prefix_sum(
             balanced, ["k"], ["t"], ["s", "v"], ["cs", "cv"],
-            total_cols=["ts", "tv"], adaptive=adaptive,
+            total_cols=["ts", "tv"], route_plain=route_plain,
         )
         return sorted(
             (

@@ -160,20 +160,18 @@ def test_local_clustering_matches_oriented_triangle_count(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 0}
 
 
-def test_co_edges_pin_regimes_identical(spark, monkeypatch):
-    """JIBARO_SPARK_QPIN=0 (unpinned edge/degree frames) and the
-    default pinned regime must be bit-identical for every _co_edges
-    consumer."""
+def test_co_edges_pinned_consumers_match_oracle(spark, duck, sf_dir):
+    """Every _co_edges consumer reads the lazily pinned edge/degree
+    frames; each must still match its DuckDB oracle."""
+    from jibaro_spark.testing import compare_with_oracle
+
     for qname in (
         "q_degree_assortativity",
         "q_modularity",
         "q_local_clustering",
     ):
-        monkeypatch.setenv("JIBARO_SPARK_QPIN", "0")
-        off = sorted(map(str, REGISTRY[qname].fn(spark, SF).collect()))
-        monkeypatch.delenv("JIBARO_SPARK_QPIN")
-        on = sorted(map(str, REGISTRY[qname].fn(spark, SF).collect()))
-        assert on == off, qname
+        dq = REGISTRY[qname]
+        compare_with_oracle(dq.fn(spark, sf_dir), duck, dq.oracle)
 
 
 @pytest.mark.parametrize(

@@ -2,17 +2,17 @@
 
 Round 13 gives ``asof_join`` ONE group-size probe over the pinned
 union frame whose decision routes EVERY carry (``nearest`` runs two);
-per-carry ``adaptive=True`` probes were a measured net loss there
-(VERDICT r12 #6).  Pinned here:
+per-carry probes were a measured net loss there (VERDICT r12 #6).
+Pinned here:
 
-* bit-identical asof results across the two regimes
-  (``JIBARO_SPARK_ASOF_ADAPTIVE`` on = shared probe + plain-window
-  routing on balanced keys; off = the r12 always-chunked carries) for
-  all three directions, including NULL-time rows on both sides and
-  ``how='left'`` unmatched rows;
+* bit-identical asof results across the two regimes (default bounds =
+  plain-window routing on balanced keys; floor -1 / share 0 = the
+  chunked carries) for all three directions, including NULL-time rows
+  on both sides and ``how='left'`` unmatched rows;
 * ``route_plain`` pass-through on ``grouped_running_carry`` /
   ``grouped_prefix_sum``: an explicit decision skips the probe and
-  still produces the chunked/plain-identical values.
+  still produces the chunked/plain-identical values;
+* the shared ``size_route`` decision over the carry bounds.
 """
 
 from __future__ import annotations
@@ -21,6 +21,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import jibaro_spark.operators.relational as rel
+from jibaro_spark.operators.util import size_route
 
 
 @pytest.fixture(scope="module")
@@ -44,33 +45,31 @@ def sides(spark):
     return left, right
 
 
-def _run(monkeypatch, left, right, direction, how, adaptive):
-    monkeypatch.setenv(
-        "JIBARO_SPARK_ASOF_ADAPTIVE", "1" if adaptive else "0"
-    )
-    out = rel.asof_join(
-        left,
-        right,
-        left_on="k",
-        right_on="rk",
-        left_time="lt",
-        right_time="rt",
-        right_tiebreak="rid",
-        how=how,
-        direction=direction,
-    )
-    return sorted(
-        ((r["k"], r["lt"], r["lid"], r["rt"], r["rid"]) for r in out.collect()),
-        key=lambda t: tuple((x is None, x) for x in t),
-    )
+def _run(chunked_route, left, right, direction, how, plain):
+    with chunked_route(not plain):
+        out = rel.asof_join(
+            left,
+            right,
+            left_on="k",
+            right_on="rk",
+            left_time="lt",
+            right_time="rt",
+            right_tiebreak="rid",
+            how=how,
+            direction=direction,
+        )
+        return sorted(
+            ((r["k"], r["lt"], r["lid"], r["rt"], r["rid"]) for r in out.collect()),
+            key=lambda t: tuple((x is None, x) for x in t),
+        )
 
 
 @pytest.mark.parametrize("direction", ["backward", "forward", "nearest"])
 @pytest.mark.parametrize("how", ["inner", "left"])
-def test_asof_regimes_bit_identical(monkeypatch, sides, direction, how):
+def test_asof_regimes_bit_identical(chunked_route, sides, direction, how):
     left, right = sides
-    on = _run(monkeypatch, left, right, direction, how, adaptive=True)
-    off = _run(monkeypatch, left, right, direction, how, adaptive=False)
+    on = _run(chunked_route, left, right, direction, how, plain=True)
+    off = _run(chunked_route, left, right, direction, how, plain=False)
     assert on == off
     assert on  # non-vacuous
 
@@ -105,20 +104,24 @@ def test_route_plain_passthrough_matches_probe(spark):
         )
 
 
+def _carry_route(df, max_abs=None):
+    return size_route(
+        df, ["k"],
+        max_abs=rel._CARRY_PLAIN_MAX_ABS if max_abs is None else max_abs,
+        share=rel._CARRY_PLAIN_SHARE,
+        n_parts=df.sparkSession.sparkContext.defaultParallelism,
+    )
+
+
 def test_shared_probe_decision_is_exposed(spark):
     balanced = spark.createDataFrame(
         [(f"g{i % 16}", i) for i in range(160)], "k string, t int"
     )
-    assert rel.carry_routes_plain(balanced, ["k"]) is True
+    assert _carry_route(balanced).plain is True
     # one dominant group past BOTH bounds (floor lowered like the r12
     # routing test does) → chunked
     hot = spark.createDataFrame(
         [("hot", i) for i in range(300)] + [(f"g{i}", i) for i in range(8)],
         "k string, t int",
     )
-    orig = rel._CARRY_PLAIN_MAX_ABS
-    rel._CARRY_PLAIN_MAX_ABS = 100
-    try:
-        assert rel.carry_routes_plain(hot, ["k"]) is False
-    finally:
-        rel._CARRY_PLAIN_MAX_ABS = orig
+    assert _carry_route(hot, max_abs=100).plain is False

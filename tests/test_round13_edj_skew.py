@@ -10,8 +10,8 @@ both sides:
 * the probe decision: balanced blocks → dense route; the 50%-hot key
   (with the absolute floor lowered to test scale) → grid route;
 * pair-set identity: grid-salted join ≡ plain block equi-join ≡ the
-  r12 unprobed route (``JIBARO_SPARK_EDJ_SKEW=0``), end-to-end through
-  ``edit_distance_join``;
+  dense route (forced by raising the floor past every block),
+  end-to-end through ``edit_distance_join``;
 * spread: under the grid the hot block's pair fan-out lands on many
   partitions (max per-partition rows ≪ the hot block's full product —
   the unsalted exchange puts ALL of it in one partition).
@@ -19,26 +19,9 @@ both sides:
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 import jibaro_spark.operators.dedup as dd
-
-
-@pytest.fixture(scope="module")
-def hot_sides(spark):
-    # 400 rows/side, 200 of them in one hot block, rest over 50 blocks
-    lrows = [
-        (i, f"s{i % 7}", "hot" if i < 200 else f"b{i % 50}")
-        for i in range(400)
-    ]
-    rrows = [
-        (10_000 + i, f"s{(i + 1) % 7}", "hot" if i < 200 else f"b{i % 50}")
-        for i in range(400)
-    ]
-    l = spark.createDataFrame(lrows, "lid long, __ls string, __blk string")
-    r = spark.createDataFrame(rrows, "rid long, __rs string, __blk string")
-    return l, r
 
 
 def _pairs(df):
@@ -48,7 +31,6 @@ def _pairs(df):
 def test_grid_triggers_and_matches_plain(monkeypatch, hot_sides):
     l, r = hot_sides
     monkeypatch.setattr(dd, "_EDJ_BLOCK_MAX_ABS", 100)
-    monkeypatch.delenv("JIBARO_SPARK_EDJ_SKEW", raising=False)
     out = dd._block_join_skew_safe(l, r, "lid", "rid")
     # the salt columns must not leak
     assert set(out.columns) == {"lid", "__ls", "__blk", "rid", "__rs"}
@@ -108,9 +90,9 @@ def test_end_to_end_regimes_identical(monkeypatch, spark):
     df = spark.createDataFrame(rows, "id long, s string, blk string")
     left = df.select(F.col("id").alias("a_id"), F.col("s").alias("a_s"), F.col("blk").alias("a_b"))
     right = df.select(F.col("id").alias("b_id"), F.col("s").alias("b_s"), F.col("blk").alias("b_b"))
-    monkeypatch.setattr(dd, "_EDJ_BLOCK_MAX_ABS", 50)
 
-    def run():
+    def run(floor):
+        monkeypatch.setattr(dd, "_EDJ_BLOCK_MAX_ABS", floor)
         out = dd.edit_distance_join(
             left, right, "a_id", "b_id", "a_s", "b_s",
             max_dist=1, block_on=("a_b", "b_b"),
@@ -119,9 +101,7 @@ def test_end_to_end_regimes_identical(monkeypatch, spark):
             (r["a_id"], r["b_id"], r["dist"], r["block"]) for r in out.collect()
         )
 
-    monkeypatch.setenv("JIBARO_SPARK_EDJ_SKEW", "1")
-    on = run()
-    monkeypatch.setenv("JIBARO_SPARK_EDJ_SKEW", "0")
-    off = run()
-    assert on == off
-    assert on  # non-vacuous
+    grid = run(50)  # the 150-row hot block trips the grid
+    dense = run(10**9)  # no block reaches the floor: dense route
+    assert grid == dense
+    assert grid  # non-vacuous

@@ -3,8 +3,9 @@
 ``train_pq_codebook`` now trains all ``m`` subspaces in one job per
 phase (seeds from ONE strided collect of full vectors sliced in the
 driver; one assignment+means aggregation per Lloyd iteration) instead
-of 3 jobs per subspace.  Pinned here against the preserved per-subspace
-loop (``JIBARO_SPARK_PQ_FOLD=0``):
+of 3 jobs per subspace.  Pinned here against the per-subspace loop it
+replaced (``_train_loop`` below — ``seed_centroids`` + ``kmeans_refine``
+per sub-vector slice):
 
 * seed selection is FLOAT-IDENTICAL (same strided id set for every
   subspace; slicing the collected full vector ≡ the JVM F.slice the
@@ -18,6 +19,7 @@ loop (``JIBARO_SPARK_PQ_FOLD=0``):
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -41,19 +43,33 @@ def vectors(spark):
     return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
 
-def _train(monkeypatch, df, fold: bool):
-    monkeypatch.setenv("JIBARO_SPARK_PQ_FOLD", "1" if fold else "0")
+def _train_loop(df, m: int, sub_dim: int, k: int, iterations: int) -> dict:
+    """The pre-fold trainer: one seed + Lloyd pass per subspace."""
+    out = {}
+    for s in range(m):
+        sub = df.select(
+            F.col("vec_id"),
+            F.slice(F.col("embedding"), s * sub_dim + 1, sub_dim).alias("__sv"),
+        )
+        seeds = sim.seed_centroids(sub, "vec_id", "__sv", n_centroids=k)
+        cents = sim.kmeans_refine(sub, "__sv", seeds, iterations=iterations)
+        for cid, c in enumerate(cents):
+            # float32 round trip, as the codebook's array<float> column
+            out[(s, cid)] = [float(np.float32(x)) for x in c]
+    return out
+
+
+def _train_fold(df, m: int, sub_dim: int, k: int, iterations: int) -> dict:
     cb = sim.train_pq_codebook(
-        df, "vec_id", "embedding", m=4, sub_dim=4, k=8, iterations=1
+        df, "vec_id", "embedding", m=m, sub_dim=sub_dim, k=k,
+        iterations=iterations,
     )
-    return {
-        (r["sub"], r["cid"]): list(r["cvec"]) for r in cb.collect()
-    }
+    return {(r["sub"], r["cid"]): list(r["cvec"]) for r in cb.collect()}
 
 
-def test_fold_matches_loop(monkeypatch, vectors):
-    folded = _train(monkeypatch, vectors, fold=True)
-    loop = _train(monkeypatch, vectors, fold=False)
+def test_fold_matches_loop(vectors):
+    folded = _train_fold(vectors, m=4, sub_dim=4, k=8, iterations=1)
+    loop = _train_loop(vectors, m=4, sub_dim=4, k=8, iterations=1)
     assert set(folded) == set(loop)
     assert set(folded) == {(s, c) for s in range(4) for c in range(8)}
     for key in folded:
@@ -63,37 +79,19 @@ def test_fold_matches_loop(monkeypatch, vectors):
             assert x == pytest.approx(y, rel=1e-6, abs=1e-6)
 
 
-def test_fold_seeds_identical_no_refine(monkeypatch, vectors):
+def test_fold_seeds_identical_no_refine(vectors):
     # iterations=0 isolates the seed phase: it must be bit-identical,
     # not just close
-    monkeypatch.setenv("JIBARO_SPARK_PQ_FOLD", "1")
-    folded = sim.train_pq_codebook(
-        vectors, "vec_id", "embedding", m=4, sub_dim=4, k=8, iterations=0
-    )
-    monkeypatch.setenv("JIBARO_SPARK_PQ_FOLD", "0")
-    loop = sim.train_pq_codebook(
-        vectors, "vec_id", "embedding", m=4, sub_dim=4, k=8, iterations=0
-    )
-    f = {(r["sub"], r["cid"]): list(r["cvec"]) for r in folded.collect()}
-    l = {(r["sub"], r["cid"]): list(r["cvec"]) for r in loop.collect()}
-    assert f == l
+    f = _train_fold(vectors, m=4, sub_dim=4, k=8, iterations=0)
+    assert f == _train_loop(vectors, m=4, sub_dim=4, k=8, iterations=0)
 
 
-def test_fold_nonnumeric_id_fallback(monkeypatch, spark):
+def test_fold_nonnumeric_id_fallback(spark):
     # non-numeric ids skip the strided filter entirely: the hash-order
     # fallback must engage in the folded path exactly like the loop's
     rows = [
         (f"doc-{i:03d}", [float(i + d) for d in range(8)]) for i in range(20)
     ]
     df = spark.createDataFrame(rows, "vec_id string, embedding array<float>")
-    f = _train_small(monkeypatch, df, True)
-    l = _train_small(monkeypatch, df, False)
-    assert f == l
-
-
-def _train_small(monkeypatch, df, fold: bool):
-    monkeypatch.setenv("JIBARO_SPARK_PQ_FOLD", "1" if fold else "0")
-    cb = sim.train_pq_codebook(
-        df, "vec_id", "embedding", m=2, sub_dim=4, k=16, iterations=0
-    )
-    return {(r["sub"], r["cid"]): list(r["cvec"]) for r in cb.collect()}
+    f = _train_fold(df, m=2, sub_dim=4, k=16, iterations=0)
+    assert f == _train_loop(df, m=2, sub_dim=4, k=16, iterations=0)

@@ -94,12 +94,11 @@ def test_clustering_indices_consistent(spark):
     assert max(r["worst_ratio"] for r in db_rows) > 1.0
 
 
-def test_round21_pin_regimes_identical(spark, monkeypatch):
-    """The r12 per-iteration lazy pins (JIBARO_SPARK_QPIN gate) must
-    not change a single value in either iterative query."""
+def test_round21_pinned_iterations_match_oracle(spark, duck, sf_dir):
+    """The r12 per-iteration lazy pins must leave both iterative
+    queries matching their DuckDB oracles."""
+    from jibaro_spark.testing import compare_with_oracle
+
     for qname in ("q_ipf_raking", "q_pca_power_iteration"):
-        monkeypatch.setenv("JIBARO_SPARK_QPIN", "0")
-        off = sorted(map(str, REGISTRY[qname].fn(spark, SF).collect()))
-        monkeypatch.delenv("JIBARO_SPARK_QPIN")
-        on = sorted(map(str, REGISTRY[qname].fn(spark, SF).collect()))
-        assert on == off, qname
+        dq = REGISTRY[qname]
+        compare_with_oracle(dq.fn(spark, sf_dir), duck, dq.oracle)

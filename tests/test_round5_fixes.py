@@ -188,7 +188,7 @@ def test_profile_table_counts_nulls_and_distincts(spark):
     assert [r.col_name for r in only] == ["s"]
 
 
-def test_global_row_number_matches_window_row_number(spark):
+def test_global_row_number_matches_window_row_number(spark, chunked_route):
     from pyspark.sql import functions as F
 
     from jibaro_spark.operators.relational import global_row_number
@@ -196,10 +196,9 @@ def test_global_row_number_matches_window_row_number(spark):
     df = spark.range(1000).select(
         (F.col("id") * 37 % 501).alias("k"), F.col("id").alias("tie")
     )
-    got = {
-        (r.k, r.tie): r["__rn"]
-        for r in global_row_number(df, ["k", "tie"], num_partitions=7).collect()
-    }
+    with chunked_route():
+        ranked = global_row_number(df, ["k", "tie"], num_partitions=7)
+    got = {(r.k, r.tie): r["__rn"] for r in ranked.collect()}
     rows = sorted(((r.k, r.tie) for r in df.collect()))
     expected = {kt: i + 1 for i, kt in enumerate(rows)}
     assert got == expected
@@ -208,10 +207,10 @@ def test_global_row_number_matches_window_row_number(spark):
 @pytest.mark.parametrize(
     "n,k", [(1000, 8), (17, 5), (5, 8), (999, 10), (1, 3), (8, 8), (9, 8)]
 )
-def test_ntile_exact_matches_native_ntile(spark, n, k):
-    """Bucket-for-bucket parity with Spark's (single-partition) native
-    ntile window, including the n % k remainder distribution and the
-    n < k degenerate case."""
+def test_ntile_exact_matches_native_ntile(spark, chunked_route, n, k):
+    """Bucket-for-bucket parity of the chunked route with Spark's
+    (single-partition) native ntile window, including the n % k
+    remainder distribution and the n < k degenerate case."""
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
@@ -226,21 +225,21 @@ def test_ntile_exact_matches_native_ntile(spark, n, k):
             "v", "tie", F.ntile(k).over(Window.orderBy("v", "tie")).alias("b")
         ).collect()
     }
-    got = {
-        (r.v, r.tie): r["__ntile"]
-        for r in ntile_exact(df, k, ["v", "tie"], num_partitions=6).collect()
-    }
+    with chunked_route():
+        binned = ntile_exact(df, k, ["v", "tie"], num_partitions=6)
+    got = {(r.v, r.tie): r["__ntile"] for r in binned.collect()}
     assert got == native
 
 
-def test_global_row_number_and_ntile_empty_and_guards(spark):
+def test_global_row_number_and_ntile_empty_and_guards(spark, chunked_route):
     from pyspark.sql import functions as F
 
     from jibaro_spark.operators.relational import global_row_number, ntile_exact
 
     empty = spark.range(0).select(F.col("id").alias("k"))
-    assert global_row_number(empty, ["k"]).count() == 0
-    assert ntile_exact(empty, 4, ["k"]).count() == 0
+    with chunked_route():
+        assert global_row_number(empty, ["k"]).count() == 0
+        assert ntile_exact(empty, 4, ["k"]).count() == 0
     with pytest.raises(ValueError, match="k must be >= 1"):
         ntile_exact(empty, 0, ["k"])
 

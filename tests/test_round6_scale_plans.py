@@ -104,12 +104,11 @@ def test_lorenz_rank_is_range_partitioned(spark, monkeypatch):
     single-task sort floor it must take the global_row_number shape
     (range repartition + partition-id windows); at test scale the
     probe routes the plain row_number window.  Both regimes pinned —
-    the floor is dropped to force the chunked route, and the env gate
-    must force it too."""
+    the floor is dropped to force the chunked route."""
     import jibaro_spark.operators.relational as rel
     from jibaro_spark.queries.round6e import q_lorenz_deciles
 
-    # test-scale default: the adaptive probe routes the plain window
+    # test-scale default: the size probe routes the plain window
     plan = _executed_plan(q_lorenz_deciles(spark, SF))
     assert "row_number" in plan, plan
     assert "__gpid" not in plan, plan
@@ -120,11 +119,6 @@ def test_lorenz_rank_is_range_partitioned(spark, monkeypatch):
     plan = _executed_plan(q_lorenz_deciles(spark, SF))
     assert "__gpid" in plan, plan
     assert "row_number" in plan, plan
-    monkeypatch.undo()
-    # the A/B measurement gate forces the chunked route as well
-    monkeypatch.setenv("JIBARO_SPARK_NTILE_ADAPTIVE", "0")
-    plan = _executed_plan(q_lorenz_deciles(spark, SF))
-    assert "__gpid" in plan, plan
 
 
 def test_kmv_overlap_rank_is_salt_pruned(spark):

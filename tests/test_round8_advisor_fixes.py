@@ -123,8 +123,8 @@ def test_dtw_pairs_key_domain_guard(spark):
 
 
 def test_adaboost_threshold_scan_is_chunk_parallel(spark):
-    """r12 update: the cumulative scan is COST-ROUTED (grouped_prefix_
-    sum adaptive) — at this tiny SF the probe takes the plain
+    """r12 update: the cumulative scan is COST-ROUTED (a size_route
+    probe picks grouped_prefix_sum's route) — at this tiny SF it takes the plain
     per-feature windows (allowed: the value domain is far under the
     hot-group bound), but with the bound forced down the chunked form
     must come back, pinning the 100 TB shape this test was written
@@ -149,7 +149,7 @@ def test_adaboost_threshold_scan_is_chunk_parallel(spark):
         assert "BroadcastHashJoin" in plan
     finally:
         rel._CARRY_PLAIN_MAX_ABS = old
-    # and the adaptive route takes the plain windows at this SF (the
+    # and the default bounds take the plain windows at this SF (the
     # r12 cost decision — identical output pinned in
     # test_round12_carry_adaptive.py)
     df2 = REGISTRY["q_adaboost_round"].fn(spark, SF)

@@ -280,6 +280,32 @@ def test_cells_semdedup_groups_on_cell_and_blocks(spark):
     assert plan.count("Exchange") <= 2, plan  # group shuffle (+AQE reuse)
 
 
+@pytest.mark.parametrize(
+    "qname, max_exchanges",
+    [
+        # the two rank calls hand back their row counts (with_count=
+        # True) instead of two more aggregates over the same scans:
+        # 7 Exchanges before on this fixture
+        ("q_quantile_normalize", 3),
+        # the spend table is pinned and ranked once, N taken from the
+        # rank call: 5 before
+        ("q_lorenz_deciles", 1),
+        # one shared routing probe over the pinned union frame; both
+        # plain-routed carries hash-partition on the same key, so the
+        # second reuses the first's exchange: 6 before
+        ("q_asof_nearest", 2),
+    ],
+)
+def test_probe_reuse_exchange_counts(spark, qname, max_exchanges):
+    """Plan-shape claims of the shared routing probes, as Exchange
+    counts in the executed plan at the test fixture (the formatted
+    plans double each: 14 → 6, 10 → 2, 12 → 4)."""
+    from jibaro_spark.queries import REGISTRY
+
+    plan = _executed_plan(REGISTRY[qname].fn(spark, SF))
+    assert plan.count("Exchange") <= max_exchanges, plan
+
+
 def test_rrf_lists_are_take_ordered(spark):
     """RRF hybrid retrieval: both top-100 lists must be TakeOrdered
     (per-partition top-k + k-row merge), never a global Sort of the
@@ -381,7 +407,7 @@ def test_equidepth_ntile_has_no_single_partition_window(spark, monkeypatch):
     import jibaro_spark.operators.relational as rel
     from jibaro_spark.queries.round5 import q_equidepth_histogram
 
-    # test-scale default: the adaptive probe routes the native window
+    # test-scale default: the size probe routes the native window
     plan = _executed_plan(q_equidepth_histogram(spark, SF))
     assert "ntile" in plan.lower()
     # above the floor (forced): range-partitioned, no partitionless
