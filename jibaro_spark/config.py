@@ -44,6 +44,9 @@ class Settings:
     * ``compact_target_file_bytes`` — rewrite sizing: the reference
       targets 1 MiB output files (``delta_handler.py:25``); at 100 TB
       scale 1 MiB files are pathological, so our default is 128 MiB.
+      It sizes compaction rewrites and the non-Delta CDC merge writes
+      (``cdc_merge_table`` commits ``ceil(table bytes / target)``
+      files).
     * ``vacuum_every_n_versions`` / ``vacuum_retention_hours`` —
       maintenance cadence (reference ``jibaro/datalake/cdc.py:264-269``).
     * ``max_offsets_per_trigger`` / ``max_files_per_trigger`` —

@@ -56,6 +56,13 @@ def table_stats(spark: SparkSession, path: str) -> TableStats:
     return TableStats(num, size)
 
 
+def target_file_count(size_bytes: int, target_file_bytes: int) -> int:
+    """How many files a rewrite of ``size_bytes`` of data writes:
+    ``ceil(size / target)``, at least one — the sizing rule shared by
+    compaction, OPTIMIZE ZORDER and the CDC merge write."""
+    return max(1, math.ceil(size_bytes / target_file_bytes))
+
+
 def compact(
     spark: SparkSession,
     catalog: Catalog,
@@ -68,8 +75,13 @@ def compact(
 
     The reference targets 1 MiB files — pathological at scale; our
     default target is 128 MiB (Settings.compact_target_file_bytes).
-    Delta path sets ``dataChange=false`` so downstream streams skip the
-    rewrite.  Returns True when a rewrite happened.
+    It catches tables built by many appends (e.g. the
+    ``idempotent_batch_writer`` sink), not steady-state CDC merges:
+    :func:`jibaro_spark.operators.cdc.cdc_merge_table` already writes
+    its result at this target size, so after a merge the file count is
+    normally under the threshold and this returns False.  Delta path
+    sets ``dataChange=false`` so downstream streams skip the rewrite.
+    Returns True when a rewrite happened.
 
     ``_bloom`` sidecars (:func:`build_bloom_file_index`) are keyed by
     FILE, so a compaction invalidates them wholesale: the bare-parquet
@@ -113,7 +125,7 @@ def compact(
     if stats.num_files == 0:
         return False
     bloom_metas = _bloom_sidecar_metas(spark, path.replace("file:", ""))
-    n_parts = max(1, math.ceil(stats.size_bytes / s.compact_target_file_bytes))
+    n_parts = target_file_count(stats.size_bytes, s.compact_target_file_bytes)
     if has_delta(spark):
         df = spark.read.format("delta").load(path)
         (
@@ -144,9 +156,11 @@ def append_history_metrics(
     the control bucket (reference ``cdc.py:224-247``: Delta
     ``history()`` + ``numFiles`` column → Delta append).
 
-    Delta path appends the latest ``DeltaTable.history(1)`` row; the
-    parquet emulation appends a minimal metrics row from file listing.
-    Schema evolves with ``mergeSchema`` like the reference (K2/K8).
+    Delta path appends the latest ``DeltaTable.history(1)`` row, and
+    its schema evolves with ``mergeSchema`` like the reference (K2/K8).
+    The txlog and bare-parquet paths append one metrics row as one
+    parquet file: the row is built on the JVM (:func:`_history_row`),
+    so the append runs no Python job and writes no empty part files.
     """
     from jibaro_spark import txlog
 
@@ -160,19 +174,15 @@ def append_history_metrics(
         # row shape the Delta path gets from DeltaTable.history(1);
         # limit=1 reads ONE log file, not the whole history per merge
         c = txlog.history(path, limit=1)[0]
-        hist = spark.createDataFrame(
-            [
-                {
-                    "version": int(c["version"]),
-                    "operation": str(c["operation"]),
-                    "numAdded": int(c.get("num_added", 0)),
-                    "numFiles": stats.num_files,
-                    "sizeBytes": stats.size_bytes,
-                    **({k: str(v) for k, v in (extra or {}).items()}),
-                }
-            ]
-        ).withColumn("recordedAt", F.current_timestamp())
-        hist.write.mode("append").option("mergeSchema", "true").parquet(hist_path)
+        row = {
+            "version": int(c["version"]),
+            "operation": str(c["operation"]),
+            "numAdded": int(c.get("num_added", 0)),
+            "numFiles": stats.num_files,
+            "sizeBytes": stats.size_bytes,
+            **({k: str(v) for k, v in (extra or {}).items()}),
+        }
+        _history_row(spark, row).write.mode("append").parquet(hist_path)
         return
     if has_delta(spark):
         from delta.tables import DeltaTable
@@ -192,10 +202,22 @@ def append_history_metrics(
         "sizeBytes": stats.size_bytes,
         **(extra or {}),
     }
-    hist = spark.createDataFrame([row]).withColumn(
-        "recordedAt", F.current_timestamp()
+    _history_row(spark, row).write.mode("append").parquet(hist_path)
+
+
+def _history_row(spark: SparkSession, row: dict) -> DataFrame:
+    """``row`` plus a ``recordedAt`` timestamp as a one-partition,
+    one-row frame built from literals on the JVM.  The columns are the
+    ones ``createDataFrame([row])`` infers — keys in sorted order,
+    Python ints as ``long`` — so the history schema is unchanged."""
+
+    def lit(v):
+        return F.lit(v).cast("long") if type(v) is int else F.lit(v)
+
+    return spark.range(1, numPartitions=1).select(
+        *[lit(v).alias(k) for k, v in sorted(row.items())],
+        F.current_timestamp().alias("recordedAt"),
     )
-    hist.write.mode("append").option("mergeSchema", "true").parquet(hist_path)
 
 
 def generate_manifest(spark: SparkSession, catalog: Catalog, ref: TableRef) -> bool:
@@ -433,7 +455,6 @@ def optimize_zorder(
     rewrite goes through a temp dir + atomic-ish rename swap; on Delta
     the same layout write carries ``dataChange=false``.
     """
-    import os as _os
     import shutil as _shutil
     import uuid as _uuid
 
@@ -442,9 +463,7 @@ def optimize_zorder(
 
     local = path.replace("file:", "")
     if txlog.latest_version(local) is not None:
-        files = txlog.snapshot_files(local)
-        size = sum(_os.path.getsize(f) for f in files)
-        n_files = max(1, math.ceil(size / target_file_bytes))
+        n_files = target_file_count(txlog.snapshot_bytes(local), target_file_bytes)
         bloom_metas = _bloom_sidecar_metas(spark, local)
         txlog.compact_versioned(
             spark,
@@ -462,7 +481,7 @@ def optimize_zorder(
     # same sidecar contract as compact(): the rmtree below would
     # silently destroy any _bloom index — capture params, rebuild after
     bloom_metas = _bloom_sidecar_metas(spark, path.replace("file:", ""))
-    n_files = max(1, math.ceil(st.size_bytes / target_file_bytes))
+    n_files = target_file_count(st.size_bytes, target_file_bytes)
     tmp = f"{path.rstrip('/')}__zopt_{_uuid.uuid4().hex[:8]}"
     df = spark.read.parquet(path)
     layout_zorder(df, *key_cols, num_partitions=n_files, bits=bits).write.parquet(

@@ -26,7 +26,10 @@ Two execution paths:
   rewrite), else an overwrite of the parquet table with the
   :func:`cdc_apply` result (full rewrite per batch — correct, and the
   honest fallback without a transactional table format; at 100 TB you
-  run the Delta path).
+  run the Delta path).  Both non-Delta rewrites are written at target
+  file size (``ceil(table bytes / compact_target_file_bytes)`` files,
+  Delta's optimized-write idea), so a steady-state merge leaves no
+  small files for compaction to rewrite.
 """
 
 from __future__ import annotations
@@ -130,6 +133,14 @@ def cdc_merge_table(
     write leaves the table unchanged) — the Delta semantics without
     the jars; see ``tests/test_round5_txlog.py``.
 
+    Both non-Delta rewrites commit target-sized files: the merge result
+    is coalesced (no shuffle) to ``ceil(table bytes /
+    compact_target_file_bytes)`` partitions — the rule
+    :func:`jibaro_spark.maintenance.compact` applies, with the bytes of
+    the table being replaced (from the log's add sizes on txlog tables,
+    from the file listing on bare parquet).  A steady-state merge then
+    commits one target-sized file set and compaction has nothing to do.
+
     Returns per-merge metrics — ``rowsWritten`` observed DURING the
     write job itself (``Observation``; no second scan — the parquet
     analogue of the Delta ``operationMetrics`` the reference's history
@@ -140,15 +151,26 @@ def cdc_merge_table(
     from pyspark.sql import Observation
 
     from jibaro_spark import txlog
+    from jibaro_spark.maintenance import table_stats, target_file_count
 
     def _observed(df: DataFrame) -> "tuple[DataFrame, Observation]":
         obs = Observation()
         return df.observe(obs, F.count(F.lit(1)).alias("rowsWritten")), obs
 
+    def _sized(df: DataFrame, table_bytes: int) -> DataFrame:
+        # compaction's sizing rule, applied at write time: no shuffle,
+        # and a no-op when the plan already has at most n partitions
+        target = catalog.settings.compact_target_file_bytes
+        return df.coalesce(target_file_count(table_bytes, target))
+
     path = catalog.path(target_ref)
     if txlog.latest_version(path) is not None:
         current = txlog.read_versioned(spark, path)
-        result, obs = _observed(cdc_apply(current, envelope, key_cols, order_by))
+        merged = _sized(
+            cdc_apply(current, envelope, key_cols, order_by),
+            txlog.snapshot_bytes(path),
+        )
+        result, obs = _observed(merged)
         txlog.write_versioned(result, path, mode="overwrite", operation="MERGE")
         return {"operation": "MERGE", **obs.get}
     exists = _path_exists(spark, path)
@@ -196,9 +218,11 @@ def cdc_merge_table(
     else:
         op = "MERGE"
         target = read_table(spark, catalog, target_ref, fmt="parquet")
+        table_bytes = table_stats(spark, path).size_bytes
         # Materialize executor-side (no driver collect) before
         # overwriting the path the plan reads from.
         result = cdc_apply(target, envelope, key_cols, order_by).localCheckpoint(eager=True)
+        result = _sized(result, table_bytes)
     result, obs = _observed(result)
     write_table(result, catalog, target_ref, fmt="parquet", mode="overwrite")
     return {"operation": op, **obs.get}

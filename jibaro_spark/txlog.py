@@ -245,18 +245,29 @@ def _read_actions(table: str, version: int) -> list[dict]:
         return [json.loads(line) for line in f if line.strip()]
 
 
-def snapshot_files(table: str, version: int | None = None) -> list[str]:
-    """Absolute data-file paths of the snapshot at ``version``
-    (default: latest) — checkpoint-accelerated log replay: at most
-    ``CHECKPOINT_INTERVAL``-ish commit files are read past the newest
-    covering checkpoint, independent of total table history."""
+def _snapshot_live(table: str, version: int | None) -> "dict[str, dict]":
     head = latest_version(table)
     if head is None:
         raise FileNotFoundError(f"no {LOG_DIR} at {table}")
     v = head if version is None else version
     if v > head or v < 0:
         raise ValueError(f"version {v} out of range [0, {head}]")
-    return [os.path.join(table, p) for p in sorted(_replay_live(table, v))]
+    return _replay_live(table, v)
+
+
+def snapshot_files(table: str, version: int | None = None) -> list[str]:
+    """Absolute data-file paths of the snapshot at ``version``
+    (default: latest) — checkpoint-accelerated log replay: at most
+    ``CHECKPOINT_INTERVAL``-ish commit files are read past the newest
+    covering checkpoint, independent of total table history."""
+    return [os.path.join(table, p) for p in sorted(_snapshot_live(table, version))]
+
+
+def snapshot_bytes(table: str, version: int | None = None) -> int:
+    """Data bytes of the snapshot at ``version`` (default: latest):
+    the sum of the ``size`` each add action records, from the same log
+    replay as :func:`snapshot_files` — no stat per data file."""
+    return sum(int(a["size"]) for a in _snapshot_live(table, version).values())
 
 
 def read_versioned(
@@ -548,11 +559,9 @@ def compact_versioned(
     rewrite-as-commit semantics: same rows, fewer/better files, prior
     versions still time-travelable until vacuum).  Returns the new
     version."""
-    import math as _math
+    from jibaro_spark.maintenance import target_file_count
 
-    files = snapshot_files(table)
-    size = sum(os.path.getsize(f) for f in files)
-    n = max(1, _math.ceil(size / target_file_bytes))
+    n = target_file_count(snapshot_bytes(table), target_file_bytes)
     df = read_versioned(spark, table)
     if zorder_cols:
         from jibaro_spark.operators.relational import layout_zorder

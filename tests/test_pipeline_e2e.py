@@ -16,6 +16,9 @@ import pytest
 # default fast-core run the round driver's verify window executes
 pytestmark = pytest.mark.slow
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    LongType, StringType, StructField, StructType, TimestampType,
+)
 
 from jibaro_spark.catalog import Catalog, Layer, TableRef
 from jibaro_spark.codecs.confluent import InMemorySchemaRegistry
@@ -174,6 +177,17 @@ def test_maintenance_compact_and_history(spark, lake):
     assert hist.count() == 1
     row = hist.collect()[0]
     assert row.operation == "COMPACT" and row.numFiles == after.num_files
+    # one append, one data file; the schema is the one the history
+    # table has always had (sorted metric columns, then recordedAt)
+    assert table_stats(spark, lake.history_path(ref)).num_files == 1
+    assert hist.schema == StructType(
+        [
+            StructField("numFiles", LongType()),
+            StructField("operation", StringType()),
+            StructField("sizeBytes", LongType()),
+            StructField("recordedAt", TimestampType()),
+        ]
+    )
 
 
 VALUE_SCHEMA_V2 = (

@@ -4,6 +4,7 @@ crash-safety of uncommitted writes, and commit-conflict retry."""
 
 from __future__ import annotations
 
+import glob
 import os
 
 import pytest
@@ -12,6 +13,9 @@ import pytest
 # default fast-core run the round driver's verify window executes
 pytestmark = pytest.mark.slow
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    LongType, StringType, StructField, StructType, TimestampType,
+)
 
 from jibaro_spark import txlog as T
 
@@ -228,6 +232,19 @@ def test_maintenance_vacuum_and_history_on_txlog(spark, tmp_path):
     hist = spark.read.parquet(cat.history_path(ref))
     row = hist.orderBy(F.col("recordedAt").desc()).first()
     assert row["version"] == 3 and row["operation"] == "OVERWRITE"
+    # one append, one data file; the schema is the one the history
+    # table has always had (sorted metric columns, then recordedAt)
+    assert len(glob.glob(os.path.join(cat.history_path(ref), "*.parquet"))) == 1
+    assert hist.schema == StructType(
+        [
+            StructField("numAdded", LongType()),
+            StructField("numFiles", LongType()),
+            StructField("operation", StringType()),
+            StructField("sizeBytes", LongType()),
+            StructField("version", LongType()),
+            StructField("recordedAt", TimestampType()),
+        ]
+    )
 
 
 def test_compact_versioned_preserves_rows_and_history(spark, table):
