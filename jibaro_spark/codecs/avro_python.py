@@ -20,7 +20,9 @@ its writer schema.
 Like :mod:`jibaro_spark.codecs.proto_python`: slicing stays native,
 the payload parse is an Arrow-batched ``mapInPandas`` map-only pass,
 and the JVM ``from_avro`` dispatcher remains the production fast path
-where the jar exists.
+where the jar exists.  This module holds only the kernels; the
+``avro-python`` row of :data:`jibaro_spark.codecs.confluent.CODECS`
+runs them inside the shared pair loop and publisher.
 
 Supported Spark types: string, binary, boolean, int/short, long,
 float, double, arrays, string-keyed maps, nested structs.
@@ -283,118 +285,3 @@ def encode_avro_python(
             yield pdf
 
     return df.mapInPandas(mapper, out_schema)
-
-
-def decode_confluent_batch_avro_python(
-    batch: DataFrame,
-    schema_resolver,
-    on_tombstone: str = "drop",
-    scratch_dir: "str | None" = None,
-    spill_threshold: "int | None" = None,
-    on_unknown_schema: str = "error",
-) -> list:
-    """Schema-partitioned Confluent Avro decode (R7) on the Python
-    codec — same native slicing + pair loop as the jar path (shared
-    :func:`~jibaro_spark.codecs.confluent.pair_frames` skeleton, incl.
-    the staged many-schema route and the unknown-schema policy); each
-    pair's payloads parse with exactly that pair's reader schema
-    (``schema_resolver(role, id) -> StructType``)."""
-    from pyspark.sql import functions as F
-
-    from jibaro_spark.codecs.confluent import (
-        KAFKA_META_COLS,
-        SPILL_THRESHOLD,
-        pair_frames,
-        resolve_schema_or_policy,
-        split_wire_format,
-    )
-
-    sliced = split_wire_format(batch, "avro")
-    out = []
-    for key_id, value_id, part in pair_frames(
-        sliced,
-        on_tombstone,
-        scratch_dir,
-        SPILL_THRESHOLD if spill_threshold is None else spill_threshold,
-    ):
-        pair = (key_id, value_id)
-        kschema, kq = resolve_schema_or_policy(
-            schema_resolver, "key", key_id, pair, on_unknown_schema
-        )
-        vschema, vq = resolve_schema_or_policy(
-            schema_resolver, "value", value_id, pair, on_unknown_schema
-        )
-        if (key_id is not None and kschema is None) or (
-            value_id is not None and vschema is None
-        ):
-            if kq or vq:  # keep: raw-binary dead-letter frame
-                out.append(
-                    (
-                        pair,
-                        part.select(
-                            F.col("keyPayload").alias("key"),
-                            F.col("valuePayload").alias("value"),
-                            *[c for c in KAFKA_META_COLS if c in part.columns],
-                            "keySchemaId",
-                            "valueSchemaId",
-                        ),
-                    )
-                )
-            continue
-        part = part.drop("key", "value")
-        if value_id is not None:
-            part = decode_avro_python(part, "valuePayload", vschema, "value")
-        else:
-            part = part.withColumn("value", F.lit(None))
-        if key_id is not None:
-            part = decode_avro_python(part, "keyPayload", kschema, "key")
-        else:
-            part = part.withColumn("key", F.lit(None).cast("string"))
-        keep = (
-            ["key", "value"]
-            + [c for c in KAFKA_META_COLS if c in part.columns]
-            + ["keySchemaId", "valueSchemaId"]
-        )
-        out.append(((key_id, value_id), part.select(*keep)))
-    return out
-
-
-def encode_confluent_avro_python(
-    df: DataFrame,
-    key_cols: list[str],
-    registry,
-    topic: str,
-) -> DataFrame:
-    """Reverse path on the Python codec (reference ``kafka.py:22-119``
-    with ``to_avro`` → stdlib writer): derive Avro schemas from the
-    DataFrame, register them under ``{topic}-key``/``{topic}-value``,
-    encode both sides, and assemble Confluent frames — the publisher
-    whose output :func:`decode_confluent_batch_avro_python` (resolver
-    = ``avro_schema_to_struct(registry.get_schema(id))``) consumes,
-    closing the jar-free produce→consume loop end to end."""
-    from pyspark.sql import functions as F
-
-    from jibaro_spark.codecs.confluent import wire_encode
-    from jibaro_spark.codecs.schemas import to_avro_schema
-
-    value_cols = [c for c in df.columns if c not in key_cols]
-    value_schema_t = df.select(*value_cols).schema
-    value_schema = to_avro_schema(value_schema_t, "Envelope", namespace=topic)
-    value_id = registry.register(f"{topic}-value", value_schema, "AVRO")
-
-    staged = df.select(
-        F.struct(*value_cols).alias("__v"),
-        *([F.struct(*key_cols).alias("__k")] if key_cols else []),
-    )
-    staged = encode_avro_python(staged, "__v", value_schema_t, out_col="__vp")
-    value_bin = wire_encode(F.col("__vp"), value_id, "avro")
-
-    if key_cols:
-        key_schema_t = df.select(*key_cols).schema
-        key_schema = to_avro_schema(key_schema_t, "Key", namespace=topic)
-        key_id = registry.register(f"{topic}-key", key_schema, "AVRO")
-        staged = encode_avro_python(staged, "__k", key_schema_t, out_col="__kp")
-        key_bin = wire_encode(F.col("__kp"), key_id, "avro")
-    else:
-        key_bin = F.lit(None).cast("binary")
-    return staged.select(key_bin.alias("key"), value_bin.alias("value"))

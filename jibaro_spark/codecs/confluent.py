@@ -17,16 +17,23 @@ Python UDF for the 4-byte int decode (``utils.py:182-184``) forces a
 serialization round-trip per row; ``conv(hex(substring(...)))`` stays
 in Tungsten codegen (SURVEY §2.9 U1 rebuild note).
 
-Decode dispatch: ``json`` works on bare pyspark (used by the test
-pipeline); ``avro``/``protobuf`` use ``from_avro``/``from_protobuf``
-and require the spark-avro / spark-protobuf jars on the classpath
-(checked at call time with a clear error) — exactly the jars the
-reference's spark-submit loads (``Makefile:26-28``).
+Codec dispatch: :data:`CODECS` is the one table that knows the content
+types.  One pair loop (:func:`decode_confluent_batch_pairs`) and one
+publisher (:func:`encode_confluent`) run over it for every lane:
+
+* ``json`` works on bare pyspark (``from_json`` / ``to_json``);
+* ``avro`` / ``protobuf`` use ``from_avro`` / ``from_protobuf`` and
+  require the spark-avro / spark-protobuf jars on the classpath —
+  exactly the jars the reference's spark-submit loads
+  (``Makefile:26-28``);
+* ``avro-python`` / ``protobuf-python`` run the jar-free kernels of
+  :mod:`~jibaro_spark.codecs.avro_python` /
+  :mod:`~jibaro_spark.codecs.proto_python` (imported on first use).
 """
 
 from __future__ import annotations
 
-from typing import Callable, Mapping, Protocol
+from typing import Any, Callable, Mapping, NamedTuple, Protocol
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -423,16 +430,147 @@ def parse_json_quarantine(
     return good, quarantined
 
 
-DECODERS: Mapping[str, Callable[[Column, str], Column]] = {
-    "json": _decode_json,
-    "avro": _decode_avro,
-    "protobuf": _decode_protobuf,
+# -------------------------------------------------------------- codec table
+
+
+class Codec(NamedTuple):
+    """Everything the pair loop and the publisher need to know about
+    one content type (one row of :data:`CODECS`)."""
+
+    #: framing for :func:`split_wire_format` / :func:`wire_encode`:
+    #: ``"avro"`` (magic + id) or ``"protobuf"`` (+ message indexes)
+    wire: str
+    #: ``(part, payload_col, reader_schema, out_col, role) -> part``
+    #: with the decoded ``out_col`` added; ``role`` is key|value
+    decode: Callable[[DataFrame, str, Any, str, str], DataFrame]
+    #: registry text → the default reader schema
+    reader_schema: Callable[[str], Any]
+    #: ``(struct, name, topic) -> text`` registered for a published side
+    schema_text: Callable[[Any, str, str], str]
+    schema_type: str
+    #: ``(df, struct_col, struct, schema_text, out_col, role) -> df``
+    #: with the encoded binary ``out_col`` added; None: no encoder
+    encode: Callable[[DataFrame, str, Any, str, str, str], DataFrame] | None
+
+
+#: protobuf message and package names per role — descriptor naming
+#: only, the wire carries field numbers
+_PROTO_NAMES = {"key": ("Key", "jibarokey"), "value": ("Envelope", "jibaro")}
+
+
+def _column_decoder(fn: Callable[[Column, str], Column]):
+    def decode(part, payload_col, schema, out_col, _role):
+        return part.withColumn(out_col, fn(F.col(payload_col), schema))
+
+    return decode
+
+
+def _decode_avro_python(part, payload_col, schema, out_col, _role):
+    from jibaro_spark.codecs.avro_python import decode_avro_python
+
+    return decode_avro_python(part, payload_col, schema, out_col)
+
+
+def _decode_protobuf_python(part, payload_col, schema, out_col, role):
+    from jibaro_spark.codecs.proto_python import decode_protobuf_python
+
+    message, package = _PROTO_NAMES[role]
+    return decode_protobuf_python(
+        part, payload_col, schema, message, out_col, package
+    )
+
+
+def _encode_json(df, struct_col, _struct, _text, out_col, _role):
+    return df.withColumn(out_col, F.to_json(F.col(struct_col)).cast("binary"))
+
+
+def _encode_avro(df, struct_col, _struct, text, out_col, _role):
+    from pyspark.sql.avro.functions import to_avro
+
+    return df.withColumn(out_col, to_avro(F.col(struct_col), text))
+
+
+def _encode_avro_python(df, struct_col, struct, _text, out_col, _role):
+    from jibaro_spark.codecs.avro_python import encode_avro_python
+
+    return encode_avro_python(df, struct_col, struct, out_col)
+
+
+def _encode_protobuf_python(df, struct_col, struct, _text, out_col, role):
+    from jibaro_spark.codecs.proto_python import encode_protobuf_python
+
+    message, package = _PROTO_NAMES[role]
+    return encode_protobuf_python(df, struct_col, struct, message, out_col, package)
+
+
+def _registry_text(text: str) -> str:
+    return text
+
+
+def _avro_struct(text: str):
+    from jibaro_spark.codecs.schemas import avro_schema_to_struct
+
+    return avro_schema_to_struct(text)
+
+
+def _proto_struct(text: str):
+    from jibaro_spark.codecs.schemas import proto_schema_to_struct
+
+    return proto_schema_to_struct(text)
+
+
+def _json_schema_text(struct, name: str, topic: str) -> str:
+    # real JSON Schema draft-07 (ADVICE r1) — what external registry
+    # consumers expect; _decode_json accepts it alongside DDL/StructType
+    from jibaro_spark.codecs.schemas import to_json_schema
+
+    return to_json_schema(struct, title=f"{topic}.{name}")
+
+
+def _avro_schema_text(struct, name: str, topic: str) -> str:
+    from jibaro_spark.codecs.schemas import to_avro_schema
+
+    return to_avro_schema(struct, name, namespace=topic)
+
+
+def _proto_schema_text(struct, name: str, _topic: str) -> str:
+    from jibaro_spark.codecs.schemas import to_proto_schema
+
+    return to_proto_schema(struct, name)
+
+
+#: content type → codec.  The jar lanes resolve reader schemas to the
+#: registry text itself (for ``protobuf`` that is
+#: ``{descriptor_path}:{message}``, so it needs a ``schema_resolver``);
+#: the Python lanes parse it into the StructType their kernels read.
+CODECS: Mapping[str, Codec] = {
+    "json": Codec(
+        "avro", _column_decoder(_decode_json), _registry_text,
+        _json_schema_text, "JSON", _encode_json,
+    ),
+    "avro": Codec(
+        "avro", _column_decoder(_decode_avro), _registry_text,
+        _avro_schema_text, "AVRO", _encode_avro,
+    ),
+    "protobuf": Codec(
+        "protobuf", _column_decoder(_decode_protobuf), _registry_text,
+        _proto_schema_text, "PROTOBUF", None,
+    ),
+    "avro-python": Codec(
+        "avro", _decode_avro_python, _avro_struct,
+        _avro_schema_text, "AVRO", _encode_avro_python,
+    ),
+    "protobuf-python": Codec(
+        "protobuf", _decode_protobuf_python, _proto_struct,
+        _proto_schema_text, "PROTOBUF", _encode_protobuf_python,
+    ),
 }
 
 KAFKA_META_COLS = ["topic", "partition", "offset", "timestamp", "timestampType"]
 
 #: Above this many distinct schema pairs a caller-supplied scratch dir
-#: switches :func:`pair_frames` to the staged (partition-pruned) route.
+#: switches :func:`pair_frames` to the staged (partition-pruned) route;
+#: read at call time.
 SPILL_THRESHOLD = 16
 
 
@@ -440,19 +578,18 @@ def pair_frames(
     sliced: DataFrame,
     on_tombstone: str = "drop",
     scratch_dir: "str | None" = None,
-    spill_threshold: int = SPILL_THRESHOLD,
 ) -> "list[tuple[int | None, int | None, DataFrame]]":
     """Distinct ``(keySchemaId, valueSchemaId)`` pairs of a wire-sliced
     batch plus one frame per pair, in deterministic (None-safe) order —
-    the loop skeleton shared by all three decode lanes (jar,
-    avro-python, protobuf-python).
+    the loop skeleton of :func:`decode_confluent_batch_pairs`, called
+    once per micro-batch for every codec.
 
     **Direct route** (the common few-schema batch): each frame is a
     ``filter`` over ``sliced``; a downstream action scans the whole
     batch per pair.  Fine for a handful of in-flight schema versions —
     O(pairs × batch) total scan.
 
-    **Staged route** (``scratch_dir`` set AND pairs > spill_threshold —
+    **Staged route** (``scratch_dir`` set AND pairs > SPILL_THRESHOLD —
     the schema-shape degeneracy fence, VERDICT r11 #2): ONE extra pass
     writes the sliced batch to ``scratch_dir`` partitioned by schema
     pair; each frame then reads ONLY its own partition directory, so
@@ -497,7 +634,7 @@ def pair_frames(
         )
         return sliced.filter(cond)
 
-    if scratch_dir is None or len(pairs) <= spill_threshold:
+    if scratch_dir is None or len(pairs) <= SPILL_THRESHOLD:
         return [(k, v, _direct(k, v)) for k, v in pairs]
 
     spark = sliced.sparkSession
@@ -540,51 +677,6 @@ def pair_frames(
         return spark.read.schema(leaf_schema).parquet(leaf)
 
     return [(k, v, _staged(k, v)) for k, v in pairs]
-
-
-def decode_confluent_batch(
-    batch: DataFrame,
-    registry: SchemaRegistry,
-    content_type: str = "json",
-    schema_resolver: Callable[[str, int], str] | None = None,
-    on_tombstone: str = "drop",
-    scratch_dir: "str | None" = None,
-    spill_threshold: int = SPILL_THRESHOLD,
-) -> list[DataFrame]:
-    """Schema-partitioned decode of one micro-batch (reference R7:
-    ``avro_handler.py:41-96`` / ``cdc.py:151-176``).
-
-    1. slice wire format → schema-id columns (native exprs)
-    2. distinct (keySchemaId, valueSchemaId) pairs → collect — bounded
-       by the number of in-flight schema versions, never by data size
-    3. per pair: fetch schemas from the registry (driver-side), filter
-       the batch to that pair (null-safe — keyless topics have null
-       key ids, reference ``cdc.py:167-176``), decode with exactly
-       that schema
-
-    Kafka tombstones (null value → null ``valueSchemaId``; Debezium
-    emits one after every delete for log compaction) carry no payload
-    to decode.  ``on_tombstone`` routes them: ``"drop"`` (default —
-    they are compaction markers, the preceding ``op='d'`` event carries
-    the delete), ``"keep"`` (emitted with a null binary ``value``;
-    callers must route them to a separate sink, a struct-decoded append
-    cannot merge with a binary column), or ``"error"``.
-
-    Returns one decoded DataFrame per schema pair — callers append each
-    with ``mergeSchema`` (K2) or union them.  The common single-schema
-    batch avoids any extra pass: one filter job over the batch.
-    ``decode_confluent_batch_pairs`` additionally yields the
-    ``(key_id, value_id)`` of each frame (known from the distinct pass
-    — re-deriving it with ``first()`` would cost a job per pair, the
-    reference defect at ``protobuf_handler.py:89``, SURVEY §2.13).
-    """
-    return [
-        df
-        for _pair, df in decode_confluent_batch_pairs(
-            batch, registry, content_type, schema_resolver, on_tombstone,
-            scratch_dir, spill_threshold,
-        )
-    ]
 
 
 def resolve_schema_or_policy(
@@ -636,29 +728,54 @@ def decode_confluent_batch_pairs(
     batch: DataFrame,
     registry: SchemaRegistry,
     content_type: str = "json",
-    schema_resolver: Callable[[str, int], str] | None = None,
+    schema_resolver: Callable[[str, int], Any] | None = None,
     on_tombstone: str = "drop",
     scratch_dir: "str | None" = None,
-    spill_threshold: int = SPILL_THRESHOLD,
     on_unknown_schema: str = "error",
 ) -> list[tuple[tuple[int | None, int | None], DataFrame]]:
-    """:func:`decode_confluent_batch`, yielding
-    ``((keySchemaId, valueSchemaId), decoded_frame)`` per schema pair.
-    ``scratch_dir``/``spill_threshold`` enable :func:`pair_frames`'s
-    staged route for many-schema batches (O(batch) total scan instead
-    of O(pairs × batch)); the None-safe pair ordering — (kid, None)
-    and (kid, vid) coexist in any batch mixing deletes with their
-    tombstones (ADVICE r1) — lives there too.  ``on_unknown_schema``
-    routes pairs whose id the registry cannot resolve
-    (:func:`resolve_schema_or_policy`): a kept pair's frame carries
-    RAW binary ``key``/``value`` payloads for a dead-letter sink."""
-    decode = DECODERS[content_type]
-    resolver = schema_resolver or (lambda _role, sid: registry.get_schema(sid))
-    sliced = split_wire_format(batch, content_type)
+    """Schema-partitioned decode of one micro-batch (reference R7:
+    ``avro_handler.py:41-96`` / ``protobuf_handler.py:59-133`` /
+    ``cdc.py:151-176``) — the one pair loop for every codec in
+    :data:`CODECS`.
+
+    1. slice wire format → schema-id columns (native exprs)
+    2. distinct (keySchemaId, valueSchemaId) pairs → collect — bounded
+       by the number of in-flight schema versions, never by data size
+       (:func:`pair_frames`; ``scratch_dir`` enables its staged route
+       for many-schema batches)
+    3. per pair: resolve the reader schemas (driver-side), decode the
+       pair's frame with exactly those schemas
+
+    ``schema_resolver(role, schema_id)`` supplies a reader schema per
+    ``"key"``/``"value"`` id; by default it is the codec's reading of
+    ``registry.get_schema(id)``.
+
+    Returns ``((keySchemaId, valueSchemaId), decoded_frame)`` per pair
+    — the ids are known from the distinct pass (re-deriving them with
+    ``first()`` would cost a job per pair, the reference defect at
+    ``protobuf_handler.py:89``, SURVEY §2.13).  Callers append each
+    frame with ``mergeSchema`` (K2) or union them.
+
+    Null sides are typed ``binary`` (void is not writable): a keyless
+    topic's ``key`` (reference ``kafka.py:38-41``), and the ``value``
+    of a Kafka tombstone (null value → null ``valueSchemaId``; Debezium
+    emits one after every delete for log compaction).  ``on_tombstone``
+    routes tombstones: ``"drop"`` (default — the preceding ``op='d'``
+    event carries the delete), ``"keep"`` (callers must route them to a
+    separate sink, a struct-decoded append cannot merge with a binary
+    column), or ``"error"``.  ``on_unknown_schema`` routes pairs whose
+    id cannot be resolved (:func:`resolve_schema_or_policy`): a kept
+    pair's frame carries RAW binary ``key``/``value`` payloads for a
+    dead-letter sink."""
+    codec = CODECS[content_type]
+    resolver = schema_resolver or (
+        lambda _role, sid: codec.reader_schema(registry.get_schema(sid))
+    )
+    sliced = split_wire_format(batch, codec.wire)
+    meta = [c for c in KAFKA_META_COLS if c in sliced.columns]
+    keep = [*meta, "keySchemaId", "valueSchemaId"]
     out: list[tuple[tuple[int | None, int | None], DataFrame]] = []
-    for key_id, value_id, part in pair_frames(
-        sliced, on_tombstone, scratch_dir, spill_threshold
-    ):
+    for key_id, value_id, part in pair_frames(sliced, on_tombstone, scratch_dir):
         pair = (key_id, value_id)
         kschema, kq = resolve_schema_or_policy(
             resolver, "key", key_id, pair, on_unknown_schema
@@ -676,27 +793,19 @@ def decode_confluent_batch_pairs(
                         part.select(
                             F.col("keyPayload").alias("key"),
                             F.col("valuePayload").alias("value"),
-                            *KAFKA_META_COLS,
-                            "keySchemaId",
-                            "valueSchemaId",
+                            *keep,
                         ),
                     )
                 )
             continue  # skip: drop the unresolvable pair
-        cols = [
-            decode(F.col("keyPayload"), kschema).alias("key")
-            if key_id is not None
-            # keyless topic (reference kafka.py:38-41): null key, typed
-            # binary so the column is writable (void type is not)
-            else F.lit(None).cast("binary").alias("key"),
-            decode(F.col("valuePayload"), vschema).alias("value")
-            if value_id is not None
-            else F.lit(None).cast("binary").alias("value"),
-            *KAFKA_META_COLS,
-            "keySchemaId",
-            "valueSchemaId",
-        ]
-        out.append(((key_id, value_id), part.select(*cols)))
+        # the raw binary key/value give way to the decoded columns
+        part = part.drop("key", "value")
+        for role, sid, schema in (("value", value_id, vschema), ("key", key_id, kschema)):
+            if sid is None:
+                part = part.withColumn(role, F.lit(None).cast("binary"))
+            else:
+                part = codec.decode(part, f"{role}Payload", schema, role, role)
+        out.append((pair, part.select("key", "value", *keep)))
     return out
 
 
@@ -708,56 +817,31 @@ def encode_confluent(
     content_type: str = "json",
 ) -> DataFrame:
     """DataFrame → Kafka-shaped (key binary, value binary) in Confluent
-    wire format (reverse path, reference ``kafka.py:22-119``).
+    wire format (reverse path, reference ``kafka.py:22-119``) — the one
+    publisher for every codec in :data:`CODECS` that has an encoder
+    (all but the jar ``protobuf`` lane).
 
     Derives key/value schemas from the DataFrame schema, registers them
     under ``{topic}-key`` / ``{topic}-value`` (reference
-    ``kafka.py:50-84``), and assembles the wire format natively.  With
-    no ``key_cols`` the key is null (keyless topic,
-    ``kafka.py:38-41``).
-
-    ``json`` encodes payloads with ``to_json`` (always available);
-    ``avro`` uses ``to_avro`` when the spark-avro jar is present.
+    ``kafka.py:50-84``), encodes each side and assembles the wire
+    format natively.  With no ``key_cols`` the key is null (keyless
+    topic, ``kafka.py:38-41``).  Registry calls happen once on the
+    driver; the encode is map-only.  The output decodes with
+    :func:`decode_confluent_batch_pairs` and the default resolver.
     """
-    from jibaro_spark.codecs.schemas import to_avro_schema, to_json_schema
-
-    value_cols = [c for c in df.columns if c not in key_cols]
-    value_struct = F.struct(*value_cols)
-    if content_type == "json":
-        # Real JSON Schema draft-07 (ADVICE r1) — what external registry
-        # consumers expect; our decoder accepts it alongside DDL/StructType.
-        value_schema = to_json_schema(
-            df.select(*value_cols).schema, title=f"{topic}.Envelope"
-        )
-        schema_type = "JSON"
-        encode = lambda c, s: F.to_json(c).cast("binary")  # noqa: E731
-    elif content_type == "avro":
-        from pyspark.sql.avro.functions import to_avro
-
-        value_schema = to_avro_schema(
-            df.select(*value_cols).schema, "Envelope", namespace=topic
-        )
-        schema_type = "AVRO"
-        encode = to_avro  # type: ignore[assignment]
-    else:
+    codec = CODECS.get(content_type)
+    if codec is None or codec.encode is None:
         raise ValueError(f"unsupported encode content_type {content_type!r}")
-
-    value_id = registry.register(f"{topic}-value", value_schema, schema_type)
-    value_bin = wire_encode(encode(value_struct, value_schema), value_id, content_type)
-
+    value_cols = [c for c in df.columns if c not in key_cols]
+    sides = [("value", "Envelope", value_cols)]
     if key_cols:
-        key_struct = F.struct(*key_cols)
-        if content_type == "json":
-            key_schema = to_json_schema(
-                df.select(*key_cols).schema, title=f"{topic}.Key"
-            )
-        else:
-            key_schema = to_avro_schema(
-                df.select(*key_cols).schema, "Key", namespace=topic
-            )
-        key_id = registry.register(f"{topic}-key", key_schema, schema_type)
-        key_bin = wire_encode(encode(key_struct, key_schema), key_id, content_type)
-    else:
-        key_bin = F.lit(None).cast("binary")
-
-    return df.select(key_bin.alias("key"), value_bin.alias("value"))
+        sides.append(("key", "Key", key_cols))
+    framed = df.select(*[F.struct(*cols).alias(f"__{role}") for role, _, cols in sides])
+    wire = {"key": F.lit(None).cast("binary")}
+    for role, name, cols in sides:
+        struct = df.select(*cols).schema
+        text = codec.schema_text(struct, name, topic)
+        sid = registry.register(f"{topic}-{role}", text, codec.schema_type)
+        framed = codec.encode(framed, f"__{role}", struct, text, f"__{role}_bin", role)
+        wire[role] = wire_encode(F.col(f"__{role}_bin"), sid, codec.wire)
+    return framed.select(wire["key"].alias("key"), wire["value"].alias("value"))

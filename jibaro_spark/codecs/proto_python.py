@@ -13,7 +13,9 @@ Pipeline shape: the wire-format slicing stays native/JVM-side
 an Arrow-batched ``mapInPandas`` — a map-only pass, no shuffle.  The
 message class is rebuilt once per task from the serialized
 ``FileDescriptorProto`` (descriptor handles don't pickle; the proto of
-the descriptor does).
+the descriptor does).  This module holds only the kernels; the
+``protobuf-python`` row of :data:`jibaro_spark.codecs.confluent.CODECS`
+runs them inside the shared pair loop and publisher.
 
 Supported Spark types (mirrors the reference's Spark→proto3 map,
 ``utils.py:57-88``): string, int/short (int32), long (int64), float,
@@ -300,149 +302,3 @@ def encode_protobuf_python(
             yield pdf
 
     return df.mapInPandas(mapper, out_schema)
-
-
-def decode_confluent_batch_protobuf_python(
-    batch: DataFrame,
-    schema_resolver,
-    message_name: str = "Envelope",
-    key_message_name: str = "Key",
-    on_tombstone: str = "drop",
-    scratch_dir: "str | None" = None,
-    spill_threshold: "int | None" = None,
-    on_unknown_schema: str = "error",
-) -> list:
-    """Schema-partitioned Confluent protobuf decode (reference R7 /
-    ``protobuf_handler.py:59-133``) on the pure-Python codec: wire
-    slicing and the distinct-schema-pair loop are the same
-    native-expression machinery as the jar path (shared
-    :func:`~jibaro_spark.codecs.confluent.pair_frames` skeleton, incl.
-    the staged many-schema route and the unknown-schema policy); each
-    pair's frame decodes its key/value payloads with exactly that
-    pair's schemas via Arrow ``mapInPandas``.
-
-    ``schema_resolver(role, schema_id) -> StructType`` supplies the
-    reader schema per id ("key"/"value" roles) — the id-partitioned
-    loop is what makes mixed-schema batches (in-flight schema
-    evolution) decode correctly.  Returns ``[(pair, DataFrame)]``.
-    """
-    from pyspark.sql import functions as F
-
-    from jibaro_spark.codecs.confluent import (
-        KAFKA_META_COLS,
-        SPILL_THRESHOLD,
-        pair_frames,
-        resolve_schema_or_policy,
-        split_wire_format,
-    )
-
-    sliced = split_wire_format(batch, "protobuf")
-    out = []
-    for key_id, value_id, part in pair_frames(
-        sliced,
-        on_tombstone,
-        scratch_dir,
-        SPILL_THRESHOLD if spill_threshold is None else spill_threshold,
-    ):
-        pair = (key_id, value_id)
-        kschema, kq = resolve_schema_or_policy(
-            schema_resolver, "key", key_id, pair, on_unknown_schema
-        )
-        vschema, vq = resolve_schema_or_policy(
-            schema_resolver, "value", value_id, pair, on_unknown_schema
-        )
-        if (key_id is not None and kschema is None) or (
-            value_id is not None and vschema is None
-        ):
-            if kq or vq:  # keep: raw-binary dead-letter frame
-                out.append(
-                    (
-                        pair,
-                        part.select(
-                            F.col("keyPayload").alias("key"),
-                            F.col("valuePayload").alias("value"),
-                            *[c for c in KAFKA_META_COLS if c in part.columns],
-                            "keySchemaId",
-                            "valueSchemaId",
-                        ),
-                    )
-                )
-            continue
-        # the raw binary key/value columns are superseded by the typed
-        # structs about to take their names
-        part = part.drop("key", "value")
-        if value_id is not None:
-            part = decode_protobuf_python(
-                part, "valuePayload", vschema,
-                message_name, out_col="value",
-            )
-        else:
-            part = part.withColumn("value", F.lit(None))
-        if key_id is not None:
-            part = decode_protobuf_python(
-                part, "keyPayload", kschema,
-                key_message_name, out_col="key", package="jibarokey",
-            )
-        else:
-            part = part.withColumn("key", F.lit(None).cast("string"))
-        keep = (
-            ["key", "value"]
-            + [c for c in KAFKA_META_COLS if c in part.columns]
-            + ["keySchemaId", "valueSchemaId"]
-        )
-        out.append(((key_id, value_id), part.select(*keep)))
-    return out
-
-
-def encode_confluent_protobuf_python(
-    df: DataFrame,
-    key_cols: list,
-    registry,
-    topic: str,
-) -> DataFrame:
-    """Reverse path on the Python protobuf codec — the missing half of
-    the jar-free publisher (reference ``kafka.py:86-109`` protobuf
-    branch; the Avro twin is
-    :func:`jibaro_spark.codecs.avro_python.encode_confluent_avro_python`):
-    derive proto3 schema text from the DataFrame, register under
-    ``{topic}-key``/``{topic}-value`` as ``PROTOBUF`` subjects, encode
-    both sides with the Arrow mapper, and assemble Confluent frames
-    (magic ++ id ++ message-index ``0x00`` ++ payload).  Output is
-    consumable by :func:`decode_confluent_batch_protobuf_python` with
-    resolver ``proto_schema_to_struct(registry.get_schema(id))`` —
-    closing the jar-free protobuf produce→consume loop end to end.
-
-    Scale shape: map-only (two Arrow passes fused into one stage), no
-    shuffle; registry calls happen once on the driver at plan time.
-    """
-    from pyspark.sql import functions as F
-
-    from jibaro_spark.codecs.confluent import wire_encode
-    from jibaro_spark.codecs.schemas import to_proto_schema
-
-    value_cols = [c for c in df.columns if c not in key_cols]
-    value_schema_t = df.select(*value_cols).schema
-    value_text = to_proto_schema(value_schema_t, "Envelope")
-    value_id = registry.register(f"{topic}-value", value_text, "PROTOBUF")
-
-    staged = df.select(
-        F.struct(*value_cols).alias("__v"),
-        *([F.struct(*key_cols).alias("__k")] if key_cols else []),
-    )
-    staged = encode_protobuf_python(
-        staged, "__v", value_schema_t, "Envelope", out_col="__vp"
-    )
-    value_bin = wire_encode(F.col("__vp"), value_id, "protobuf")
-
-    if key_cols:
-        key_schema_t = df.select(*key_cols).schema
-        key_text = to_proto_schema(key_schema_t, "Key")
-        key_id = registry.register(f"{topic}-key", key_text, "PROTOBUF")
-        staged = encode_protobuf_python(
-            staged, "__k", key_schema_t, "Key", out_col="__kp",
-            package="jibarokey",
-        )
-        key_bin = wire_encode(F.col("__kp"), key_id, "protobuf")
-    else:
-        key_bin = F.lit(None).cast("binary")
-    return staged.select(key_bin.alias("key"), value_bin.alias("value"))

@@ -1,21 +1,30 @@
 #!/usr/bin/env python
-"""Time and/or capture formatted plans for a subset of declared queries.
+"""Time, capture or sweep the formatted plans of declared queries.
 
 Usage:
     python scripts/plan_tools.py time  q_a q_b ...   [--runs N]
     python scripts/plan_tools.py plan  q_a q_b ...   [--tag before|after] [--plan-dir DIR]
     python scripts/plan_tools.py both  q_a q_b ...   [--sf-dir DIR]
+    python scripts/plan_tools.py sweep [q_a q_b ...]
 
 Timing methodology matches bench.py exactly: noop sink, N runs
 (default 2), report min.  Plans go to <plan-dir>/<name>_<tag>.txt
 (default plan dir: ./plans, git-ignored).  The fixture directory is
 --sf-dir, or $SPARK_GRAFT_SF_DIR when the flag is left out.
+
+``sweep`` (default: bench.py's headline queries) counts physical-plan
+nodes per query — parquet scans, exchanges, windows, joins, Python
+evals — one JSON line each, then lists the worst scan amplification
+(scans far above the distinct tables touched: a likely duplicated
+subtree).  Plan-only: probe jobs that run at construction execute,
+nothing is timed.
 """
 from __future__ import annotations
 
 import argparse
 import json
 import os
+import re
 import sys
 import time
 
@@ -23,10 +32,54 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 
+def _plan_text(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
+def _plan_counts(name: str, txt: str) -> dict:
+    tables = len(set(re.findall(r"Scan parquet[^\n]*?(\w+)\.parquet", txt))) or len(
+        set(re.findall(r"file:[^\n]*/(\w+)\.parquet", txt))
+    )
+    return {
+        "q": name,
+        "scans": len(re.findall(r"Scan parquet", txt)),
+        "tables": tables,
+        "exch": len(re.findall(r"Exchange", txt)),
+        "reuse": len(re.findall(r"ReusedExchange", txt)),
+        "win": len(re.findall(r"\bWindow\b", txt)),
+        "smj": len(re.findall(r"SortMergeJoin", txt)),
+        "bhj": len(re.findall(r"BroadcastHashJoin", txt)),
+        "bnlj": len(re.findall(r"BroadcastNestedLoopJoin", txt)),
+        "cart": len(re.findall(r"CartesianProduct", txt)),
+        "pyeval": len(re.findall(r"(BatchEvalPython|ArrowEvalPython)", txt)),
+    }
+
+
+def _sweep(spark, sf_dir: str, names: list[str]) -> None:
+    from jibaro_spark.queries import REGISTRY
+
+    rows = []
+    for name in names:
+        try:
+            txt = _plan_text(REGISTRY[name].fn(spark, sf_dir))
+        except Exception as e:  # noqa: BLE001
+            print(f"{name}: ERROR {e}", flush=True)
+            continue
+        rows.append(_plan_counts(name, txt))
+        print(json.dumps(rows[-1], separators=(",", ":")), flush=True)
+    rows.sort(key=lambda r: -(r["scans"] - r["tables"]))
+    print("== top scan amplification ==", flush=True)
+    for r in rows[:15]:
+        print(f"{r['scans']:3d} scans / {r['tables']} tables  exch={r['exch']} "
+              f"win={r['win']}  {r['q']}", flush=True)
+
+
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("mode", choices=("time", "plan", "both"))
-    ap.add_argument("names", nargs="+")
+    ap.add_argument("mode", choices=("time", "plan", "both", "sweep"))
+    ap.add_argument("names", nargs="*")
     ap.add_argument("--runs", type=int, default=2)
     ap.add_argument("--tag", default="before")
     ap.add_argument("--plan-dir", default="plans")
@@ -34,6 +87,8 @@ def main() -> None:
     args = ap.parse_args()
     if not args.sf_dir:
         ap.error("no fixture: pass --sf-dir or set SPARK_GRAFT_SF_DIR")
+    if not args.names and args.mode != "sweep":
+        ap.error(f"{args.mode} needs at least one query name")
     sf_dir = args.sf_dir
 
     from jibaro_spark.session import build_session
@@ -49,15 +104,19 @@ def main() -> None:
         except Exception:
             pass
 
+    if args.mode == "sweep":
+        from bench import HEADLINE
+
+        _sweep(spark, sf_dir, args.names or HEADLINE)
+        spark.stop()
+        return
+
     timings: dict[str, float] = {}
     for name in args.names:
         dq = REGISTRY[name]
         if args.mode in ("plan", "both"):
             os.makedirs(args.plan_dir, exist_ok=True)
-            df = dq.fn(spark, sf_dir)
-            txt = df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore
-                df._jdf.queryExecution(), "formatted"
-            )
+            txt = _plan_text(dq.fn(spark, sf_dir))
             out = os.path.join(args.plan_dir, f"{name}_{args.tag}.txt")
             with open(out, "w") as f:
                 f.write(txt)

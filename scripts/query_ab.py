@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Round-12 within-session A/B harness.
+"""Within-session A/B of declared queries under two values of a SQL conf.
 
 Full-bench totals on this box swing with neighbor load (measured
 back-to-back full benches at 180/213/293 s with nonzero steal time),
@@ -10,7 +10,9 @@ observed during the run.
 
 Modes are two values of a runtime SQL conf.  Usage:
 
-    python scripts/r12_ab.py --conf KEY ON_VAL OFF_VAL q_a ... [--rounds N]
+    python scripts/query_ab.py --conf KEY ON_VAL OFF_VAL q_a ... [--rounds N]
+
+The fixture directory is $SPARK_GRAFT_SF_DIR.
 """
 from __future__ import annotations
 
@@ -44,10 +46,12 @@ def main() -> None:
         else:
             names.append(args[i]); i += 1
 
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR")
+    if not sf_dir:
+        sys.exit("no fixture: set SPARK_GRAFT_SF_DIR")
     from jibaro_spark.session import build_session
 
-    spark = build_session(app_name="r12_ab")
+    spark = build_session(app_name="query_ab")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     from jibaro_spark.queries import REGISTRY
 

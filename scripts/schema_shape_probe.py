@@ -147,6 +147,7 @@ def scenario_direct_vs_staged_identity(spark, root):
     """S1b: the staged route must be bit-identical to the direct route
     on a mixed batch (null keys, tombstones, several ids) — the
     adaptive-plan discipline (same answer in both regimes)."""
+    from jibaro_spark.codecs import confluent
     from jibaro_spark.codecs.confluent import (
         InMemorySchemaRegistry,
         decode_confluent_batch_pairs,
@@ -177,12 +178,17 @@ def scenario_direct_vs_staged_identity(spark, root):
             decode_confluent_batch_pairs(batch, reg, "json", on_tombstone=tomb)
         )
         scratch = os.path.join(root, f"dvi_{tomb}")
-        staged = _snap(
-            decode_confluent_batch_pairs(
-                batch, reg, "json", on_tombstone=tomb,
-                scratch_dir=scratch, spill_threshold=2,
+        # a low spill bound forces the staged route (pair_frames reads
+        # SPILL_THRESHOLD when it routes)
+        saved, confluent.SPILL_THRESHOLD = confluent.SPILL_THRESHOLD, 2
+        try:
+            staged = _snap(
+                decode_confluent_batch_pairs(
+                    batch, reg, "json", on_tombstone=tomb, scratch_dir=scratch
+                )
             )
-        )
+        finally:
+            confluent.SPILL_THRESHOLD = saved
         checks.append((f"s1b_identity_{tomb}", direct == staged, ""))
         shutil.rmtree(scratch, ignore_errors=True)
     return checks

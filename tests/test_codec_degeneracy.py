@@ -98,15 +98,17 @@ def test_unknown_schema_policy_validated(spark, reg):
         )
 
 
-def test_unknown_schema_python_lanes(spark):
+@pytest.mark.parametrize(
+    "content_type, payload",
+    [
+        ("avro-python", b"garbage"),
+        # protobuf framing carries a message-index varint (0x00 =
+        # indexes [0]) between the id and the payload
+        ("protobuf-python", b"\x00garbage"),
+    ],
+)
+def test_unknown_schema_python_lanes(spark, content_type, payload):
     """Same policy on the jar-free Avro and protobuf lanes."""
-    from jibaro_spark.codecs.avro_python import (
-        decode_confluent_batch_avro_python,
-    )
-    from jibaro_spark.codecs.proto_python import (
-        decode_confluent_batch_protobuf_python,
-    )
-
     known = T.StructType([T.StructField("id", T.LongType(), True)])
 
     def resolver(role, sid):
@@ -114,18 +116,18 @@ def test_unknown_schema_python_lanes(spark):
             return known
         raise KeyError(sid)
 
-    for fn, payload in (
-        (decode_confluent_batch_avro_python, b"garbage"),
-        # protobuf framing carries a message-index varint (0x00 =
-        # indexes [0]) between the id and the payload
-        (decode_confluent_batch_protobuf_python, b"\x00garbage"),
-    ):
-        batch = _kafka(spark, [(None, _frame(999, payload))])
-        with pytest.raises(ValueError, match="unknown schema id 999"):
-            fn(batch, resolver)
-        kept = dict(fn(batch, resolver, on_unknown_schema="keep"))
-        assert bytes(kept[(None, 999)].collect()[0]["value"]) == b"garbage"
-        assert dict(fn(batch, resolver, on_unknown_schema="skip")) == {}
+    batch = _kafka(spark, [(None, _frame(999, payload))])
+
+    def decode(**kw):
+        return decode_confluent_batch_pairs(
+            batch, None, content_type, schema_resolver=resolver, **kw
+        )
+
+    with pytest.raises(ValueError, match="unknown schema id 999"):
+        decode()
+    kept = dict(decode(on_unknown_schema="keep"))
+    assert bytes(kept[(None, 999)].collect()[0]["value"]) == b"garbage"
+    assert dict(decode(on_unknown_schema="skip")) == {}
 
 
 def test_invalid_utf8_payload_registered_id(spark, reg):

@@ -7,6 +7,7 @@ from __future__ import annotations
 import json
 import struct
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -227,7 +228,7 @@ def test_schema_partitioned_decode(spark):
         ),
     ]
     batch = spark.createDataFrame(rows, KAFKA_SCHEMA)
-    parts = cc.decode_confluent_batch(batch, reg, "json")
+    parts = [df for _, df in cc.decode_confluent_batch_pairs(batch, reg, "json")]
     assert len(parts) == 3  # (null,v1), (key,v1), (key,v2)
     by_ids = {
         (r.keySchemaId, r.valueSchemaId): r
@@ -242,40 +243,74 @@ def test_schema_partitioned_decode(spark):
     assert by_ids[(key_id, v1)].topic == "dbserver1.inventory.products"
 
 
-def test_decode_tombstones(spark):
+#: lanes that run without the spark-avro / spark-protobuf jars
+JAR_FREE_LANES = ["json", "avro-python", "protobuf-python"]
+
+
+def _lane(content_type: str) -> None:
+    if content_type == "protobuf-python":
+        from jibaro_spark.codecs import proto_python as P
+
+        if not P.has_protobuf_runtime():
+            pytest.skip("no google.protobuf runtime found")
+
+
+def _with_kafka_meta(framed, offset: int):
+    import datetime
+
+    return framed.select(
+        "key", "value",
+        F.lit("dbserver1.inventory.products").alias("topic"),
+        F.lit(0).alias("partition"), F.lit(offset).cast("long").alias("offset"),
+        F.lit(datetime.datetime(2026, 1, 1)).alias("timestamp"),
+        F.lit(0).alias("timestampType"),
+    )
+
+
+@pytest.mark.parametrize("content_type", JAR_FREE_LANES)
+def test_decode_tombstones(spark, content_type):
     """Kafka tombstones (null value, the Debezium post-delete
     compaction marker) must not crash the schema-pair sort or hit the
-    registry with a null id (ADVICE r1 medium)."""
+    registry with a null id (ADVICE r1 medium) — on every lane, with
+    frames from the publisher and reader schemas from the default
+    resolver."""
+    _lane(content_type)
     reg = cc.InMemorySchemaRegistry()
-    key_id = reg.register("t-key", "id INT")
-    v1 = reg.register("t-value", "op STRING, id INT")
-    rows = [
-        kafka_row(
-            frame(json.dumps({"id": 1}).encode(), key_id),
-            frame(json.dumps({"op": "d", "id": 1}).encode(), v1),
-            offset=0,
-        ),
+    src = spark.createDataFrame([(1, "d")], "id long, op string")
+    framed = cc.encode_confluent(src, ["id"], reg, "t", content_type)
+    batch = _with_kafka_meta(framed, 0).unionByName(
         # tombstone: same key, null value
-        kafka_row(frame(json.dumps({"id": 1}).encode(), key_id), None, offset=1),
-    ]
-    batch = spark.createDataFrame(rows, KAFKA_SCHEMA)
+        _with_kafka_meta(
+            framed.select("key", F.lit(None).cast("binary").alias("value")), 1
+        )
+    )
+    ((key_id, v1),) = {
+        (r.k, r.v)
+        for r in framed.select(
+            cc.schema_id_of("key").alias("k"), cc.schema_id_of("value").alias("v")
+        ).collect()
+    }
 
     # default: tombstones dropped, delete event decoded
-    parts = cc.decode_confluent_batch(batch, reg, "json")
-    got = [r for p in parts for r in p.collect()]
+    parts = cc.decode_confluent_batch_pairs(batch, reg, content_type)
+    got = [r for _, p in parts for r in p.collect()]
     assert len(got) == 1 and got[0].value.op == "d"
 
     # keep: emitted with a null binary value, schema ids preserved
-    parts = cc.decode_confluent_batch(batch, reg, "json", on_tombstone="keep")
-    got = {(r.keySchemaId, r.valueSchemaId): r for p in parts for r in p.collect()}
-    assert got[(key_id, None)].value is None
-    assert got[(key_id, None)].key.id == 1
-    assert got[(key_id, v1)].value.op == "d"
+    parts = dict(
+        cc.decode_confluent_batch_pairs(batch, reg, content_type, on_tombstone="keep")
+    )
+    assert set(parts) == {(key_id, v1), (key_id, None)}
+    assert dict(parts[(key_id, None)].dtypes)["value"] == "binary"
+    tomb = parts[(key_id, None)].collect()
+    assert len(tomb) == 1 and tomb[0].value is None
+    assert tomb[0].key.id == 1 and tomb[0].offset == 1
+    assert parts[(key_id, v1)].collect()[0].value.op == "d"
 
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="tombstone"):
-        cc.decode_confluent_batch(batch, reg, "json", on_tombstone="error")
+    with pytest.raises(ValueError, match="tombstone"):
+        cc.decode_confluent_batch_pairs(
+            batch, reg, content_type, on_tombstone="error"
+        )
 
 
 def test_parse_json_quarantine(spark):
@@ -332,11 +367,23 @@ def test_encode_confluent_roundtrip(spark):
     assert got == [(1, "a", 1.5), (2, "b", 2.5)]
 
 
-def test_encode_keyless(spark):
+@pytest.mark.parametrize("content_type", JAR_FREE_LANES)
+def test_encode_keyless(spark, content_type):
+    """A keyless topic publishes a null key and decodes back to a null
+    key typed binary (the writable null type) on every lane."""
+    _lane(content_type)
     reg = cc.InMemorySchemaRegistry()
     df = spark.createDataFrame([(1,)], "x int")
-    framed = cc.encode_confluent(df, [], reg, "t", "json")
+    framed = cc.encode_confluent(df, [], reg, "t", content_type)
     assert framed.collect()[0].key is None
+
+    ((pair, decoded),) = cc.decode_confluent_batch_pairs(
+        _with_kafka_meta(framed, 0), reg, content_type
+    )
+    assert pair[0] is None
+    assert dict(decoded.dtypes)["key"] == "binary"
+    row = decoded.collect()[0]
+    assert row.key is None and row.value.x == 1
 
 
 def test_http_schema_registry_round_trip():

@@ -192,8 +192,13 @@ def test_registry_schema_round_trip(spark):
     back = avro_schema_to_struct(to_avro_schema(ENV_SCHEMA, "Envelope"))
     assert back == ENV_SCHEMA
 
-    # and a registry-driven decode: resolver = fetch text → struct
-    from jibaro_spark.codecs.confluent import InMemorySchemaRegistry, wire_encode
+    # and a registry-driven decode: the default resolver is fetch
+    # text → avro_schema_to_struct
+    from jibaro_spark.codecs.confluent import (
+        InMemorySchemaRegistry,
+        decode_confluent_batch_pairs,
+        wire_encode,
+    )
 
     reg = InMemorySchemaRegistry()
     sid = reg.register("products-value", to_avro_schema(ENV_SCHEMA, "Envelope"))
@@ -209,10 +214,7 @@ def test_registry_schema_round_trip(spark):
         F.lit(0).cast("long").alias("offset"),
         F.current_timestamp().alias("timestamp"), F.lit(0).alias("timestampType"),
     )
-    parts = A.decode_confluent_batch_avro_python(
-        framed,
-        lambda role, s_id: avro_schema_to_struct(reg.get_schema(s_id)),
-    )
+    parts = decode_confluent_batch_pairs(framed, reg, "avro-python")
     assert len(parts) == 1
     row = parts[0][1].collect()[0]
     assert row["value"]["after"]["id"] == 3
@@ -225,8 +227,10 @@ def test_publish_consume_loop_avro_python(spark, tmp_path):
     and the consumer decodes them with schemas RESOLVED FROM THE
     REGISTRY — reference curated2kafka_avro.py + raw2staged in one."""
     from jibaro_spark.catalog import Catalog, Layer, TableRef
-    from jibaro_spark.codecs.confluent import InMemorySchemaRegistry
-    from jibaro_spark.codecs.schemas import avro_schema_to_struct
+    from jibaro_spark.codecs.confluent import (
+        InMemorySchemaRegistry,
+        decode_confluent_batch_pairs,
+    )
     from jibaro_spark.config import Settings
     from jibaro_spark.streaming import pipeline as pl
 
@@ -243,14 +247,15 @@ def test_publish_consume_loop_avro_python(spark, tmp_path):
     )
     assert dict(framed.dtypes) == {"key": "binary", "value": "binary"}
 
-    parts = A.decode_confluent_batch_avro_python(
+    parts = decode_confluent_batch_pairs(
         framed.select(
             "key", "value", F.lit("products").alias("topic"),
             F.lit(0).alias("partition"), F.lit(0).cast("long").alias("offset"),
             F.current_timestamp().alias("timestamp"),
             F.lit(0).alias("timestampType"),
         ),
-        lambda role, sid: avro_schema_to_struct(reg.get_schema(sid)),
+        reg,
+        "avro-python",
     )
     assert len(parts) == 1
     rows = {

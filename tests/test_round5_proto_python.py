@@ -127,7 +127,10 @@ def test_schema_partitioned_python_decode_mixed_versions(spark):
     """A batch mixing TWO value schema versions (v2 adds a field)
     decodes pair-partitioned — each frame with exactly its schema —
     the reference's R7 semantics on the Python codec."""
-    from jibaro_spark.codecs.confluent import wire_encode
+    from jibaro_spark.codecs.confluent import (
+        decode_confluent_batch_pairs,
+        wire_encode,
+    )
 
     key_schema = T.StructType([T.StructField("id", T.LongType())])
     v1 = T.StructType([T.StructField("id", T.LongType()),
@@ -158,8 +161,9 @@ def test_schema_partitioned_python_decode_mixed_versions(spark):
         framed(v2, 11, [{"id": 2, "name": "b", "score": 9.5}])
     )
     schemas = {("key", 1): key_schema, ("value", 10): v1, ("value", 11): v2}
-    parts = P.decode_confluent_batch_protobuf_python(
-        batch, lambda role, sid: schemas[(role, sid)]
+    parts = decode_confluent_batch_pairs(
+        batch, None, "protobuf-python",
+        schema_resolver=lambda role, sid: schemas[(role, sid)],
     )
     assert [p for p, _ in parts] == [(1, 10), (1, 11)]
     d10 = parts[0][1].collect()[0]
@@ -317,10 +321,13 @@ def test_publish_consume_loop_protobuf_python(spark, tmp_path):
     reference kafka.py:86-109 protobuf branch): publish_table encodes a
     curated table to Confluent protobuf frames — registering derived
     proto3 text as PROTOBUF subjects — and the consumer decodes them with
-    reader schemas RESOLVED FROM THE REGISTRY via proto_schema_to_struct."""
+    reader schemas RESOLVED FROM THE REGISTRY via proto_schema_to_struct
+    (the lane's default resolver)."""
     from jibaro_spark.catalog import Catalog, Layer, TableRef
-    from jibaro_spark.codecs.confluent import InMemorySchemaRegistry
-    from jibaro_spark.codecs.schemas import proto_schema_to_struct
+    from jibaro_spark.codecs.confluent import (
+        InMemorySchemaRegistry,
+        decode_confluent_batch_pairs,
+    )
     from jibaro_spark.config import Settings
     from jibaro_spark.streaming import pipeline as pl
 
@@ -342,16 +349,16 @@ def test_publish_consume_loop_protobuf_python(spark, tmp_path):
     first = framed.collect()[0]
     assert bytes(first["value"])[:1] == b"\x00"  # magic byte
 
-    parts = P.decode_confluent_batch_protobuf_python(
+    # default resolver: registry text → proto_schema_to_struct
+    parts = decode_confluent_batch_pairs(
         framed.select(
             "key", "value", F.lit("products_pb").alias("topic"),
             F.lit(0).alias("partition"), F.lit(0).cast("long").alias("offset"),
             F.current_timestamp().alias("timestamp"),
             F.lit(0).alias("timestampType"),
         ),
-        lambda role, sid: proto_schema_to_struct(reg.get_schema(sid)),
-        message_name="Envelope",
-        key_message_name="Key",
+        reg,
+        "protobuf-python",
     )
     assert len(parts) == 1
     rows = {
