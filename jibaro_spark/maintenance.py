@@ -158,32 +158,41 @@ def append_history_metrics(
 
     Delta path appends the latest ``DeltaTable.history(1)`` row, and
     its schema evolves with ``mergeSchema`` like the reference (K2/K8).
-    The txlog and bare-parquet paths append one metrics row as one
-    parquet file: the row is built on the JVM (:func:`_history_row`),
-    so the append runs no Python job and writes no empty part files.
+
+    On a ``jibaro_spark.txlog`` table the whole append runs on the
+    driver with no Spark job, as ``generate_manifest`` does: the row
+    is the latest commit's version/operation/``numAdded`` plus
+    ``numFiles``/``sizeBytes`` of THAT commit's snapshot (from the
+    log's add actions — files removed but not yet vacuumed do not
+    count, as in the reference's Delta snapshot), written as one
+    parquet file with pyarrow (:func:`_write_history_row`).
+
+    The bare-parquet path appends one metrics row over the directory's
+    file listing as one parquet file: the row is built on the JVM
+    (:func:`_history_row`), so the append runs no Python job and
+    writes no empty part files.
     """
     from jibaro_spark import txlog
 
     path = catalog.path(ref)
     hist_path = catalog.history_path(ref)
-    stats = table_stats(spark, path)
-    head = txlog.latest_version(path)
-    if head is not None:
-        # txlog tables have REAL commit history — append the latest
-        # commit's metadata (version/operation/num_added), the same
-        # row shape the Delta path gets from DeltaTable.history(1);
+    if txlog.latest_version(path) is not None:
         # limit=1 reads ONE log file, not the whole history per merge
         c = txlog.history(path, limit=1)[0]
-        row = {
-            "version": int(c["version"]),
-            "operation": str(c["operation"]),
-            "numAdded": int(c.get("num_added", 0)),
-            "numFiles": stats.num_files,
-            "sizeBytes": stats.size_bytes,
-            **({k: str(v) for k, v in (extra or {}).items()}),
-        }
-        _history_row(spark, row).write.mode("append").parquet(hist_path)
+        version = int(c["version"])
+        _write_history_row(
+            hist_path,
+            {
+                "version": version,
+                "operation": str(c["operation"]),
+                "numAdded": int(c.get("num_added", 0)),
+                "numFiles": len(txlog.snapshot_files(path, version)),
+                "sizeBytes": txlog.snapshot_bytes(path, version),
+                **({k: str(v) for k, v in (extra or {}).items()}),
+            },
+        )
         return
+    stats = table_stats(spark, path)
     if has_delta(spark):
         from delta.tables import DeltaTable
 
@@ -203,6 +212,38 @@ def append_history_metrics(
         **(extra or {}),
     }
     _history_row(spark, row).write.mode("append").parquet(hist_path)
+
+
+def _write_history_row(hist_path: str, row: dict) -> None:
+    """Append ``row`` plus a ``recordedAt`` timestamp to the local
+    history table at ``hist_path`` as one parquet file written with
+    pyarrow.  The columns match :func:`_history_row`'s: keys in sorted
+    order, ints as ``long``, the rest as ``string``, then
+    ``recordedAt`` as a UTC microsecond timestamp (Spark's
+    ``timestamp``).  The file is written under a ``.``-prefixed name,
+    which readers skip, and renamed into place, so no reader sees a
+    partial file."""
+    import datetime
+    import os
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    cols = {
+        k: pa.array([v], pa.int64() if type(v) is int else pa.string())
+        for k, v in sorted(row.items())
+    }
+    cols["recordedAt"] = pa.array(
+        [datetime.datetime.now(datetime.timezone.utc)], pa.timestamp("us", tz="UTC")
+    )
+    os.makedirs(hist_path, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(hist_path, f".{name}")
+    # no ARROW:schema footer entry: Spark does not read it, and it
+    # would make a 2.4 KB file 3.1 KB
+    pq.write_table(pa.table(cols), tmp, store_schema=False)
+    os.replace(tmp, os.path.join(hist_path, name))
 
 
 def _history_row(spark: SparkSession, row: dict) -> DataFrame:
@@ -351,9 +392,10 @@ def _table_base(spark: SparkSession, path: str) -> "tuple[DataFrame, list[str] |
     from jibaro_spark import txlog
 
     local = path.replace("file:", "")
-    if txlog.latest_version(local) is not None:
-        files = txlog.snapshot_files(local)
-        return spark.read.parquet(*files), files
+    head = txlog.latest_version(local)
+    if head is not None:
+        files = txlog.snapshot_files(local, head)
+        return txlog.read_versioned(spark, local, head), files
     if os.path.isdir(os.path.join(local, "_delta_log")) and has_delta(spark):
         df = spark.read.format("delta").load(path)
         return df, sorted(set(df.inputFiles()))
@@ -1025,8 +1067,9 @@ def _delete_by_keys_versioned(
     sets."""
     from jibaro_spark import txlog
 
-    files = txlog.snapshot_files(table)
-    base = spark.read.parquet(*files)
+    head = txlog.latest_version(table)
+    files = txlog.snapshot_files(table, head)
+    base = txlog.read_versioned(spark, table, head)
     by_base = {f.rsplit("/", 1)[-1]: f for f in files}
     candidates: "list[str] | None" = None
     probed = _bloom_candidates(spark, table, col, values, base.schema[col].dataType)

@@ -33,6 +33,20 @@ checkpoints (every checkpoint below the newest one that still serves
 the retained window) so the log dir holds O(retained) checkpoint
 files, not O(history).  Data-plane reads stay fully distributed: the
 resolved file list feeds ``spark.read.parquet(*files)``.
+
+**Snapshot schema in the log** (Delta's ``metaData`` action): every
+commit carries ``{"metaData": {"schema": <StructType JSON>}}`` and
+every checkpoint carries the schema of its version forward, so
+:func:`read_versioned` hands the schema to the reader and building the
+snapshot DataFrame runs no Spark job (no footer inference).  The
+recorded schema is the writer's ``df.schema`` with every field
+nullable, which is what Spark reports for any parquet read.  An
+``overwrite`` or a table's first commit records it; an ``append`` or
+``replace`` records it only when it equals the snapshot's recorded
+schema, and otherwise records ``{"schema": null}``.  A snapshot whose
+schema is null, or whose newest commit has no ``metaData`` (logs
+written before the action existed), is read with footer inference as
+before.
 """
 
 from __future__ import annotations
@@ -44,6 +58,7 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 LOG_DIR = "_jibaro_log"
 _VERSION_WIDTH = 20
@@ -145,25 +160,26 @@ def _latest_checkpoint_at_or_below(table: str, version: int) -> int | None:
 def write_checkpoint(table: str, version: int | None = None) -> int:
     """Write the consolidated live-file snapshot at ``version``
     (default head) as ``<version>.checkpoint.json`` — one add action
-    per live file (preserving the add metadata) plus one ``txns``
-    action carrying every app's streaming-transaction watermark, so
-    both readers AND :func:`latest_txn_version` resolve from the
-    checkpoint.  Atomic create-if-absent (two racing committers
-    produce identical content, so the loser just skips).  Returns the
-    checkpointed version."""
+    per live file (preserving the add metadata), one ``txns`` action
+    carrying every app's streaming-transaction watermark, and the
+    ``metaData`` action of the snapshot's schema, so readers AND
+    :func:`latest_txn_version` resolve from the checkpoint.  Atomic
+    create-if-absent (two racing committers produce identical content,
+    so the loser just skips).  Returns the checkpointed version."""
     head = latest_version(table)
     if head is None:
         raise FileNotFoundError(f"no {LOG_DIR} at {table}")
     v = head if version is None else version
     if v > head or v < 0:
         raise ValueError(f"version {v} out of range [0, {head}]")
-    live, txns = _replay_state(table, v)
+    live, txns, schema = _replay_state(table, v)
     tmp = os.path.join(_log_path(table), f"_tmp_{uuid.uuid4().hex[:12]}.json")
     with open(tmp, "w") as f:
         for path in sorted(live):
             f.write(json.dumps({"add": live[path]}) + "\n")
         if txns:
             f.write(json.dumps({"txns": txns}) + "\n")
+        f.write(json.dumps({"metaData": {"schema": schema}}) + "\n")
     target = _checkpoint_file(table, v)
     try:
         os.link(tmp, target)
@@ -201,12 +217,15 @@ def write_checkpoint(table: str, version: int | None = None) -> int:
 
 def _replay_state(
     table: str, version: int
-) -> "tuple[dict[str, dict], dict[str, int]]":
-    """(live ``path -> add-metadata``, ``app -> txn watermark``) at
-    ``version``: start from the newest covering checkpoint (if any),
-    replay only the commits after it."""
+) -> "tuple[dict[str, dict], dict[str, int], dict | None]":
+    """(live ``path -> add-metadata``, ``app -> txn watermark``,
+    recorded schema JSON or None) at ``version``: start from the newest
+    covering checkpoint (if any), replay only the commits after it.
+    Each commit sets the schema from its ``metaData`` action; a commit
+    without one leaves it unknown (None)."""
     live: dict[str, dict] = {}
     txns: dict[str, int] = {}
+    schema = None
     start = 0
     ckpt = _latest_checkpoint_at_or_below(table, version)
     if ckpt is not None:
@@ -220,10 +239,15 @@ def _replay_state(
                         txns.update(
                             {k: int(w) for k, w in a["txns"].items()}
                         )
+                    elif "metaData" in a:
+                        schema = a["metaData"]["schema"]
         start = ckpt + 1
     for i in range(start, version + 1):
+        schema = None
         for a in _read_actions(table, i):
-            if "add" in a:
+            if "metaData" in a:
+                schema = a["metaData"]["schema"]
+            elif "add" in a:
                 live[a["add"]["path"]] = a["add"]
             elif "remove" in a:
                 live.pop(a["remove"]["path"], None)
@@ -233,11 +257,7 @@ def _replay_state(
                     prev = txns.get(txn["app"])
                     w = int(txn["version"])
                     txns[txn["app"]] = w if prev is None or w > prev else prev
-    return live, txns
-
-
-def _replay_live(table: str, version: int) -> "dict[str, dict]":
-    return _replay_state(table, version)[0]
+    return live, txns, schema
 
 
 def _read_actions(table: str, version: int) -> list[dict]:
@@ -245,14 +265,19 @@ def _read_actions(table: str, version: int) -> list[dict]:
         return [json.loads(line) for line in f if line.strip()]
 
 
-def _snapshot_live(table: str, version: int | None) -> "dict[str, dict]":
+def _snapshot_state(
+    table: str, version: int | None
+) -> "tuple[dict[str, dict], dict | None]":
+    """(live ``path -> add-metadata``, recorded schema JSON or None)
+    of the snapshot at ``version`` (default: latest)."""
     head = latest_version(table)
     if head is None:
         raise FileNotFoundError(f"no {LOG_DIR} at {table}")
     v = head if version is None else version
     if v > head or v < 0:
         raise ValueError(f"version {v} out of range [0, {head}]")
-    return _replay_live(table, v)
+    live, _, schema = _replay_state(table, v)
+    return live, schema
 
 
 def snapshot_files(table: str, version: int | None = None) -> list[str]:
@@ -260,24 +285,29 @@ def snapshot_files(table: str, version: int | None = None) -> list[str]:
     (default: latest) — checkpoint-accelerated log replay: at most
     ``CHECKPOINT_INTERVAL``-ish commit files are read past the newest
     covering checkpoint, independent of total table history."""
-    return [os.path.join(table, p) for p in sorted(_snapshot_live(table, version))]
+    return [os.path.join(table, p) for p in sorted(_snapshot_state(table, version)[0])]
 
 
 def snapshot_bytes(table: str, version: int | None = None) -> int:
     """Data bytes of the snapshot at ``version`` (default: latest):
     the sum of the ``size`` each add action records, from the same log
     replay as :func:`snapshot_files` — no stat per data file."""
-    return sum(int(a["size"]) for a in _snapshot_live(table, version).values())
+    return sum(int(a["size"]) for a in _snapshot_state(table, version)[0].values())
 
 
 def read_versioned(
     spark: SparkSession, table: str, version: int | None = None
 ) -> DataFrame:
-    """Snapshot-isolated read (time travel with ``version``)."""
-    files = snapshot_files(table, version)
-    if not files:
+    """Snapshot-isolated read (time travel with ``version``).  With a
+    recorded schema (module docstring) the reader gets it up front and
+    no Spark job runs; without one Spark infers it from the footers."""
+    live, schema = _snapshot_state(table, version)
+    if not live:
         raise ValueError(f"version has no data files: {table}@{version}")
-    return spark.read.parquet(*files)
+    reader = spark.read if schema is None else spark.read.schema(
+        StructType.fromJson(schema)
+    )
+    return reader.parquet(*[os.path.join(table, p) for p in sorted(live)])
 
 
 def latest_txn_version(table: str, app: str) -> int | None:
@@ -309,10 +339,29 @@ def latest_txn_version(table: str, app: str) -> int | None:
             if txn and txn.get("app") == app:
                 return int(txn["version"])
     if ckpt is not None:
-        _, txns = _replay_state(table, ckpt)
+        _, txns, _ = _replay_state(table, ckpt)
         if app in txns:
             return txns[app]
     return None
+
+
+def _nullable(t):
+    """A schema JSON value with every field, array element and map
+    value nullable — the form Spark reports for a parquet read."""
+    if not isinstance(t, dict):
+        return t
+    if t["type"] == "struct":
+        return {**t, "fields": [
+            {**f, "nullable": True, "type": _nullable(f["type"])} for f in t["fields"]
+        ]}
+    if t["type"] == "array":
+        return {**t, "containsNull": True, "elementType": _nullable(t["elementType"])}
+    if t["type"] == "map":
+        return {
+            **t, "valueContainsNull": True,
+            "keyType": _nullable(t["keyType"]), "valueType": _nullable(t["valueType"]),
+        }
+    return t
 
 
 def write_versioned(
@@ -367,6 +416,7 @@ def write_versioned(
         seen = latest_txn_version(table, txn_app)
         if seen is not None and seen >= txn_version:
             return latest_version(table)
+    schema = _nullable(df.schema.jsonValue())
     os.makedirs(_log_path(table), exist_ok=True)
     staging = os.path.join(table, f"_staging_{uuid.uuid4().hex[:12]}")
     df.write.parquet(staging)
@@ -393,16 +443,20 @@ def write_versioned(
                 return head
         version = 0 if head is None else head + 1
         actions = list(adds)
-        if mode == "overwrite" and head is not None:
+        recorded = schema
+        if head is None:
+            if mode == "replace":
+                raise ValueError(f"mode='replace' on an empty log: {table}")
+        elif mode == "overwrite":
             for p in snapshot_files(table, head):
                 actions.append(
                     {"remove": {"path": os.path.relpath(p, table)}}
                 )
-        elif mode == "replace":
-            if head is None:
-                raise ValueError(f"mode='replace' on an empty log: {table}")
-            live = set(_replay_live(table, head))
-            for p in replace_paths:
+        else:
+            live, _, head_schema = _replay_state(table, head)
+            if head_schema != schema:
+                recorded = None  # mixed schemas: readers infer from footers
+            for p in replace_paths or ():
                 rel = os.path.relpath(p, table) if os.path.isabs(p) else p
                 if rel not in live:
                     raise ValueError(
@@ -418,6 +472,7 @@ def write_versioned(
         }
         if txn_app is not None:
             commit["txn"] = {"app": txn_app, "version": int(txn_version)}
+        actions.append({"metaData": {"schema": recorded}})
         actions.append({"commit": commit})
         tmp = os.path.join(
             _log_path(table), f"_tmp_{uuid.uuid4().hex[:12]}.json"
