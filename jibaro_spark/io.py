@@ -40,9 +40,22 @@ def read_table(
     schema: Any = None,
     **options: Any,
 ) -> DataFrame:
-    """Batch read by coordinates (reference ``readwriter.py:65-117``)."""
+    """Batch read by coordinates (reference ``readwriter.py:65-117``).
+
+    A parquet read goes through the table resolver
+    (``maintenance._snapshot``), so a ``jibaro_spark.txlog`` table
+    returns its live snapshot (with the schema its log records), not
+    the removed-but-not-vacuumed files beside it."""
     fmt = fmt or default_table_format(spark)
     reader = spark.read.format(fmt).options(**options)
+    if fmt == "parquet":
+        from jibaro_spark.maintenance import _snapshot
+
+        snap = _snapshot(spark, catalog.path(ref))
+        if snap.format == "txlog":
+            return reader.schema(
+                schema if schema is not None else snap.df.schema
+            ).load(snap.files)
     if schema is not None:
         reader = reader.schema(schema)
     if fmt in PATH_FORMATS:

@@ -7,7 +7,7 @@ Building the filter is one distributed pass over the dimension keys
 (map-side ``bit_or`` partial aggregation, then a BOUNDED collect of
 ``num_bits/64`` words — 1024 rows at the default 2^16 bits, never
 key-count-sized); probing is a map-only predicate on the fact side
-(``xxhash64`` + ``getbit``, whole-stage-codegen'd, no Python), so the
+(``xxhash64`` + a bit mask, whole-stage-codegen'd, no Python), so the
 expensive exact join's shuffle moves only the surviving slice.
 
 Exactness contract: the bloom is a PREFILTER, not the answer.
@@ -52,6 +52,16 @@ def _positions(key: Column, num_bits: int, num_hashes: int) -> list[Column]:
     ]
 
 
+def _word_bit(pos: Column) -> "tuple[Column, Column]":
+    """(word index, bit mask) of a bit position in the filter's 64-bit
+    words — the layout shared, like :func:`_positions`, by every
+    builder and prober: :func:`bloom_build` here and the per-file
+    ``_bloom`` sidecars of ``jibaro_spark.maintenance``."""
+    return (pos / 64).cast("int"), F.call_function(
+        "shiftleft", F.lit(1).cast("bigint"), (pos % 64).cast("int")
+    )
+
+
 def bloom_build(
     keys: DataFrame,
     key_col: str,
@@ -81,13 +91,9 @@ def bloom_build(
     pos_rows = keys.select(
         F.explode(F.array(*_positions(key, num_bits, num_hashes))).alias("__pos")
     )
+    word_idx, bit = _word_bit(F.col("__pos"))
     words = (
-        pos_rows.select(
-            (F.col("__pos") / 64).cast("int").alias("__word_idx"),
-            F.expr("shiftleft(CAST(1 AS BIGINT), CAST(__pos % 64 AS INT))").alias(
-                "__bit"
-            ),
-        )
+        pos_rows.select(word_idx.alias("__word_idx"), bit.alias("__bit"))
         .groupBy("__word_idx")
         .agg(F.bit_or("__bit").alias("__word"))
         .collect()
@@ -106,7 +112,7 @@ def bloom_might_contain(
 ) -> Column:
     """Membership-test predicate column: true iff all ``num_hashes``
     bits for ``key`` are set in ``words``.  Pure JVM expression
-    (array literal + ``element_at`` + ``getbit``) — stays inside
+    (array literal + ``element_at`` + a bit mask) — stays inside
     whole-stage codegen, usable directly in ``.filter`` or a join
     condition.  No false negatives; false-positive rate is the
     standard ``(1 - e^{-kn/m})^k``."""
@@ -126,12 +132,12 @@ def bloom_might_contain(
             "with a different num_bits"
         )
     # Explicit array<bigint>: a small/empty filter would otherwise
-    # infer array<int> and getbit would range-check pos against 32.
+    # infer array<int>, whose words hold only 32 bits.
     arr = F.lit(words).cast("array<bigint>")
     cond = None
     for pos in _positions(key, num_bits, num_hashes):
-        word = F.element_at(arr, (pos / 64).cast("int") + 1)
-        bit_set = F.getbit(word, (pos % 64).cast("int")) == 1
+        word_idx, bit = _word_bit(pos)
+        bit_set = F.element_at(arr, word_idx + 1).bitwiseAND(bit) != 0
         cond = bit_set if cond is None else (cond & bit_set)
     return cond
 

@@ -21,15 +21,16 @@ Two execution paths:
 * :func:`cdc_apply` — pure DataFrame → DataFrame merge (target ∖ batch
   keys ∪ non-delete batch rows).  Used directly by declared queries
   and by the parquet-emulated storage path.
-* :func:`cdc_merge_table` — storage-backed: Delta ``MERGE`` when
-  delta-spark is on the classpath (scales: shuffle-join on PK, no full
-  rewrite), else an overwrite of the parquet table with the
-  :func:`cdc_apply` result (full rewrite per batch — correct, and the
-  honest fallback without a transactional table format; at 100 TB you
-  run the Delta path).  Both non-Delta rewrites are written at target
-  file size (``ceil(table bytes / compact_target_file_bytes)`` files,
-  Delta's optimized-write idea), so a steady-state merge leaves no
-  small files for compaction to rewrite.
+* :func:`cdc_merge_table` — storage-backed: Delta ``MERGE`` on a
+  Delta table (scales: shuffle-join on PK, no full rewrite), else the
+  :func:`cdc_apply` result committed in place of the whole snapshot —
+  a txlog version, or a file swap on bare parquet (full rewrite per
+  batch — correct, and the honest fallback without a file-granular
+  MERGE; at 100 TB you run the Delta path).  The non-Delta rewrite is
+  written at target file size (``ceil(table bytes /
+  compact_target_file_bytes)`` files, Delta's optimized-write idea),
+  so a steady-state merge leaves no small files for compaction to
+  rewrite.
 """
 
 from __future__ import annotations
@@ -40,9 +41,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from jibaro_spark.catalog import Catalog, TableRef
-from jibaro_spark.io import read_table, write_table
+from jibaro_spark.io import write_table
 from jibaro_spark.operators.dedup import dedup_latest
-from jibaro_spark.session import has_delta
 
 OP_COL = "op"
 DELETE_OP = "d"
@@ -123,22 +123,27 @@ def cdc_merge_table(
 ) -> dict:
     """Storage-backed CDC merge into the curated table at ``target_ref``.
 
-    Delta path: transactional ``MERGE`` on PK equality built from the
-    key columns (reference ``cdc.py:203-216``).  Parquet fallback:
-    read-modify-overwrite with :func:`cdc_apply` (correct, non-atomic —
-    noted as the bare-environment emulation).  Tables carrying a
-    ``_jibaro_log`` (``jibaro_spark.txlog``) get the TRANSACTIONAL
-    fallback instead: the merge result commits as a new version —
-    snapshot-isolated readers, MERGE history, crash-safe (an aborted
-    write leaves the table unchanged) — the Delta semantics without
-    the jars; see ``tests/test_round5_txlog.py``.
+    The table is resolved once (``maintenance._snapshot``).  Delta
+    path: transactional ``MERGE`` on PK equality built from the key
+    columns (reference ``cdc.py:203-216``).  Every other table gets the
+    :func:`cdc_apply` result of its live rows, committed in place of
+    them by ``maintenance._replace``: on a ``_jibaro_log``
+    (``jibaro_spark.txlog``) table a new version — snapshot-isolated
+    readers, MERGE history, crash-safe (an aborted write leaves the
+    table unchanged), the Delta semantics without the jars (see
+    ``tests/test_round5_txlog.py``); on bare parquet a file swap that
+    is correct but not atomic (the bare-environment emulation).  A
+    table that does not exist yet is created by an ``INITIAL_LOAD``
+    of the batch: as txlog when ``Settings.use_txlog`` is set and
+    delta-spark is absent.  Either rewrite also updates any ``_bloom``
+    sidecar of the table, so the index covers exactly the new files.
 
-    Both non-Delta rewrites commit target-sized files: the merge result
-    is coalesced (no shuffle) to ``ceil(table bytes /
+    The non-Delta merge commits target-sized files: the result is
+    coalesced (no shuffle) to ``ceil(table bytes /
     compact_target_file_bytes)`` partitions — the rule
     :func:`jibaro_spark.maintenance.compact` applies, with the bytes of
-    the table being replaced (from the log's add sizes on txlog tables,
-    from the file listing on bare parquet).  A steady-state merge then
+    the snapshot being replaced (the log's add sizes on txlog tables,
+    the file listing on bare parquet).  A steady-state merge then
     commits one target-sized file set and compaction has nothing to do.
 
     Returns per-merge metrics — ``rowsWritten`` observed DURING the
@@ -150,43 +155,15 @@ def cdc_merge_table(
     """
     from pyspark.sql import Observation
 
-    from jibaro_spark import txlog
-    from jibaro_spark.maintenance import table_stats, target_file_count
+    from jibaro_spark.maintenance import _replace, _snapshot, target_file_count
 
-    def _observed(df: DataFrame) -> "tuple[DataFrame, Observation]":
-        obs = Observation()
-        return df.observe(obs, F.count(F.lit(1)).alias("rowsWritten")), obs
-
-    def _sized(df: DataFrame, table_bytes: int) -> DataFrame:
-        # compaction's sizing rule, applied at write time: no shuffle,
-        # and a no-op when the plan already has at most n partitions
-        target = catalog.settings.compact_target_file_bytes
-        return df.coalesce(target_file_count(table_bytes, target))
-
-    path = catalog.path(target_ref)
-    if txlog.latest_version(path) is not None:
-        current = txlog.read_versioned(spark, path)
-        merged = _sized(
-            cdc_apply(current, envelope, key_cols, order_by),
-            txlog.snapshot_bytes(path),
-        )
-        result, obs = _observed(merged)
-        txlog.write_versioned(result, path, mode="overwrite", operation="MERGE")
-        return {"operation": "MERGE", **obs.get}
-    exists = _path_exists(spark, path)
-    if (
-        not exists
-        and getattr(catalog.settings, "use_txlog", False)
-        and not has_delta(spark)
-    ):
-        result, obs = _observed(initial_load(envelope, key_cols, order_by))
-        txlog.write_versioned(result, path, operation="INITIAL_LOAD")
-        return {"operation": "INITIAL_LOAD", **obs.get}
-
-    if has_delta(spark):
+    snap = _snapshot(
+        spark, catalog.path(target_ref), use_txlog=catalog.settings.use_txlog
+    )
+    if snap.format == "delta":
         from delta.tables import DeltaTable
 
-        if not exists:
+        if not snap.exists:
             write_table(
                 initial_load(envelope, key_cols, order_by),
                 catalog, target_ref, fmt="delta", mode="overwrite",
@@ -199,7 +176,7 @@ def cdc_merge_table(
             "value.after",
         )
         cond = " AND ".join(f"t.{k} = s.__k_{k}" for k in key_cols)
-        dt = DeltaTable.forPath(spark, path)
+        dt = DeltaTable.forPath(spark, snap.path)
         set_all = {c: f"s.after.{c}" for c in envelope.select("value.after.*").columns}
         set_all[OP_COL] = "s.__op"
         (
@@ -212,30 +189,19 @@ def cdc_merge_table(
         )
         return {"operation": "MERGE"}
 
-    if not exists:
-        op = "INITIAL_LOAD"
-        result = initial_load(envelope, key_cols, order_by)
-    else:
+    if snap.exists:
         op = "MERGE"
-        target = read_table(spark, catalog, target_ref, fmt="parquet")
-        table_bytes = table_stats(spark, path).size_bytes
-        # Materialize executor-side (no driver collect) before
-        # overwriting the path the plan reads from.
-        result = cdc_apply(target, envelope, key_cols, order_by).localCheckpoint(eager=True)
-        result = _sized(result, table_bytes)
-    result, obs = _observed(result)
-    write_table(result, catalog, target_ref, fmt="parquet", mode="overwrite")
+        # compaction's sizing rule, applied at write time: no shuffle,
+        # and a no-op when the plan already has at most n partitions
+        n_files = target_file_count(
+            snap.size_bytes, catalog.settings.compact_target_file_bytes
+        )
+        result = cdc_apply(snap.df, envelope, key_cols, order_by).coalesce(n_files)
+    else:
+        op, result = "INITIAL_LOAD", initial_load(envelope, key_cols, order_by)
+    obs = Observation()
+    _replace(snap, result.observe(obs, F.count(F.lit(1)).alias("rowsWritten")), op)
     return {"operation": op, **obs.get}
-
-
-def _path_exists(spark: SparkSession, path: str) -> bool:
-    """Hadoop-FS existence check via py4j (reference ``utils.py:11-34``
-    pattern — works for any supported filesystem scheme)."""
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc
-    conf = jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(conf).exists(p)
 
 
 def snapshot_diff(

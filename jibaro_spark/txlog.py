@@ -612,26 +612,13 @@ def compact_versioned(
     ``zorder_cols`` when given — and commit it as an overwrite version
     (reference K11 compaction, ``delta_handler.py:9-35``, with Delta's
     rewrite-as-commit semantics: same rows, fewer/better files, prior
-    versions still time-travelable until vacuum).  Returns the new
-    version."""
-    from jibaro_spark.maintenance import target_file_count
+    versions still time-travelable until vacuum), checkpointed at once
+    and with any ``_bloom`` sidecar updated.  The body is the one
+    :func:`jibaro_spark.maintenance.compact` and ``optimize_zorder``
+    run (``maintenance._optimize``).  Returns the new version."""
+    from jibaro_spark.maintenance import _optimize, _snapshot
 
-    n = target_file_count(snapshot_bytes(table), target_file_bytes)
-    df = read_versioned(spark, table)
-    if zorder_cols:
-        from jibaro_spark.operators.relational import layout_zorder
-
-        df = layout_zorder(df, *zorder_cols, num_partitions=n, bits=zorder_bits)
-        op = f"OPTIMIZE ZORDER ({','.join(zorder_cols)})"
-    else:
-        df = df.repartition(n)
-        op = "OPTIMIZE"
-    v = write_versioned(df, table, mode="overwrite", operation=op)
-    # the rewrite replaced the whole live set — checkpoint immediately
-    # so readers resolve the compacted snapshot from one file instead
-    # of replaying the pre-compaction adds plus their removes
-    try:
-        write_checkpoint(table, v)
-    except OSError:
-        pass
-    return v
+    snap = _snapshot(spark, table)
+    if snap.format != "txlog":
+        raise FileNotFoundError(f"no {LOG_DIR} at {table}")
+    return _optimize(snap, target_file_bytes, zorder_cols, zorder_bits)[1]

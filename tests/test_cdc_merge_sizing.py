@@ -2,11 +2,13 @@
 commits ``ceil(table bytes / compact_target_file_bytes)`` files at
 most, so a steady-state merge leaves nothing for ``compact()`` to do —
 on txlog tables (sized from the log's add sizes) and on bare parquet
-(sized from the file listing)."""
+(sized from the file listing) — and leaves a ``_bloom`` sidecar
+covering exactly the files it wrote."""
 
 from __future__ import annotations
 
 import math
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -14,7 +16,12 @@ from pyspark.sql import functions as F
 from jibaro_spark import txlog
 from jibaro_spark.catalog import Catalog, TableRef
 from jibaro_spark.config import Settings
-from jibaro_spark.maintenance import compact, table_stats
+from jibaro_spark.maintenance import (
+    build_bloom_file_index,
+    compact,
+    read_bloom_pruned,
+    table_stats,
+)
 from jibaro_spark.operators.cdc import cdc_apply, cdc_merge_table, initial_load
 
 KEYS = ["id"]
@@ -152,3 +159,32 @@ def test_bare_parquet_merge_is_sized(spark, tmp_path, target):
     expected = _merge_all(spark, cat, ref, batches, check)
     assert txlog.latest_version(path) is None
     assert _rows(spark.read.parquet(path)) == _rows(expected)
+
+
+@pytest.mark.parametrize("use_txlog", [False, True], ids=["bare", "txlog"])
+def test_merge_keeps_bloom_sidecar_exact(spark, tmp_path, use_txlog):
+    """A MERGE on a bloom-indexed table leaves the ``_bloom`` sidecar
+    covering exactly the new snapshot's files, and point reads through
+    it find the merged rows."""
+    cat = _catalog(tmp_path, use_txlog=use_txlog)
+    ref = TableRef("curated", "proj", "db", "indexed")
+    path = cat.path(ref)
+    first, second = _batches(n_batches=1)
+    cdc_merge_table(spark, cat, _envelope(spark, first), ref, KEYS)
+    build_bloom_file_index(spark, path, "id")
+    assert cdc_merge_table(spark, cat, _envelope(spark, second), ref, KEYS)[
+        "operation"
+    ] == "MERGE"
+    if use_txlog:
+        live = txlog.snapshot_files(path)
+    else:
+        live = spark.read.parquet(path).inputFiles()
+    words = spark.read.parquet(os.path.join(path, "_bloom", "id", "words"))
+    indexed = [r["file"] for r in words.select("file").distinct().collect()]
+    assert {f.rsplit("/", 1)[-1] for f in indexed} == {
+        f.rsplit("/", 1)[-1] for f in live
+    }
+    # key 0 updated twice, key 3 deleted, key 400 inserted
+    for key, want in ((0, ["u0-again"]), (3, []), (400, ["n0-0"])):
+        got = read_bloom_pruned(spark, path, "id", key).collect()
+        assert [r["val"] for r in got] == want, key

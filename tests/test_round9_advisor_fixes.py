@@ -207,40 +207,62 @@ def test_replace_mode_rejects_non_snapshot_paths(spark, tmp_path):
 # ------------------------------------------- compaction sidecar invalidation
 
 
-def test_compact_rebuilds_bloom_sidecar(spark, tmp_path):
+def _layout(spark, out, layout, n=4000, files=8):
+    """``n`` rows in ``files`` files at ``out``: a bare parquet dir, or
+    a txlog table whose directory also holds a dead generation."""
+    df = spark.range(0, n).select(
+        F.col("id").alias("k"), (F.col("id") % 97).alias("v")
+    )
+    if layout == "bare":
+        df.repartition(files, "k").write.mode("overwrite").parquet(out)
+    else:
+        txlog.write_versioned(df.limit(10).coalesce(1), out)
+        txlog.write_versioned(df.repartition(files, "k"), out, mode="overwrite")
+    return out
+
+
+def _names(files):
+    return {f.rsplit("/", 1)[-1] for f in files}
+
+
+def _index_covers_exactly_live_files(spark, out):
+    """The ``_bloom/k`` sidecar has rows for every live file and for
+    no other file."""
+    if txlog.latest_version(out) is not None:
+        live = txlog.snapshot_files(out)
+    else:
+        live = spark.read.parquet(out).inputFiles()
+    words = spark.read.parquet(os.path.join(out, "_bloom", "k", "words"))
+    indexed = [r["file"] for r in words.select("file").distinct().collect()]
+    return bool(live) and _names(indexed) == _names(live)
+
+
+@pytest.mark.parametrize("layout", ["bare", "txlog"])
+def test_compact_rebuilds_bloom_sidecar(spark, tmp_path, layout):
     settings = Settings(protocol="file", base_path=str(tmp_path))
     lake = Catalog(settings)
     ref = TableRef("curated", "lab", "db", "blm")
-    out = lake.path(ref)
-    df = spark.range(0, 4000).select(
-        F.col("id").alias("k"), (F.col("id") % 97).alias("v")
-    )
-    df.repartition(8, "k").write.mode("overwrite").parquet(out)
+    out = _layout(spark, lake.path(ref), layout)
     build_bloom_file_index(spark, out, "k")
     assert compact(spark, lake, ref, force=True) is True
-    # the sidecar survived the rewrite (rebuilt, not destroyed/stranded)
+    # the sidecar survived the rewrite (updated, not destroyed/stranded)
     assert os.path.isdir(os.path.join(out, "_bloom", "k", "words"))
     pruned = read_bloom_pruned(spark, out, "k", 1234)
     assert [(r["k"], r["v"]) for r in pruned.collect()] == [(1234, 1234 % 97)]
-    # index rows reference the POST-compaction files (not stale)
-    live = {f.rsplit("/", 1)[-1] for f in spark.read.parquet(out).inputFiles()}
-    idx_files = {
-        r["file"].rsplit("/", 1)[-1]
-        for r in spark.read.parquet(
-            os.path.join(out, "_bloom", "k", "words")
-        ).select("file").distinct().collect()
-    }
-    assert idx_files <= live and idx_files
+    # index rows reference exactly the POST-compaction files
+    assert _index_covers_exactly_live_files(spark, out)
 
 
-def test_optimize_zorder_rebuilds_bloom_sidecar(spark, tmp_path):
-    out = _scattered(spark, tmp_path, "zblm")
+@pytest.mark.parametrize("layout", ["bare", "txlog"])
+def test_optimize_zorder_rebuilds_bloom_sidecar(spark, tmp_path, layout):
+    out = _layout(spark, str(tmp_path / "zblm"), layout)
     build_bloom_file_index(spark, out, "k")
     n = optimize_zorder(spark, out, ["k", "v"], target_file_bytes=16 * 1024)
     assert n >= 1
     assert os.path.isdir(os.path.join(out, "_bloom", "k", "words"))
     pruned = read_bloom_pruned(spark, out, "k", 777)
     assert [(r["k"], r["v"]) for r in pruned.collect()] == [(777, 777 % 97)]
+    assert _index_covers_exactly_live_files(spark, out)
 
 
 # --------------------------------------------------- txlog checkpoint upkeep

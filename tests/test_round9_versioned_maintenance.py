@@ -4,13 +4,14 @@ surface (the class behind VERDICT r8 item 3): `compact`,
 `read_pruned`, and `table_stats` previously treated every path as a
 bare-parquet directory — on a txlog table that reads DEAD versions'
 files (duplicated rows) and `optimize_zorder`'s rmtree would destroy
-the log itself.  Each now dispatches on `txlog.latest_version` the way
-`vacuum_if_due`/`generate_manifest`/`delete_by_keys` do.
+the log itself.  Each now resolves the table through the one
+resolver (`maintenance._snapshot`), as every maintenance operator does.
 
 Also: bloom-targeted + incrementally-indexed deletes on versioned
-tables (with a coverage check so a stale sidecar can NEVER cause a
-missed deletion), and `read_bloom_pruned`'s conservative handling of
-files appended after the index build.
+tables (files the index does not cover are always candidates, so a
+stale sidecar can NEVER cause a missed deletion), and
+`read_bloom_pruned`'s conservative handling of files appended after
+the index build.
 """
 
 from __future__ import annotations
@@ -33,12 +34,6 @@ from jibaro_spark.maintenance import (
     read_pruned,
     table_stats,
 )
-
-import pytest
-
-# battery class (r13 suite split — see pytest.ini): excluded from the
-# default fast-core run the round driver's verify window executes
-pytestmark = pytest.mark.slow
 
 
 def _versioned(spark, base_dir, name="vt", commits=4, rows_per=500):
@@ -351,6 +346,17 @@ def test_delete_empty_and_null_key_lists(spark, tmp_path):
     with _pytest.raises(ValueError, match="NULL keys"):
         delete_by_keys(spark, out, "k", [5, None])
     assert spark.read.parquet(out).count() == 100
+    # txlog: the count is the snapshot's (the directory also holds the
+    # first overwrite's dead file), and the result names no version
+    table = os.path.join(str(tmp_path), "guards_v")
+    for lo in (0, 100):
+        df = spark.range(lo, lo + 100).select(F.col("id").alias("k"), F.lit(0).alias("v"))
+        txlog.write_versioned(df.coalesce(1), table, mode="overwrite")
+    head = txlog.latest_version(table)
+    assert delete_by_keys(spark, table, "k", []) == {
+        "files_total": 1, "files_rewritten": 0, "rows_deleted": 0, "version": None,
+    }
+    assert txlog.latest_version(table) == head
 
 
 def test_versioned_delete_entire_file_contents(spark, tmp_path):
