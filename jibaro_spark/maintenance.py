@@ -22,7 +22,7 @@ import uuid
 from dataclasses import dataclass
 from functools import cached_property
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from jibaro_spark.catalog import Catalog, TableRef
@@ -815,14 +815,19 @@ def delete_by_keys(
     out = {"files_total": len(snap.files), "files_rewritten": len(candidates), "rows_deleted": 0}
     version = None
     if candidates:
-        cand = _read_files(snap, candidates)
-        n_before = cand.count()
+        # the rewrite job counts the doomed rows as it reads them
+        # (``Observation``), so the candidates are scanned once
+        obs = Observation()
+        doomed = F.col(col).isin(values)
+        cand = _read_files(snap, candidates).observe(
+            obs, F.count(F.when(doomed, 1)).alias("rows_deleted")
+        )
         # NULL-keyed rows are never deletion targets: plain
         # ``~isin(values)`` evaluates to NULL for them (three-valued
         # logic) and a bare filter would silently erase them.
-        kept = cand.filter((~F.col(col).isin(values)) | F.col(col).isNull())
-        out["rows_deleted"] = int(n_before - kept.count())
+        kept = cand.filter((~doomed) | F.col(col).isNull())
         version = _replace(snap, kept, f"DELETE ({col})", candidates)
+        out["rows_deleted"] = int(obs.get["rows_deleted"])
     if snap.format == "txlog":
         out["version"] = version
     return out

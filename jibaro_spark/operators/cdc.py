@@ -64,18 +64,11 @@ def latest_changes_per_key(
     return dedup_latest(keyed, keys=["__pk"], order_by=list(order_by)).drop("__pk")
 
 
-def flatten_envelope(envelope: DataFrame) -> DataFrame:
-    """Staged envelope → curated row shape: ``value.after.* + op``
-    for upserts and ``value.before.* + op`` for deletes
-    (reference ``cdc.py:192-200``; we use unionByName, not positional
-    union — fixes the reference defect noted in SURVEY §2.13)."""
-    upserts = envelope.filter(F.col(f"value.{OP_COL}") != DELETE_OP).select(
+def _after_images(batch: DataFrame) -> DataFrame:
+    """Non-delete changes as curated rows: ``value.after.* + op``."""
+    return batch.filter(F.col(f"value.{OP_COL}") != DELETE_OP).select(
         "value.after.*", f"value.{OP_COL}"
     )
-    deletes = envelope.filter(F.col(f"value.{OP_COL}") == DELETE_OP).select(
-        "value.before.*", f"value.{OP_COL}"
-    )
-    return upserts.unionByName(deletes, allowMissingColumns=True)
 
 
 def cdc_apply(
@@ -95,11 +88,8 @@ def cdc_apply(
     batch_keys = batch.select(
         *[F.col(f"key.{k}").alias(k) for k in key_cols]
     ).distinct()
-    upserts = batch.filter(F.col(f"value.{OP_COL}") != DELETE_OP).select(
-        "value.after.*", f"value.{OP_COL}"
-    )
     survivors = target.join(batch_keys, on=list(key_cols), how="left_anti")
-    return survivors.unionByName(upserts, allowMissingColumns=True)
+    return survivors.unionByName(_after_images(batch), allowMissingColumns=True)
 
 
 def initial_load(envelope: DataFrame, key_cols: Sequence[str],
@@ -107,10 +97,7 @@ def initial_load(envelope: DataFrame, key_cols: Sequence[str],
     """First materialization of a curated table: latest change per key,
     deletes filtered out (reference ``cdc.py:178-187``:
     ``filter("value.op != 'd'")`` then overwrite)."""
-    batch = latest_changes_per_key(envelope, key_cols, order_by)
-    return batch.filter(F.col(f"value.{OP_COL}") != DELETE_OP).select(
-        "value.after.*", f"value.{OP_COL}"
-    )
+    return _after_images(latest_changes_per_key(envelope, key_cols, order_by))
 
 
 def cdc_merge_table(

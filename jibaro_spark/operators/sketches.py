@@ -3,9 +3,9 @@ count-min frequency sketches whose partial sketches combine by
 cell-wise sum, the property that lets 1000 executors (or 1000 daily
 partitions) each sketch locally and a coordinator merge k bounded
 artifacts instead of re-scanning 100 TB.  Sibling of the HLL/KMV
-distinct sketches in :mod:`jibaro_spark.queries.extra`.
+distinct sketches in :mod:`jibaro_spark.queries.sketches`.
 
-Promoted out of the round-4 query module (VERDICT r4 §Next-7) so the
+Promoted out of the query modules (VERDICT r4 §Next-7) so the
 sketch/merge/lookup pieces are reusable operators with the merge
 consistency law — ``sketch(A ∪ B) == merge(sketch(A), sketch(B))`` —
 pinned in tests/test_round5_sketches.py.

@@ -1,6 +1,6 @@
 """In-engine model training primitives ([ext] — the curation-loop
 closer: the quality classifier that *scores* documents
-(queries/round4.py q_quality_model_score) is *trained* here, on the
+(queries/text.py q_quality_model_score) is *trained* here, on the
 same engine that runs the pipeline).
 
 Full-batch logistic-regression gradient descent as pure DataFrame

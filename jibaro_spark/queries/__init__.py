@@ -8,56 +8,17 @@ The driver executes both at sf0.01 and hash-compares values.
 
 from jibaro_spark.queries.registry import REGISTRY, DeclaredQuery, declare, load_tables
 
-# Importing the modules populates REGISTRY via @declare decorators.
-from jibaro_spark.queries import tpch  # noqa: E402,F401
-from jibaro_spark.queries import tpch2  # noqa: E402,F401
-from jibaro_spark.queries import tpch3  # noqa: E402,F401
+# Importing the family modules populates REGISTRY via @declare decorators.
+from jibaro_spark.queries import relational  # noqa: E402,F401
 from jibaro_spark.queries import events  # noqa: E402,F401
-from jibaro_spark.queries import llm  # noqa: E402,F401
+from jibaro_spark.queries import timeseries  # noqa: E402,F401
+from jibaro_spark.queries import text  # noqa: E402,F401
+from jibaro_spark.queries import dedup  # noqa: E402,F401
+from jibaro_spark.queries import similarity  # noqa: E402,F401
+from jibaro_spark.queries import graph  # noqa: E402,F401
+from jibaro_spark.queries import stat_tests  # noqa: E402,F401
+from jibaro_spark.queries import stat_models  # noqa: E402,F401
+from jibaro_spark.queries import sketches  # noqa: E402,F401
 from jibaro_spark.queries import pipeline  # noqa: E402,F401
-from jibaro_spark.queries import multimodal  # noqa: E402,F401
-from jibaro_spark.queries import extra  # noqa: E402,F401
-from jibaro_spark.queries import round3  # noqa: E402,F401
-from jibaro_spark.queries import round4  # noqa: E402,F401
-from jibaro_spark.queries import round5  # noqa: E402,F401
-from jibaro_spark.queries import round5b  # noqa: E402,F401
-from jibaro_spark.queries import round6  # noqa: E402,F401
-from jibaro_spark.queries import round6b  # noqa: E402,F401
-from jibaro_spark.queries import round6c  # noqa: E402,F401
-from jibaro_spark.queries import round6d  # noqa: E402,F401
-from jibaro_spark.queries import round6e  # noqa: E402,F401
-from jibaro_spark.queries import round7  # noqa: E402,F401
-from jibaro_spark.queries import round8  # noqa: E402,F401
-from jibaro_spark.queries import round9  # noqa: E402,F401
-from jibaro_spark.queries import round10  # noqa: E402,F401
-from jibaro_spark.queries import round11  # noqa: E402,F401
-from jibaro_spark.queries import round12  # noqa: E402,F401
-from jibaro_spark.queries import round13  # noqa: E402,F401
-from jibaro_spark.queries import round14  # noqa: E402,F401
-from jibaro_spark.queries import round15  # noqa: E402,F401
-from jibaro_spark.queries import round16  # noqa: E402,F401
-from jibaro_spark.queries import round17  # noqa: E402,F401
-from jibaro_spark.queries import round18  # noqa: E402,F401
-from jibaro_spark.queries import round19  # noqa: E402,F401
-from jibaro_spark.queries import round20  # noqa: E402,F401
-from jibaro_spark.queries import round21  # noqa: E402,F401
-from jibaro_spark.queries import round22  # noqa: E402,F401
-from jibaro_spark.queries import round23  # noqa: E402,F401
-from jibaro_spark.queries import round24  # noqa: E402,F401
-from jibaro_spark.queries import round25  # noqa: E402,F401
-from jibaro_spark.queries import round26  # noqa: E402,F401
-from jibaro_spark.queries import round27  # noqa: E402,F401
-from jibaro_spark.queries import round28  # noqa: E402,F401
-from jibaro_spark.queries import round29  # noqa: E402,F401
-from jibaro_spark.queries import round30  # noqa: E402,F401
-from jibaro_spark.queries import round31  # noqa: E402,F401
-from jibaro_spark.queries import round32  # noqa: E402,F401
-from jibaro_spark.queries import round33  # noqa: E402,F401
-from jibaro_spark.queries import round34  # noqa: E402,F401
-from jibaro_spark.queries import round35  # noqa: E402,F401
-from jibaro_spark.queries import round36  # noqa: E402,F401
-from jibaro_spark.queries import round37  # noqa: E402,F401
-from jibaro_spark.queries import round38  # noqa: E402,F401
-from jibaro_spark.queries import round39  # noqa: E402,F401
 
 __all__ = ["REGISTRY", "DeclaredQuery", "declare", "load_tables"]

@@ -113,3 +113,76 @@ def davg(col, alias: str, scale: int = 4):
         F.sum(F.col(col).cast(f"decimal(18,{scale})")).cast("double")
         / F.count(F.col(col))
     ).alias(alias)
+
+
+# Shared by several query families: oracle-SQL fragments and the
+# cross-engine decimal and md5 helpers.
+#
+# Normalized text in DuckDB SQL (mirrors textops.normalized_text; the
+# 'g' flag matches Spark's replace-all semantics).
+_NORM = "regexp_replace(trim(lower(text)), '\\s+', ' ', 'g')"
+_TOKS = f"string_split({_NORM}, ' ')"
+
+
+def _zipgrams(lst: str, k: int, joiner: str = "' '") -> str:
+    """O(n) DuckDB word-``k``-gram fragment (bigval class, r11).
+
+    The previous oracle idiom — ``list_transform(range(1, C + 1), i ->
+    array_to_string(lst[i:i+{k-1}], ' '))`` with ``C = greatest(len - (k-1),
+    1)`` — evaluates a list SLICE per position, which DuckDB executes in
+    O(position) (measured: 99.6 s for one 50k-token list, quadratic), so
+    the bigval fixture's 250k-token document turned every shingle oracle
+    into hours of single-threaded scaffolding.  ``list_zip`` of the k
+    shifted views is one O(k·n) pass (0.057 s on the same list) and is
+    bit-identical: trailing positions zip NULL padding, which
+    ``array_to_string`` skips — exactly the old form's end-clamped short
+    grams — and the CASE reproduces the old form's single-NULL gram for
+    NULL/empty token lists (``greatest(NULL, 1) = 1`` made the old range
+    yield one NULL gram there).  Single-ELEMENT lambda access is O(1)
+    (measured); only slices carried the quadratic cost.
+
+    CALLER CONTRACT (ADVICE r11 #4): ``lst`` is interpolated TEXTUALLY
+    into k shifted views plus the len()/CASE sites — pass a
+    pre-materialized list COLUMN (bind tokenization in a ``tk``/
+    ``toks`` CTE first, as the shingle call sites do), never a complex
+    expression like ``_TOKS`` directly, or the tokenizer chain is
+    inlined 5+ times and only DuckDB's CSE stands between you and
+    re-tokenizing every document per shifted view.
+    """
+    shifted = ", ".join([lst] + [f"({lst})[{j}:]" for j in range(2, k + 1)])
+    fields = ", ".join(f"x[{j}]" for j in range(1, k + 1))
+    return (
+        f"CASE WHEN {lst} IS NULL OR len({lst}) = 0 "
+        f"THEN [CAST(NULL AS VARCHAR)] "
+        f"ELSE list_transform(list_zip({shifted})"
+        f"[1:greatest(len({lst}) - {k - 1}, 1)], "
+        f"x -> array_to_string([{fields}], {joiner})) END"
+    )
+
+
+_DEC = "decimal(18,4)"
+
+
+def _d(col: str):
+    return F.col(col).cast(_DEC)
+
+
+_REV_SQL = "CAST(l_extendedprice AS DECIMAL(18,4)) * (1 - CAST(l_discount AS DECIMAL(18,4)))"
+
+
+def _md5_mod(col, salt: str, n: int):
+    """First-8-hex-digit md5 bucket — the repo's cross-engine hash
+    (replays in DuckDB as CAST('0x'||substr(md5(...),1,8) AS BIGINT))."""
+    h = F.conv(
+        F.substring(F.md5(F.concat(F.lit(f"{salt}|"), col.cast("string"))), 1, 8),
+        16,
+        10,
+    ).cast("long")
+    return F.pmod(h, F.lit(n))
+
+
+def _sql_md5_mod(expr: str, salt: str, n: int) -> str:
+    return (
+        f"CAST(('0x' || substr(md5('{salt}|' || CAST({expr} AS VARCHAR)), 1, 8))"
+        f" AS BIGINT) % {n}"
+    )

@@ -35,6 +35,7 @@ from jibaro_spark.codecs.confluent import (
     decode_confluent_batch_pairs,
 )
 from jibaro_spark.io import read_stream, write_stream, write_table
+from jibaro_spark.maintenance import _fs
 from jibaro_spark.operators.cdc import cdc_merge_table
 from jibaro_spark.session import has_kafka
 
@@ -140,10 +141,7 @@ def raw_to_staged(
     dst = TableRef(str(Layer.STAGED), project, database, table)
 
     def _rm(spark_, path: str) -> None:
-        jvm = spark_.sparkContext._jvm
-        conf = spark_.sparkContext._jsc.hadoopConfiguration()
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        fs = p.getFileSystem(conf)
+        fs, p = _fs(spark_, path)
         if fs.exists(p):
             fs.delete(p, True)
 
@@ -179,21 +177,25 @@ def raw_to_staged(
             key_id is not None and types.get("key") == "binary"
         )
 
+    def _write_partition(decoded: DataFrame, ref: TableRef, batch_id: int,
+                         pair: str) -> None:
+        # idempotent append: the (batch, schema pair) partition is
+        # overwritten dynamically, so a replayed batch cannot duplicate
+        write_table(
+            decoded.withColumn("_batch_id", F.lit(batch_id))
+            .withColumn("_schema_pair", F.lit(pair)),
+            catalog, ref, mode="overwrite",
+            partition_by=["_batch_id", "_schema_pair"],
+            partitionOverwriteMode="dynamic",
+        )
+
     def _write_pairs(batch: DataFrame, batch_id: int, fmt: str, pairs) -> None:
         for (key_id, value_id), decoded in pairs:
             if _is_dead_letter(decoded, key_id, value_id):
                 # undecodable pair (on_unknown_schema='keep'): park the
                 # raw frames idempotently beside the staged table; they
                 # replay through this hop once the registry resolves
-                write_table(
-                    decoded.withColumn("_batch_id", F.lit(batch_id))
-                    .withColumn(
-                        "_schema_pair", F.lit(f"{key_id}-{value_id}")
-                    ),
-                    catalog, dlq, mode="overwrite",
-                    partition_by=["_batch_id", "_schema_pair"],
-                    partitionOverwriteMode="dynamic",
-                )
+                _write_partition(decoded, dlq, batch_id, f"{key_id}-{value_id}")
                 continue
             if fmt == "delta":
                 # txnAppId must be unique PER SCHEMA PAIR: Delta's idempotent
@@ -208,13 +210,7 @@ def raw_to_staged(
                     txnVersion=str(batch_id),
                 )
             else:
-                write_table(
-                    decoded.withColumn("_batch_id", F.lit(batch_id))
-                    .withColumn("_schema_pair", F.lit(f"{key_id}-{value_id}")),
-                    catalog, dst, mode="overwrite",
-                    partition_by=["_batch_id", "_schema_pair"],
-                    partitionOverwriteMode="dynamic",
-                )
+                _write_partition(decoded, dst, batch_id, f"{key_id}-{value_id}")
 
     stream = read_stream(
         spark, catalog, src,

@@ -90,6 +90,26 @@ def _last_checkpoint_pointer(table: str) -> str:
     return os.path.join(_log_path(table), "_last_checkpoint")
 
 
+def _read_pointer(table: str) -> int | None:
+    """Version named by the ``_last_checkpoint`` pointer, or None when
+    the pointer is missing, torn or corrupt."""
+    try:
+        with open(_last_checkpoint_pointer(table)) as f:
+            return int(json.load(f)["version"])
+    except (OSError, ValueError, KeyError, json.JSONDecodeError):
+        return None
+
+
+def _checkpoint_versions(table: str) -> list[int]:
+    """Versions of the ``<version>.checkpoint.json`` files, ascending."""
+    suffix = ".checkpoint.json"
+    return sorted(
+        int(f[: -len(suffix)])
+        for f in os.listdir(_log_path(table))
+        if f.endswith(suffix) and f[: -len(suffix)].isdigit()
+    )
+
+
 def latest_version(table: str) -> int | None:
     """Highest committed version, or None for a non-log table.
     Checkpoint files are consolidated snapshots, not commits — only
@@ -106,15 +126,11 @@ def latest_version(table: str) -> int | None:
     d = _log_path(table)
     if not os.path.isdir(d):
         return None
-    try:
-        with open(_last_checkpoint_pointer(table)) as f:
-            v = int(json.load(f)["version"])
-        if v >= 0 and os.path.exists(_version_file(table, v)):
-            while os.path.exists(_version_file(table, v + 1)):
-                v += 1
-            return v
-    except (OSError, ValueError, KeyError, json.JSONDecodeError):
-        pass
+    v = _read_pointer(table)
+    if v is not None and v >= 0 and os.path.exists(_version_file(table, v)):
+        while os.path.exists(_version_file(table, v + 1)):
+            v += 1
+        return v
     versions = [
         int(f[: -len(".json")])
         for f in os.listdir(d)
@@ -138,23 +154,10 @@ def _latest_checkpoint_at_or_below(table: str, version: int) -> int | None:
     d = _log_path(table)
     if not os.path.isdir(d):
         return None
-    try:
-        with open(_last_checkpoint_pointer(table)) as f:
-            v = int(json.load(f)["version"])
-        if v <= version and os.path.exists(_checkpoint_file(table, v)):
-            return v
-    except (OSError, ValueError, KeyError, json.JSONDecodeError):
-        pass
-    best = None
-    suffix = ".checkpoint.json"
-    for f in os.listdir(d):
-        if not f.endswith(suffix):
-            continue
-        stem = f[: -len(suffix)]
-        if stem.isdigit() and int(stem) <= version:
-            v = int(stem)
-            best = v if best is None or v > best else best
-    return best
+    v = _read_pointer(table)
+    if v is not None and v <= version and os.path.exists(_checkpoint_file(table, v)):
+        return v
+    return max((c for c in _checkpoint_versions(table) if c <= version), default=None)
 
 
 def write_checkpoint(table: str, version: int | None = None) -> int:
@@ -196,20 +199,14 @@ def write_checkpoint(table: str, version: int | None = None) -> int:
     # checkpoint repairs it.  A failed pointer write only means
     # readers fall back to the directory listing.
     try:
-        ptr = _last_checkpoint_pointer(table)
-        cur = None
-        try:
-            with open(ptr) as f:
-                cur = int(json.load(f)["version"])
-        except (OSError, ValueError, KeyError, json.JSONDecodeError):
-            pass
+        cur = _read_pointer(table)
         if cur is None or v > cur:
             ptmp = os.path.join(
                 _log_path(table), f"_tmp_ptr_{uuid.uuid4().hex[:12]}"
             )
             with open(ptmp, "w") as f:
                 json.dump({"version": v}, f)
-            os.replace(ptmp, ptr)
+            os.replace(ptmp, _last_checkpoint_pointer(table))
     except OSError:
         pass
     return v
@@ -561,13 +558,7 @@ def vacuum_versioned(
     # the log listing O(total history).  Commit files are kept (tiny,
     # and they are the history/audit record); only the consolidated
     # snapshots are pruned.
-    suffix = ".checkpoint.json"
-    ckpts = sorted(
-        int(f[: -len(suffix)])
-        for f in os.listdir(_log_path(table))
-        if f.endswith(suffix) and f[: -len(suffix)].isdigit()
-    )
-    below = [v for v in ckpts if v <= cutoff]
+    below = [v for v in _checkpoint_versions(table) if v <= cutoff]
     if len(below) > 1:
         for v in below[:-1]:
             full = _checkpoint_file(table, v)

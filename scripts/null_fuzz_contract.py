@@ -359,7 +359,7 @@ SKEW_INTRINSIC = {
 # r10 #5).  Moved to an importable side-effect-free module so the
 # pytest guards import it instead of exec-ing a source slice of this
 # file (ADVICE r11 #3).
-from jibaro_spark.queries.staged_oracles import STAGED_ORACLES  # noqa: E402
+from jibaro_spark.queries.graph import STAGED_ORACLES  # noqa: E402
 
 
 # Value-size degeneracy class (sixth class, VERDICT r10 #1).  All

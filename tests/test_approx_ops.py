@@ -419,7 +419,7 @@ def test_knn_ivfpq_recall_matches_ivf_budget(spark, sf_dir, emb_local):
     re-rank) must hold the same recall floor as IVF-Flat at the same
     probe budget — the PQ stage with a rerank margin is near
     recall-neutral; cell probing is the limiting factor."""
-    from jibaro_spark.queries.round3 import q_knn_ivfpq
+    from jibaro_spark.queries.similarity import q_knn_ivfpq
 
     got = {}
     for r in q_knn_ivfpq(spark, sf_dir).collect():

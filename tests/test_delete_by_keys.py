@@ -4,8 +4,12 @@ targeting, exact row semantics, untouched files left byte-identical.
 
 from __future__ import annotations
 
+import uuid
+
+import pytest
 from pyspark.sql import functions as F
 
+from jibaro_spark import txlog
 from jibaro_spark.maintenance import build_bloom_file_index, delete_by_keys
 
 
@@ -65,3 +69,50 @@ def test_delete_absent_keys_noop_rows(spark, tmp_path):
     stats = delete_by_keys(spark, out, "k", [999_999])
     assert stats["rows_deleted"] == 0
     assert spark.read.parquet(out).count() == 4000
+
+
+def _clustered_with_small_file(spark, out, layout):
+    """8 range-clustered files of keys 0..3999, plus one file holding
+    only keys 5001..5003."""
+    big = spark.range(0, 4000).select(
+        F.col("id").alias("k"), (F.col("id") % 97).alias("v")
+    ).repartitionByRange(8, "k")
+    small = spark.createDataFrame(
+        [(5001, 1), (5002, 2), (5003, 3)], "k long, v long"
+    ).coalesce(1)
+    if layout == "txlog":
+        txlog.write_versioned(big, out, mode="overwrite")
+        txlog.write_versioned(small, out, mode="append")
+    else:
+        big.write.parquet(out)
+        small.write.mode("append").parquet(out)
+
+
+# Spark jobs one delete runs on a table without a bloom index: the
+# rewrite of the candidate files counts the deleted rows itself
+# (``Observation``), so no count job scans the candidates first.
+_DELETE_JOBS = {"bare": 2, "txlog": 1}
+
+
+@pytest.mark.parametrize("layout", ["bare", "txlog"])
+@pytest.mark.parametrize("keys", [[10, 20, 30], [5001, 5002, 5003]])
+def test_delete_counts_rows_in_the_rewrite_job(spark, tmp_path, layout, keys):
+    """[5001, 5002, 5003] empties the whole small file."""
+    out = str(tmp_path / layout)
+    _clustered_with_small_file(spark, out, layout)
+    sc = spark.sparkContext
+    group = f"delete_by_keys-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "delete_by_keys job count")
+    try:
+        stats = delete_by_keys(spark, out, "k", keys)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == _DELETE_JOBS[layout]
+    assert stats["rows_deleted"] == 3
+    assert stats["files_rewritten"] == 1
+    after = (
+        txlog.read_versioned(spark, out) if layout == "txlog" else spark.read.parquet(out)
+    )
+    assert after.count() == 4000
+    assert after.filter(F.col("k").isin(keys)).count() == 0

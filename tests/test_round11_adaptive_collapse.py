@@ -160,7 +160,7 @@ def test_cluster_query_identity_mapping_fast_path(spark, tmp_path):
     back to an identity rep mapping when the corpus is duplicate-free;
     every text-bearing doc must still appear exactly once with a
     cluster id."""
-    from jibaro_spark.queries.round10 import q_minhash_dedup_clusters
+    from jibaro_spark.queries.dedup import q_minhash_dedup_clusters
 
     docs = spark.createDataFrame(
         [

@@ -30,13 +30,13 @@ def _staged_stmts():
     """The staged twin lives in an importable side-effect-free module
     (no SparkSession on import) — ADVICE r11 #3 replaced the old
     exec-of-a-source-slice loader."""
-    from jibaro_spark.queries.staged_oracles import STAGED_ORACLES
+    from jibaro_spark.queries.graph import STAGED_ORACLES
 
     return STAGED_ORACLES["q_kcore_peel"]()
 
 
 def _registered_oracle():
-    from jibaro_spark.queries.round11 import QKC_ORACLE
+    from jibaro_spark.queries.graph import QKC_ORACLE
 
     return QKC_ORACLE
 

@@ -73,7 +73,7 @@ def test_short_docs_and_guards(spark):
 
 
 def test_fixture_query_is_nonvacuous(spark, sf_dir):
-    from jibaro_spark.queries.round38 import q_exact_substring_spans
+    from jibaro_spark.queries.dedup import q_exact_substring_spans
 
     out = q_exact_substring_spans(spark, sf_dir)
     rows = out.collect()

@@ -22,7 +22,7 @@ def _pairs_set(df):
 
 @pytest.fixture(scope="module")
 def planted_corpus(spark):
-    from jibaro_spark.queries.round4 import _planted_corpus
+    from jibaro_spark.queries.dedup import _planted_corpus
 
     emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
     return _planted_corpus(emb).cache()

@@ -58,7 +58,7 @@ def test_bloom_anti_join_short_circuits_negatives(spark):
 def test_theil_sen_pair_join_is_keyed(spark):
     """Pair generation joins on the nation key — never a cartesian
     product — and the median windows are nation-partitioned."""
-    from jibaro_spark.queries.round6d import q_theil_sen
+    from jibaro_spark.queries.stat_models import q_theil_sen
 
     plan = _executed_plan(q_theil_sen(spark, SF))
     assert "CartesianProduct" not in plan
@@ -92,7 +92,7 @@ def test_naive_bayes_model_join_is_broadcast(spark):
     """Scoring joins the (doc, token) stream against the lang-bounded
     model map-side: both model joins must be broadcast, no shuffled
     join on the token stream's scoring path."""
-    from jibaro_spark.queries.round6d import q_naive_bayes_lang
+    from jibaro_spark.queries.stat_models import q_naive_bayes_lang
 
     plan = _executed_plan(q_naive_bayes_lang(spark, SF))
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
@@ -106,7 +106,7 @@ def test_lorenz_rank_is_range_partitioned(spark, monkeypatch):
     probe routes the plain row_number window.  Both regimes pinned —
     the floor is dropped to force the chunked route."""
     import jibaro_spark.operators.relational as rel
-    from jibaro_spark.queries.round6e import q_lorenz_deciles
+    from jibaro_spark.queries.stat_tests import q_lorenz_deciles
 
     # test-scale default: the size probe routes the plain window
     plan = _executed_plan(q_lorenz_deciles(spark, SF))
@@ -125,7 +125,7 @@ def test_kmv_overlap_rank_is_salt_pruned(spark):
     """The per-group rank must be preceded by the (grp, salt) local
     bottom-k prune — the plan carries both window passes and never a
     partitionless window."""
-    from jibaro_spark.queries.round6d import q_kmv_overlap
+    from jibaro_spark.queries.sketches import q_kmv_overlap
 
     plan = _executed_plan(q_kmv_overlap(spark, SF))
     assert "SinglePartition" not in plan, plan

@@ -342,7 +342,7 @@ def test_exact_substring_null_doc_id_contract(spark):
     import duckdb
 
     from jibaro_spark.operators.dedup import duplicated_char_spans
-    from jibaro_spark.queries.round38 import QEXSUB_ORACLE
+    from jibaro_spark.queries.dedup import QEXSUB_ORACLE
 
     boiler = "x" * 60
     rows = [

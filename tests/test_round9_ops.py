@@ -312,7 +312,7 @@ def test_minmax_incremental_law(spark, fact, ops):
             st.sampled_from(sorted(set(range(n)) - del_idx))
             if len(del_idx) < n
             else st.nothing(),
-            max_size=n,
+            max_size=n - len(del_idx),
         )
     )
     inserts = ops.draw(

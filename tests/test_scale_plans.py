@@ -200,14 +200,14 @@ def test_pq_encode_codebook_join_is_broadcast(spark):
 def test_bm25_stats_sides_are_broadcast(spark):
     """Term stats (3 rows) and the scalar doc stats must broadcast;
     the token table is the only shuffled side."""
-    from jibaro_spark.queries.round3 import q_bm25_search
+    from jibaro_spark.queries.similarity import q_bm25_search
 
     plan = _executed_plan(q_bm25_search(spark, SF))
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan, plan
 
 
 def test_winsorize_quantile_join_is_broadcast(spark):
-    from jibaro_spark.queries.round3 import q_winsorize_stats
+    from jibaro_spark.queries.stat_models import q_winsorize_stats
 
     plan = _executed_plan(q_winsorize_stats(spark, SF))
     assert "BroadcastHashJoin" in plan, plan
@@ -322,7 +322,7 @@ def test_shufflehash_hint_picks_shuffled_hash_join(spark):
     SHUFFLE_HASH hint must yield ShuffledHashJoin (no sort of either
     side), with broadcast disabled so AQE can't upgrade the small
     fixture dim to a broadcast."""
-    from jibaro_spark.queries.round5 import q_shufflehash_join
+    from jibaro_spark.queries.relational import q_shufflehash_join
 
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -379,7 +379,7 @@ def test_mad_outlier_median_joins_are_broadcast(spark):
     """q_mad_outliers joins the full event stream against per-type
     median tables (one row per type) — both must be broadcast, never a
     shuffle of the stream onto a 5-row dimension."""
-    from jibaro_spark.queries.round5b import q_mad_outliers
+    from jibaro_spark.queries.stat_tests import q_mad_outliers
 
     plan = _executed_plan(q_mad_outliers(spark, SF))
     assert "BroadcastHashJoin" in plan
@@ -389,7 +389,7 @@ def test_mad_outlier_median_joins_are_broadcast(spark):
 def test_type_jaccard_is_inverted_index_join(spark):
     """q_type_jaccard builds candidates by shared user id (equi-join),
     never a cartesian cohort product; the size dimension is broadcast."""
-    from jibaro_spark.queries.round5b import q_type_jaccard
+    from jibaro_spark.queries.similarity import q_type_jaccard
 
     plan = _executed_plan(q_type_jaccard(spark, SF))
     assert "CartesianProduct" not in plan
@@ -405,7 +405,7 @@ def test_equidepth_ntile_has_no_single_partition_window(spark, monkeypatch):
     deliberate single-task stage for an under-floor input).  The
     at-scale regime is pinned by dropping the floor."""
     import jibaro_spark.operators.relational as rel
-    from jibaro_spark.queries.round5 import q_equidepth_histogram
+    from jibaro_spark.queries.relational import q_equidepth_histogram
 
     # test-scale default: the size probe routes the native window
     plan = _executed_plan(q_equidepth_histogram(spark, SF))
