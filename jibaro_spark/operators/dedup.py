@@ -30,6 +30,7 @@ from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 from pyspark.sql.window import Window
 
 from jibaro_spark.operators.util import (
@@ -817,11 +818,31 @@ _EDJ_BLOCK_SHARE = 2.0
 def _block_join_skew_safe(
     l: DataFrame, r: DataFrame, left_id: str, right_id: str
 ) -> DataFrame:
-    """Block equi-join for the edit-distance verify: dense exchange on
-    balanced blocks, k×k deterministic salt grid past the hot-block
-    bound (see the call site for the full rationale).  Probe cost is
-    one keys-only aggregate over both sides (map-side partial counts),
-    routed per side.
+    """Block equi-join for the edit-distance verify (see the call site
+    for the full rationale).
+
+    Below the hot-block bound it is the plain ``dense_exchange`` block
+    join, decided by one keys-only ``size_route`` probe over both sides
+    (map-side partial counts, routed per side).  Past it, the probe
+    also returns the hot blocks — over either side's own bound — and
+    only those go through a salt grid:
+
+    * the grid is ``a×b`` with ``a = ⌊√n⌋``, ``b = ⌊n/a⌋``, so its
+      ``a·b ≤ n`` cells fit the ``n`` exchange partitions; a left row
+      takes row ``pmod(xxhash64(id), a)`` and is replicated over the
+      ``b`` columns, a right row the other way round (deterministic
+      salts, never ``rand()``), so each (l, r) pair meets in exactly
+      one cell;
+    * every cell has its own partition: the join key is
+      ``(__blk, __cell)``, where ``__cell`` is a ``long`` picked per
+      (hot block, cell) so that ``pmod(hash(__blk, __cell), n)`` — the
+      expression hash partitioning evaluates — differs for every cell
+      of the block.  A small collect over the hot keys × ``32·n``
+      candidates takes the smallest key per partition; the keys reach
+      the rows through a broadcast join on ``__blk``, cast on both
+      sides to the type of their union;
+    * rows of the other blocks take ``__cell = -1`` and are not
+      replicated: one exchange per side serves both kinds of block.
     """
     import math
 
@@ -833,28 +854,72 @@ def _block_join_skew_safe(
     blocks = l.select("__blk").withColumn("__s", F.lit(0)).unionByName(
         r.select("__blk").withColumn("__s", F.lit(1))
     )
-    if size_route(
+    route = size_route(
         blocks, ["__blk"], max_abs=_EDJ_BLOCK_MAX_ABS, share=_EDJ_BLOCK_SHARE,
-        n_parts=n_parts, per=["__s"],
-    ).plain:
+        n_parts=n_parts, per=["__s"], hot_keys=True,
+    )
+    if route.plain:
         return dense_exchange(l, "__blk").join(r, ["__blk"])
-    k = max(int(math.ceil(math.sqrt(n_parts))), 2)
-    # salts on BOTH sides must be the same type (long) — an int/long
-    # mismatch makes the join key cast(__sr as bigint), the user
-    # repartition no longer satisfies the join's requirement, and the
-    # planner stacks its own exchange on top (defeating the dense one)
-    grid = F.explode(F.array(*[F.lit(i).cast("long") for i in range(k)]))
-    l2 = l.withColumn(
-        "__sl", F.pmod(F.xxhash64(F.col(left_id)), F.lit(k))
-    ).withColumn("__sr", grid)
-    r2 = r.withColumn(
-        "__sr", F.pmod(F.xxhash64(F.col(right_id)), F.lit(k))
-    ).withColumn("__sl", grid)
-    keys = ["__blk", "__sl", "__sr"]
+    # both sides' block keys take the union's type: the cell keys are
+    # placed by hashing it, and a join key cast on one side only would
+    # make the planner stack its own exchange on the dense one
+    blk = blocks.schema["__blk"]
+    l, r = (
+        df.withColumn("__blk", F.col("__blk").cast(blk.dataType)) for df in (l, r)
+    )
+    a = math.isqrt(n_parts)
+    b = n_parts // a
+    # per hot block, the smallest candidate key landing on each
+    # partition (32·n candidates miss a given partition with odds
+    # e⁻³²), then a·b of them in order: distinct per cell, padded with
+    # spare keys past the candidates if a partition was missed
+    tries = 32 * n_parts
+    candidate = F.explode(
+        F.sequence(F.lit(0).cast("long"), F.lit(tries - 1).cast("long"))
+    )
+    spare = F.array(*[F.lit(v).cast("long") for v in range(tries, tries + a * b)])
+    placed = (
+        spark.createDataFrame(list(route.hot), StructType([blk]))
+        .select("__blk", candidate.alias("__cell"))
+        .groupBy("__blk", F.pmod(F.hash("__blk", "__cell"), F.lit(n_parts)))
+        .agg(F.min("__cell").alias("__cell"))
+        .groupBy("__blk")
+        .agg(
+            F.slice(
+                F.concat(F.sort_array(F.collect_list("__cell")), spare), 1, a * b
+            ).alias("__cells")
+        )
+        .collect()
+    )
+    cells = F.broadcast(spark.createDataFrame(
+        placed, StructType([blk, StructField("__cells", ArrayType(LongType()))])
+    ))
+
+    def salted(df: DataFrame, id_col: str, k: int, scale: int, step: int):
+        # a left row takes its grid row (salt·b + j, j < b), a right row
+        # its column (salt + i·b, i < a); rows of the other blocks find
+        # no cell keys and keep one key, -1.  Keys are long: the
+        # placement hashed longs, and an int/long mismatch casts the
+        # join key, so the planner stacks its own exchange on top of
+        # the dense one
+        found = F.col("__cells")
+        salt = F.pmod(F.xxhash64(F.col(id_col)), F.lit(k)) * scale
+        mine = F.transform(
+            F.sequence(F.lit(0), F.lit(a * b // k - 1)),
+            lambda j: F.get(found, (salt + j * step).cast("int")),
+        )
+        own = F.when(found.isNull(), F.array(F.lit(-1).cast("long"))).otherwise(mine)
+        return (
+            df.join(cells, "__blk", "left")
+            .withColumn("__cell", F.explode(own))
+            .drop("__cells")
+        )
+
+    keys = ["__blk", "__cell"]
     return (
-        dense_exchange(l2, *keys)
-        .join(r2, keys)
-        .drop("__sl", "__sr")
+        dense_exchange(salted(l, left_id, a, b, 1), *keys)
+        .join(salted(r, right_id, b, 1, b), keys)
+        .drop("__cell")
     )
 
 
@@ -1009,13 +1074,15 @@ def edit_distance_join(
         # a CPU-quadratic block of short strings never trips the 256MB
         # threshold).  One bounded probe (the collapse-stats pattern,
         # guide §2.5) takes per-block max/total counts of BOTH sides in
-        # a single keys-only aggregate; when either side's hottest
-        # block exceeds the grid bound, the join runs on a k×k salt
-        # grid — each side replicated k ways on a DETERMINISTIC salt
-        # (pmod(xxhash64(id), k); guide §2.5 forbids rand() keys) — so
-        # the hot block's quadratic verify spreads over k² tasks.
-        # Each (l, r) pair matches exactly one (sl, sr) cell → results
-        # identical (pinned in tests/test_round13_edj_skew.py).
+        # a single keys-only aggregate.  Below the bound the join is the
+        # plain dense block join.  Past it, only the hot blocks run on
+        # an a×b salt grid (a·b ≤ n exchange partitions; DETERMINISTIC
+        # salts pmod(xxhash64(id), ·), guide §2.5 forbids rand() keys),
+        # and each cell gets its own partition through a long-typed
+        # cell key, so a hot block's quadratic verify spreads over a·b
+        # tasks; the other blocks' rows are not replicated.  Each
+        # (l, r) pair matches exactly one cell → results identical
+        # (pinned in tests/test_round13_edj_skew.py).
         if on:
             joined = _block_join_skew_safe(l, r, left_id, right_id)
         else:

@@ -2,7 +2,8 @@
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
+from functools import reduce
 from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
@@ -42,12 +43,14 @@ def ensure_parallelism(
 @dataclass(frozen=True)
 class Route:
     """One probe-then-route decision and the counts behind it:
-    ``plain`` iff ``max_group <= bound``."""
+    ``plain`` iff ``max_group <= bound``.  ``hot`` holds the key rows
+    of the groups over their bound when the probe was asked for them."""
 
     plain: bool
     max_group: int
     total: int
     bound: float
+    hot: tuple = ()
 
 
 def size_route(
@@ -58,6 +61,7 @@ def size_route(
     share: float,
     n_parts: int,
     per: "Sequence[str]" = (),
+    hot_keys: bool = False,
 ) -> Route:
     """Group-size probe shared by every probe-then-route operator.
 
@@ -77,14 +81,19 @@ def size_route(
     plain only when every value passes; the returned counts are those
     of the value furthest over (or closest to) its bound.
 
+    ``hot_keys=True`` also fills ``Route.hot`` with the distinct
+    ``group_cols`` rows of every group over its own ``per`` value's
+    bound, in a second collect that only runs when the route is not
+    plain.  It is bounded: each such group holds over ``share /
+    n_parts`` of its value's rows, so there are fewer than ``n_parts /
+    share`` of them per value.
+
     The probe executes ``df``'s subtree: callers that read the frame
     again afterwards pin it first.
     """
-    keys = [*per, *group_cols]
+    counts = df.groupBy(*per, *group_cols).agg(F.count(F.lit(1)).alias("__c"))
     stats = (
-        df.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("__c"))
-        .groupBy(*per)
+        counts.groupBy(*per)
         .agg(F.max("__c").alias("mx"), F.sum("__c").alias("n"))
         .collect()
     )
@@ -93,8 +102,30 @@ def size_route(
         bound = float(max(max_abs, share * n / n_parts))
         return Route(mx <= bound, mx, n, bound)
 
-    routes = [route(r["mx"] or 0, r["n"] or 0) for r in stats] or [route(0, 0)]
-    return max(routes, key=lambda r: r.max_group - r.bound)
+    routes = [(s, route(s["mx"] or 0, s["n"] or 0)) for s in stats]
+    worst = max(
+        (rt for _, rt in routes),
+        key=lambda r: r.max_group - r.bound,
+        default=route(0, 0),
+    )
+    if not hot_keys or worst.plain:
+        return worst
+    over = [
+        reduce(
+            lambda acc, p: acc & F.col(p).eqNullSafe(s[p]),
+            per,
+            F.col("__c") > rt.bound,
+        )
+        for s, rt in routes
+        if not rt.plain
+    ]
+    hot = (
+        counts.filter(reduce(lambda x, y: x | y, over))
+        .select(*[c for c in counts.columns if c not in (*per, "__c")])
+        .distinct()
+        .collect()
+    )
+    return replace(worst, hot=tuple(hot))
 
 
 def dense_exchange(df: DataFrame, *cols: str, n: int | None = None) -> DataFrame:

@@ -1,23 +1,30 @@
 """Round-13 skew-safety guards for ``edit_distance_join``'s block path.
 
 The blocked candidate join runs behind ``dense_exchange``, which opts
-out of AQE skew-splitting; r13 adds a per-block count probe and a k×k
-deterministic salt grid past the hot-block bound so a skewed block key
-cannot hot-spot a single task with the quadratic verify (VERDICT r12
-#4/#7).  Pinned here, on a fixture whose hottest block holds 50% of
-both sides:
+out of AQE skew-splitting; r13 adds a per-block count probe and an a×b
+deterministic salt grid for the blocks past the hot-block bound so a
+skewed block key cannot hot-spot a single task with the quadratic
+verify (VERDICT r12 #4/#7).  Pinned here, on a fixture whose hottest
+block holds 50% of both sides:
 
 * the probe decision: balanced blocks → dense route; the 50%-hot key
   (with the absolute floor lowered to test scale) → grid route;
 * pair-set identity: grid-salted join ≡ plain block equi-join ≡ the
   dense route (forced by raising the floor past every block),
   end-to-end through ``edit_distance_join``;
+* pair identity also when the two sides' block keys differ in type
+  (``int`` against ``bigint``);
 * spread: under the grid the hot block's pair fan-out lands on many
   partitions (max per-partition rows ≪ the hot block's full product —
-  the unsalted exchange puts ALL of it in one partition).
+  the unsalted exchange puts ALL of it in one partition);
+* layout: each of the hot block's a·b cells has its own exchange
+  partition, rows of the other blocks cross the exchange once, and the
+  join plans one shuffle per side.
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import functions as F
 
@@ -63,6 +70,83 @@ def test_grid_spreads_hot_block(monkeypatch, hot_sides, spark):
     # the grid must spread it over many
     assert max(pid_counts) < hot_product / 4
     assert len(pid_counts) > 4
+
+
+def _shuffle_records(spark, after_stage: int) -> tuple[int, int]:
+    """Highest stage id and the shuffle records written by stages past
+    ``after_stage``, from Spark's status store."""
+    ctx = spark.sparkContext
+    sc = ctx._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    no_quantiles = ctx._gateway.new_array(ctx._jvm.double, 0)
+    stages = sc.statusStore().stageList(None, False, False, no_quantiles, None)
+    top, written = after_stage, 0
+    for i in range(stages.size()):
+        st = stages.apply(i)
+        top = max(top, st.stageId())
+        if st.stageId() > after_stage:
+            written += st.shuffleWriteRecords()
+    return top, written
+
+
+def test_grid_cells_own_partitions_cold_rows_once(monkeypatch, hot_sides, spark):
+    l, r = hot_sides
+    monkeypatch.setattr(dd, "_EDJ_BLOCK_MAX_ABS", 100)
+    n = max(
+        spark.sparkContext.defaultParallelism,
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
+    )
+    a = math.isqrt(n)
+    b = n // a
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        out = dd._block_join_skew_safe(l, r, "lid", "rid")
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        top, _ = _shuffle_records(spark, -1)
+        out.write.format("noop").mode("overwrite").save()
+        _, written = _shuffle_records(spark, top)
+        cell = F.pmod(F.xxhash64("lid"), F.lit(a)) * b + F.pmod(
+            F.xxhash64("rid"), F.lit(b)
+        )
+        placed = (
+            out.filter(F.col("__blk") == "hot")
+            .select(cell.alias("cell"), F.spark_partition_id().alias("p"))
+            .distinct()
+            .collect()
+        )
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    # every cell on one partition, no two cells on the same one
+    assert len(placed) == a * b
+    assert len({row["cell"] for row in placed}) == a * b
+    assert len({row["p"] for row in placed}) == a * b
+    # 200 hot rows a side: the left replicated over b columns, the
+    # right over a rows; the 200 rows of the other blocks go once each
+    assert written == 200 * b + 200 * a + 200 + 200
+    exchanges = [ln for ln in plan.splitlines() if "Exchange hashpartitioning" in ln]
+    assert len(exchanges) == 2 and all("__cell" in ln for ln in exchanges), plan
+
+
+def test_grid_matches_plain_across_block_key_types(monkeypatch, hot_sides, spark):
+    # an int left block key against a bigint right one: the union widens
+    # to bigint, and the grid must place and join both sides on it
+    l, r = hot_sides
+    num = F.when(F.col("__blk") == "hot", 0).otherwise(
+        F.regexp_extract("__blk", r"\d+", 0).cast("int") + 1
+    )
+    l = l.withColumn("__blk", num)
+    r = r.withColumn("__blk", num.cast("long"))
+    monkeypatch.setattr(dd, "_EDJ_BLOCK_MAX_ABS", 100)
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        out = dd._block_join_skew_safe(l, r, "lid", "rid")
+        got = _pairs(out)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    expected = _pairs(l.join(r, ["__blk"]))
+    assert got == expected and len(got) == 200 * 200 + 4 * 4 * 50
 
 
 def test_balanced_blocks_keep_dense_route(monkeypatch, spark):

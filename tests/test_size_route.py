@@ -8,6 +8,8 @@ NTILE, the edit-distance block join).  Pinned here:
 * the ``per=`` form agrees with the edit-distance join's former inline
   rule (hot iff a side's biggest block exceeds BOTH the floor and the
   share bound) across floors around the hot block's size;
+* ``hot_keys=True`` returns exactly the groups over their own ``per``
+  value's bound, and nothing on the plain route;
 * the groupless probe runs no more Spark jobs than ``df.count()``.
 """
 
@@ -100,3 +102,16 @@ def test_groupless_probe_jobs_match_count(spark, hot_sides):
     assert n_count >= 1
     assert n_probe <= n_count
     assert size_route(df, (), max_abs=-1, share=0, n_parts=4).total == df.count()
+
+
+def test_size_route_hot_keys(spark):
+    # side 0: "x" (300 of 400 rows) is over its bound 2.0 * 400 / 8 =
+    # 100, "y" (60) is not; side 1 holds 2 rows a group, under its
+    # floor of 50, so its "y" is not listed either
+    rows = [(0, "x")] * 300 + [(0, "y")] * 60 + [(0, f"g{i}") for i in range(40)]
+    rows += [(1, "y")] * 2 + [(1, f"h{i}") for i in range(2)]
+    df = spark.createDataFrame(rows, "s int, k string")
+    route = size_route(df, ["k"], max_abs=50, share=2.0, n_parts=8, per=["s"], hot_keys=True)
+    assert not route.plain and [tuple(h) for h in route.hot] == [("x",)]
+    plain = size_route(df, ["k"], max_abs=10**6, share=2.0, n_parts=8, per=["s"], hot_keys=True)
+    assert plain.plain and plain.hot == ()
