@@ -35,7 +35,7 @@ from __future__ import annotations
 
 from typing import Any, Callable, Mapping, NamedTuple, Protocol
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 MAGIC_BYTE = b"\x00"
@@ -573,6 +573,12 @@ KAFKA_META_COLS = ["topic", "partition", "offset", "timestamp", "timestampType"]
 #: read at call time.
 SPILL_THRESHOLD = 16
 
+#: Scratch dirs :func:`pair_frames`' staged route has written and
+#: :func:`release_scratch` has not yet removed.  Kept per process, not
+#: returned: the route's frames read the dir lazily, so it must outlive
+#: the call, and callers keep the list-of-frames interface.
+_STAGED_SCRATCH: "set[str]" = set()
+
 
 def pair_frames(
     sliced: DataFrame,
@@ -597,9 +603,10 @@ def pair_frames(
     difference between a 10k-distinct-schema-id batch decoding in two
     data passes and a 10k-fold job storm re-scanning the batch per id.
     The driver loop stays O(pairs) metadata work either way (the
-    reference's loop shape, ``avro_handler.py:41-96``).  The caller
-    owns ``scratch_dir`` cleanup (it holds one re-partitioned copy of
-    the batch).
+    reference's loop shape, ``avro_handler.py:41-96``).  The route
+    overwrites whatever a failed attempt left in ``scratch_dir``; once
+    the frames are consumed, :func:`release_scratch` removes the copy.
+    The direct route makes no file-system call.
 
     Tombstone pairs (null valueSchemaId) are routed BEFORE staging:
     ``drop`` filters them out of the scratch write entirely.
@@ -658,9 +665,10 @@ def pair_frames(
         .repartition(
             spark.sparkContext.defaultParallelism, "__kid", "__vid"
         )
-        .write.partitionBy("__kid", "__vid")
+        .write.mode("overwrite").partitionBy("__kid", "__vid")
         .parquet(scratch_dir)
     )
+    _STAGED_SCRATCH.add(scratch_dir)
 
     # the leaf files hold exactly the sliced schema (partitionBy drops
     # only the __kid/__vid copies) — passing it explicitly skips the
@@ -677,6 +685,19 @@ def pair_frames(
         return spark.read.schema(leaf_schema).parquet(leaf)
 
     return [(k, v, _staged(k, v)) for k, v in pairs]
+
+
+def release_scratch(spark: SparkSession, scratch_dir: str) -> None:
+    """Remove the batch copy :func:`pair_frames`' staged route wrote to
+    ``scratch_dir``; call it once the frames are consumed.  A no-op,
+    with no file-system call, when the route did not run."""
+    if scratch_dir not in _STAGED_SCRATCH:
+        return
+    from jibaro_spark.maintenance import _fs
+
+    fs, p = _fs(spark, scratch_dir)
+    fs.delete(p, True)
+    _STAGED_SCRATCH.discard(scratch_dir)
 
 
 def resolve_schema_or_policy(

@@ -15,11 +15,16 @@ environment; every call site accepts an explicit ``fmt=`` override.
 
 from __future__ import annotations
 
+import json
+import uuid
 from typing import Any
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+from pyspark.sql.types import StructType
 
 from jibaro_spark.catalog import Catalog, TableRef
 from jibaro_spark.session import has_delta
@@ -102,9 +107,14 @@ def read_stream(
 ) -> DataFrame:
     """Streaming read by coordinates (reference ``streaming.py:11-51``).
 
-    For the parquet emulation of a Delta source, a schema is required
-    by Structured Streaming; when absent we infer it from a batch read
-    of the same path (driver-side, metadata only).
+    Structured Streaming needs the schema of a path-mounted source up
+    front (Delta brings its own from its log).  Without ``schema=``
+    the table's schema record is used: the ``_schema.json`` the hop
+    that writes the table keeps beside it
+    (:func:`update_schema_record`), read with one file open and no
+    Spark job.  Only a table that has no record falls back to
+    inference, a Spark job over the footers of every file of the table
+    (:func:`infer_schema`).
     """
     fmt = fmt or default_table_format(spark)
     path = catalog.path(ref)
@@ -112,16 +122,106 @@ def read_stream(
         options = {**options, "maxFilesPerTrigger": str(max_files_per_trigger)}
     reader = spark.readStream.format(fmt).options(**options)
     if schema is None and fmt in PATH_FORMATS - {"delta"}:
-        infer = spark.read.format(fmt)
-        if fmt == "parquet":
-            # union of ALL file schemas, not the first file's — staged
-            # tables evolve mid-stream (K2 mergeSchema appends) and a
-            # first-file schema would silently drop evolved columns
-            infer = infer.option("mergeSchema", "true")
-        schema = infer.load(path).schema
+        record = read_schema_record(spark, catalog, ref)
+        schema = (
+            StructType.fromJson(record["schema"]) if record
+            else infer_schema(spark, path, fmt)
+        )
     if schema is not None:
         reader = reader.schema(schema)
     return reader.load(path)
+
+
+#: The schema record's file name in a table root: ``_``-prefixed, so
+#: Spark's listing (and ``maintenance._listing``) never reads it as data.
+SCHEMA_RECORD = "_schema.json"
+
+
+def infer_schema(spark: SparkSession, path: str, fmt: str = "parquet") -> StructType:
+    """The schema a batch read of ``path`` infers: one Spark job.  For
+    parquet it is the union of ALL file schemas (``mergeSchema``), not
+    the first file's: staged tables evolve mid-stream (K2 appends) and
+    a first-file schema would silently drop evolved columns."""
+    infer = spark.read.format(fmt)
+    if fmt == "parquet":
+        infer = infer.option("mergeSchema", "true")
+    return infer.load(path).schema
+
+
+def read_schema_record(
+    spark: SparkSession, catalog: Catalog, ref: TableRef
+) -> "dict | None":
+    """The table's ``_schema.json`` record, or None when it has none:
+    ``{"schema": <StructType JSON>, "keys": [...]}``."""
+    from jibaro_spark.maintenance import _fs
+
+    fs, p = _fs(spark, f"{catalog.path(ref)}/{SCHEMA_RECORD}")
+    try:
+        stream = fs.open(p)
+    except Py4JJavaError as ex:
+        if ex.java_exception.getClass().getName() == "java.io.FileNotFoundException":
+            return None
+        raise
+    try:
+        text = spark.sparkContext._jvm.org.apache.commons.io.IOUtils.toString(
+            stream, "UTF-8"
+        )
+    finally:
+        stream.close()
+    return json.loads(text)
+
+
+def _write_schema_record(
+    spark: SparkSession, catalog: Catalog, ref: TableRef, record: dict
+) -> None:
+    """Replace the table's record atomically: the JSON is written under
+    a hidden temporary name in the table root, then renamed over the
+    record with ``FileContext``'s overwriting rename."""
+    from jibaro_spark.maintenance import _fs
+
+    root = catalog.path(ref)
+    fs, tmp = _fs(spark, f"{root}/.{SCHEMA_RECORD}.{uuid.uuid4().hex}")
+    out = fs.create(tmp, True)
+    try:
+        out.write(json.dumps(record).encode())
+    finally:
+        out.close()
+    jvm = spark.sparkContext._jvm
+    rename = jvm.org.apache.hadoop.fs.Options.Rename
+    opts = spark.sparkContext._gateway.new_array(rename, 1)
+    opts[0] = rename.OVERWRITE
+    jvm.org.apache.hadoop.fs.FileContext.getFileContext(
+        tmp.toUri(), spark.sparkContext._jsc.hadoopConfiguration()
+    ).rename(tmp, jvm.org.apache.hadoop.fs.Path(f"{root}/{SCHEMA_RECORD}"), opts)
+
+
+def update_schema_record(
+    spark: SparkSession,
+    catalog: Catalog,
+    ref: TableRef,
+    keys: "list[str]",
+    record: "dict | None",
+) -> "dict | None":
+    """Keep the table's schema record true after a write and return it.
+
+    ``keys`` name the file schemas the write added, in the writing
+    hop's own terms (a schema pair, a digest of the stream schema);
+    ``record`` is the record as the caller last read it.  When every
+    key is already recorded the table schema cannot have changed and
+    nothing is read or written.  Otherwise the schema is inferred once
+    (:func:`infer_schema`) and recorded with the keys, so the record
+    always equals what inference would give.  A table with no files
+    to infer from gets no record."""
+    known = set(record["keys"]) if record else set()
+    if not keys or set(keys) <= known:
+        return record
+    try:
+        schema = infer_schema(spark, catalog.path(ref))
+    except AnalysisException:  # nothing written yet
+        return record
+    record = {"schema": schema.jsonValue(), "keys": sorted(known | set(keys))}
+    _write_schema_record(spark, catalog, ref, record)
+    return record
 
 
 def write_stream(

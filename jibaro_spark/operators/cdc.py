@@ -85,9 +85,9 @@ def cdc_apply(
     small relative to the target (Catalyst/AQE decides).
     """
     batch = latest_changes_per_key(envelope, key_cols, order_by)
-    batch_keys = batch.select(
-        *[F.col(f"key.{k}").alias(k) for k in key_cols]
-    ).distinct()
+    # one row per key already: no distinct (a left-anti join ignores
+    # duplicate keys anyway)
+    batch_keys = batch.select(*[F.col(f"key.{k}").alias(k) for k in key_cols])
     survivors = target.join(batch_keys, on=list(key_cols), how="left_anti")
     return survivors.unionByName(_after_images(batch), allowMissingColumns=True)
 

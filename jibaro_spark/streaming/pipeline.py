@@ -16,26 +16,51 @@ Delivery semantics (T4, tightened per ADVICE r1): the staged append is
 made replay-idempotent explicitly, not by claim — on Delta via
 transactional ``txnAppId``/``txnVersion`` (a replayed ``batch_id`` is
 skipped by the commit protocol); on the parquet emulation by writing
-each micro-batch under a ``_batch_id``/``_schema_pair`` partition with
-dynamic partition overwrite, so a replay after a crash between write
-and checkpoint commit REWRITES the same partition instead of
-duplicating rows.  The curated hop is idempotent by construction
-(latest-per-key dedup + keyed MERGE absorbs replays).
+each (micro-batch, schema pair) to its own leaf directory,
+``_batch_id=N/_schema_pair=P``, with a plain overwrite of exactly that
+leaf, so a replay after a crash between write and checkpoint commit
+REWRITES the same leaf instead of duplicating rows.  The leaf is a
+Hive partition of the staged table, so readers see ``_batch_id`` and
+``_schema_pair`` columns as before; unlike a dynamic-partition
+overwrite of the table root, the write needs no ``.spark-staging``
+directory and no partition renames at commit.  A leaf may hold one
+zero-row file (Spark's first write task keeps its file when it holds
+none of the pair's rows); it lands beside the leaf's other files, so
+the curated hop reads it in the same micro-batch as they are.  The
+curated hop is idempotent by construction (latest-per-key dedup +
+keyed MERGE absorbs replays).
+
+Schema handover: a hop that writes a parquet table keeps its schema in
+the table root (``_schema.json``, :func:`jibaro_spark.io.
+update_schema_record`), and the next hop's :func:`jibaro_spark.io.
+read_stream` takes it from there instead of inferring it with a Spark
+job over every file.  ``source_to_raw`` keys the record by the stream
+schema and ``raw_to_staged`` by schema pair (a Confluent id never
+changes its schema), so only a new stream schema or a new pair costs
+one inference.
 """
 
 from __future__ import annotations
 
+import hashlib
 from typing import Any, Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from jibaro_spark.catalog import Catalog, Layer, TableRef
 from jibaro_spark.codecs.confluent import (
     SchemaRegistry,
     decode_confluent_batch_pairs,
 )
-from jibaro_spark.io import read_stream, write_stream, write_table
-from jibaro_spark.maintenance import _fs
+from jibaro_spark.io import (
+    default_table_format,
+    read_schema_record,
+    read_stream,
+    update_schema_record,
+    write_stream,
+    write_table,
+)
 from jibaro_spark.operators.cdc import cdc_merge_table
 from jibaro_spark.session import has_kafka
 
@@ -82,10 +107,17 @@ def source_to_raw(
 ) -> None:
     """Kafka-shaped streaming DataFrame → raw-layer table (binary
     payloads + metadata, no decode — raw layer = exact source bytes,
-    reference ``cdc.py:38-51``)."""
+    reference ``cdc.py:38-51``).  On parquet the raw table's schema
+    record is keyed by a digest of ``stream.schema``."""
     ref = TableRef(str(Layer.RAW), project, database, table)
     q = write_stream(stream, catalog, ref, output_mode="append")
     q.awaitTermination()
+    if default_table_format(stream.sparkSession) != "delta":
+        key = hashlib.sha256(stream.schema.json().encode()).hexdigest()[:16]
+        update_schema_record(
+            stream.sparkSession, catalog, ref, [key],
+            read_schema_record(stream.sparkSession, catalog, ref),
+        )
 
 
 def raw_to_staged(
@@ -111,9 +143,11 @@ def raw_to_staged(
     the jar-free ones alike), and ``schema_resolver`` is optional on every lane — by default each
     id's reader schema is the codec's reading of the registry text.
     Replay safety (module docstring): Delta appends carry
-    ``txnAppId``/``txnVersion=batch_id``; parquet appends land in a
-    ``_batch_id``/``_schema_pair`` partition overwritten dynamically,
-    so re-processing a micro-batch cannot duplicate staged rows.
+    ``txnAppId``/``txnVersion=batch_id``; parquet appends overwrite
+    their own ``_batch_id=N/_schema_pair=P`` leaf in place, so
+    re-processing a micro-batch cannot duplicate staged rows.  On
+    parquet the staged schema record is keyed by schema pair: a batch
+    of known pairs writes no record and infers no schema.
 
     ``on_unknown_schema`` (r12): ``"error"`` (default) fails the
     micro-batch loudly on a frame whose schema id the registry cannot
@@ -126,10 +160,7 @@ def raw_to_staged(
     an undecoded frame (decoded values are structs/strings; a
     tombstone-keep/keyless null binary carries a NULL id).
     """
-    from pyspark.sql import functions as F
-
-    from jibaro_spark.codecs.confluent import CODECS
-    from jibaro_spark.io import default_table_format
+    from jibaro_spark.codecs.confluent import CODECS, release_scratch
 
     if content_type not in CODECS:
         # validate eagerly — inside foreachBatch the error would be
@@ -139,37 +170,35 @@ def raw_to_staged(
         )
     src = TableRef(str(Layer.RAW), project, database, table)
     dst = TableRef(str(Layer.STAGED), project, database, table)
-
-    def _rm(spark_, path: str) -> None:
-        fs, p = _fs(spark_, path)
-        if fs.exists(p):
-            fs.delete(p, True)
+    dlq = TableRef(str(Layer.STAGED), project, database, f"{table}__dead_letter")
+    fmt = default_table_format(spark)
+    # the staged schema record as last read or written, across the
+    # micro-batches of this call
+    staged_record = read_schema_record(spark, catalog, dst) if fmt != "delta" else None
 
     def process(batch: DataFrame, batch_id: int) -> None:
-        fmt = default_table_format(batch.sparkSession)
+        nonlocal staged_record
+        # scratch enables pair_frames' staged route: a many-schema
+        # batch (pairs > SPILL_THRESHOLD) is re-partitioned ONCE by
+        # schema pair so each per-pair append reads only its own
+        # partition directory — O(batch) total scan instead of
+        # O(pairs × batch) (the 10k-distinct-id job storm, VERDICT
+        # r11 #2).  That route overwrites the scratch dir and
+        # release_scratch removes it; the common few-schema batch takes
+        # the direct filters and touches no file system.
         scratch = f"{catalog.checkpoint_path(dst)}/_decode_scratch/{batch_id}"
-        # a replayed batch may find a prior attempt's scratch — the
-        # staged write is not idempotent (plain parquet write), so
-        # clear it first; the appends themselves stay idempotent via
-        # txn/dynamic-partition as documented above
-        _rm(batch.sparkSession, scratch)
         try:
-            # scratch enables pair_frames' staged route: a many-schema
-            # batch (pairs > SPILL_THRESHOLD) is re-partitioned ONCE by
-            # schema pair so each per-pair append reads only its own
-            # partition directory — O(batch) total scan instead of
-            # O(pairs × batch) (the 10k-distinct-id job storm, VERDICT
-            # r11 #2); the common few-schema batch takes the direct
-            # filters and never touches the scratch dir.
             pairs = decode_confluent_batch_pairs(
                 batch, registry, content_type, schema_resolver,
                 scratch_dir=scratch, on_unknown_schema=on_unknown_schema,
             )
-            _write_pairs(batch, batch_id, fmt, pairs)
+            written = _write_pairs(batch_id, pairs)
         finally:
-            _rm(batch.sparkSession, scratch)
-
-    dlq = TableRef(str(Layer.STAGED), project, database, f"{table}__dead_letter")
+            release_scratch(batch.sparkSession, scratch)
+        if fmt != "delta":
+            staged_record = update_schema_record(
+                batch.sparkSession, catalog, dst, written, staged_record
+            )
 
     def _is_dead_letter(decoded: DataFrame, key_id, value_id) -> bool:
         types = dict(decoded.dtypes)
@@ -180,22 +209,36 @@ def raw_to_staged(
     def _write_partition(decoded: DataFrame, ref: TableRef, batch_id: int,
                          pair: str) -> None:
         # idempotent append: the (batch, schema pair) partition is
-        # overwritten dynamically, so a replayed batch cannot duplicate
-        write_table(
-            decoded.withColumn("_batch_id", F.lit(batch_id))
-            .withColumn("_schema_pair", F.lit(pair)),
-            catalog, ref, mode="overwrite",
-            partition_by=["_batch_id", "_schema_pair"],
-            partitionOverwriteMode="dynamic",
+        # overwritten, so a replayed batch cannot duplicate
+        if fmt == "delta":
+            write_table(
+                decoded.withColumn("_batch_id", F.lit(batch_id))
+                .withColumn("_schema_pair", F.lit(pair)),
+                catalog, ref, mode="overwrite",
+                partition_by=["_batch_id", "_schema_pair"],
+                partitionOverwriteMode="dynamic",
+            )
+            return
+        # parquet: a plain overwrite of exactly the leaf; no _SUCCESS
+        # marker, as the dynamic-partition write left none in leaves
+        leaf = f"{catalog.path(ref)}/_batch_id={batch_id}/_schema_pair={pair}"
+        (
+            decoded.write.mode("overwrite")
+            .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+            .parquet(leaf)
         )
 
-    def _write_pairs(batch: DataFrame, batch_id: int, fmt: str, pairs) -> None:
+    def _write_pairs(batch_id: int, pairs) -> "list[str]":
+        """Write each decoded pair; returns the pairs written to the
+        staged table itself."""
+        written = []
         for (key_id, value_id), decoded in pairs:
+            pair = f"{key_id}-{value_id}"
             if _is_dead_letter(decoded, key_id, value_id):
                 # undecodable pair (on_unknown_schema='keep'): park the
                 # raw frames idempotently beside the staged table; they
                 # replay through this hop once the registry resolves
-                _write_partition(decoded, dlq, batch_id, f"{key_id}-{value_id}")
+                _write_partition(decoded, dlq, batch_id, pair)
                 continue
             if fmt == "delta":
                 # txnAppId must be unique PER SCHEMA PAIR: Delta's idempotent
@@ -204,13 +247,13 @@ def raw_to_staged(
                 # the first pair's append in a multi-schema batch.
                 write_table(
                     decoded, catalog, dst, mode="append", merge_schema=True,
-                    txnAppId=(
-                        f"raw_to_staged:{catalog.path(dst)}:{key_id}-{value_id}"
-                    ),
+                    txnAppId=f"raw_to_staged:{catalog.path(dst)}:{pair}",
                     txnVersion=str(batch_id),
                 )
             else:
-                _write_partition(decoded, dst, batch_id, f"{key_id}-{value_id}")
+                _write_partition(decoded, dst, batch_id, pair)
+            written.append(pair)
+        return written
 
     stream = read_stream(
         spark, catalog, src,
@@ -238,8 +281,12 @@ def staged_to_curated(
     dst = TableRef(str(Layer.CURATED), project, database, table)
 
     def process(batch: DataFrame, batch_id: int) -> None:
-        if not batch.take(1):
-            return
+        # a micro-batch holds rows: the stream runs no batch when no
+        # file is new, and the only zero-row staged files are leaves'
+        # first-task files (module docstring), each written beside
+        # non-empty ones.  Only a max_files_per_trigger of 1 or 2 could
+        # cut a batch of zero-row files alone, and its MERGE would
+        # commit a version that changes no row.
         metrics = cdc_merge_table(
             spark, catalog, batch, dst, key_cols=list(key_cols), order_by=list(order_by)
         )

@@ -247,8 +247,8 @@ def test_schema_evolution_mid_stream(spark, lake, registry):
 def test_staged_append_replay_idempotent(spark, lake, registry):
     """A replayed micro-batch (crash between staged write and
     checkpoint commit) must not duplicate staged rows (ADVICE r1): the
-    parquet emulation lands each batch in a ``_batch_id``/pair
-    partition rewritten via dynamic partition overwrite."""
+    parquet emulation lands each batch in a ``_batch_id``/pair leaf
+    that a replay overwrites in place."""
     import shutil
 
     reg, kid, vid = registry
