@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from jibaro_spark.catalog import Catalog, TableRef
 from jibaro_spark.operators.bloom import _positions, _word_bit
+from jibaro_spark.operators.util import local_frame
 from jibaro_spark.session import has_delta
 
 
@@ -690,9 +691,7 @@ def build_bloom_file_index(
         max_rows = max((r["num_rows"] for r in rows), default=1)
         num_bits = 1 << max(13, min(24, math.ceil(math.log2(max(10 * max_rows, 2)))))
     words = _bloom_words(snap.df, col, num_bits, num_hashes)
-    meta = spark.createDataFrame(
-        [(num_bits, num_hashes)], "num_bits int, num_hashes int"
-    )
+    meta = local_frame(spark, [(num_bits, num_hashes)], "num_bits int, num_hashes int")
     words.write.mode("overwrite").parquet(f"{idx_path}/words")
     meta.write.mode("overwrite").parquet(f"{idx_path}/meta")
     return idx_path
@@ -855,7 +854,7 @@ def _bloom_candidates(
     key_type = snap.df.schema[col].dataType
     word_idx, bit = _word_bit(F.col("__pos"))
     pos = (
-        spark.createDataFrame([(v,) for v in values], f"__k {key_type.simpleString()}")
+        local_frame(spark, [(v,) for v in values], f"__k {key_type.simpleString()}")
         .select(
             "__k",
             F.explode(

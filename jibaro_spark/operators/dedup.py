@@ -36,6 +36,7 @@ from pyspark.sql.window import Window
 from jibaro_spark.operators.util import (
     dense_exchange,
     ensure_parallelism,
+    local_frame,
     size_route,
 )
 
@@ -879,7 +880,7 @@ def _block_join_skew_safe(
     )
     spare = F.array(*[F.lit(v).cast("long") for v in range(tries, tries + a * b)])
     placed = (
-        spark.createDataFrame(list(route.hot), StructType([blk]))
+        local_frame(spark, route.hot, StructType([blk]))
         .select("__blk", candidate.alias("__cell"))
         .groupBy("__blk", F.pmod(F.hash("__blk", "__cell"), F.lit(n_parts)))
         .agg(F.min("__cell").alias("__cell"))
@@ -891,8 +892,8 @@ def _block_join_skew_safe(
         )
         .collect()
     )
-    cells = F.broadcast(spark.createDataFrame(
-        placed, StructType([blk, StructField("__cells", ArrayType(LongType()))])
+    cells = F.broadcast(local_frame(
+        spark, placed, StructType([blk, StructField("__cells", ArrayType(LongType()))])
     ))
 
     def salted(df: DataFrame, id_col: str, k: int, scale: int, step: int):

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from jibaro_spark.operators.util import local_frame
+
 
 def _large_star(edges: DataFrame) -> DataFrame:
     """(u,v) → for every neighbor v > u of u: (v, m) where m is the
@@ -155,7 +157,7 @@ def connected_components(
             )
             out_schema = labels_proto.union(roots_proto).schema
             data = sorted(labels.items())
-            return norm.sparkSession.createDataFrame(data, out_schema)
+            return local_frame(norm.sparkSession, data, out_schema)
     # Nodes come from the UNFILTERED pairs: a node appearing only as a
     # self-pair (u,u) still owes an output row (its own singleton
     # component) per the contract above — filtering self-loops first

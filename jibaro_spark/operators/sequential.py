@@ -40,6 +40,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from jibaro_spark.operators.util import dense_exchange, local_frame
+
 
 def clamped_cumsum(
     df: DataFrame,
@@ -286,25 +288,29 @@ def dtw_distance_pairs(
     # C(k,2) ≈ 5×10^9-row pair plan.  Same precedent as
     # ``dedup.edit_distance_join``'s explicit blocking requirement —
     # pass a larger ``max_keys`` to opt in deliberately.
-    # a NULL key is not a series (and None breaks the key sort below)
+    # a NULL key is not a series (and None breaks the key sort below).
+    # One probe: one key past the bound is enough to refuse.
     series = series.filter(F.col(key_col).isNotNull())
-    n_keys = series.select(key_col).distinct().count()
-    if n_keys > max_keys:
+    keys = sorted(
+        r[0] for r in series.select(key_col).distinct().limit(max_keys + 1).collect()
+    )
+    if len(keys) > max_keys:
         raise ValueError(
             f"dtw_distance_pairs builds all C(k,2) pairs driver-side: "
-            f"{n_keys} distinct keys exceeds max_keys={max_keys}; "
+            f"more than max_keys={max_keys} distinct keys; "
             f"pre-aggregate/bucket the key domain or raise max_keys "
             f"explicitly if the quadratic pair plan is intended"
         )
-    keys = [r[0] for r in series.select(key_col).distinct().collect()]
-    keys.sort()
+    spark = series.sparkSession
     pairs = [(a, b) for i, a in enumerate(keys) for b in keys[i + 1 :]]
     if not pairs:
-        return series.sparkSession.createDataFrame(
-            [], f"key_a string, key_b string, n_a long, n_b long, dtw double"
+        return local_frame(
+            spark, [], "key_a string, key_b string, n_a long, n_b long, dtw double"
         )
-    spark = series.sparkSession
-    pair_df = spark.createDataFrame(pairs, ["key_a", "key_b"])
+    key_type = series.schema[key_col].dataType
+    pair_df = local_frame(
+        spark, pairs, T.StructType([T.StructField(c, key_type) for c in ("key_a", "key_b")])
+    )
     s = series.select(
         F.col(key_col).alias("__k"),
         F.col(order_col).alias("__t"),
@@ -351,8 +357,6 @@ def dtw_distance_pairs(
     # and AQE's byte-based coalescing otherwise runs the bounded pair
     # domain on 1-2 tasks; this plans the same exchange the grouped
     # applyInPandas needs, at full parallelism.
-    from jibaro_spark.operators.util import dense_exchange
-
     return dense_exchange(tagged, "key_a", "key_b").groupBy(
         "key_a", "key_b"
     ).applyInPandas(

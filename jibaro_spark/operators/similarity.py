@@ -24,7 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from jibaro_spark.operators.util import ensure_parallelism
+from jibaro_spark.operators.util import ensure_parallelism, local_frame
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -1080,7 +1080,7 @@ def train_pq_codebook(
         for s in range(m)
         for cid, c in enumerate(cents_by_sub[s])
     ]
-    return spark.createDataFrame(out_rows, "sub int, cid int, cvec array<float>")
+    return local_frame(spark, out_rows, "sub int, cid int, cvec array<float>")
 
 
 def mmr_select(
@@ -1160,6 +1160,6 @@ def mmr_select(
         picks.append((rank, r[id_col], float(r[rel_col]), float(r["__score"])))
         sel_vecs.append([float(x) for x in r[vec_col]])
         df = df.filter(F.col(id_col) != r[id_col])
-    return spark.createDataFrame(
-        picks, f"rank long, {id_col} long, {rel_col} double, mmr_score double"
+    return local_frame(
+        spark, picks, f"rank long, {id_col} long, {rel_col} double, mmr_score double"
     )

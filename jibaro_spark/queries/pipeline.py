@@ -16,6 +16,7 @@ from jibaro_spark.operators import dedup as dd
 from jibaro_spark.operators import multimodal as mm
 from jibaro_spark.operators import textops as tx
 from jibaro_spark.operators.cdc import cdc_apply
+from jibaro_spark.operators.util import local_frame
 from jibaro_spark.queries.registry import _NORM, _TOKS, declare, load_tables
 
 
@@ -444,8 +445,10 @@ def q_cdc_dedup_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    empty_target = envelope.sparkSession.createDataFrame(
-        [], "o_orderkey bigint, o_custkey bigint, o_totalprice double, op string"
+    empty_target = local_frame(
+        envelope.sparkSession,
+        [],
+        "o_orderkey bigint, o_custkey bigint, o_totalprice double, op string",
     )
     return cdc_apply(empty_target, envelope, key_cols=["o_orderkey"]).orderBy(
         "o_orderkey"
@@ -1146,11 +1149,10 @@ def q_dq_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
         li, t["orders"], ["fk_key"], ["o_orderkey"]
     ).count()
     n_rows = li.count()
-    fk_row = (
-        li.sparkSession.createDataFrame(
-            [("fk_order_exists", n_rows, n_fk_bad, n_fk_bad == 0)],
-            "rule string, n_rows long, n_violations long, pass boolean",
-        )
+    fk_row = local_frame(
+        li.sparkSession,
+        [("fk_order_exists", n_rows, n_fk_bad, n_fk_bad == 0)],
+        "rule string, n_rows long, n_violations long, pass boolean",
     )
     return row_rules.unionByName(fk_row).orderBy("rule")
 
@@ -1922,9 +1924,7 @@ def q_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_tables(spark, sf_dir, "customer")["customer"]
     g = cust.groupBy("c_nationkey", "c_mktsegment").agg(F.count(F.lit(1)).alias("s"))
     tot = g.agg(F.sum("s").cast("bigint").alias("n"))
-    ladder = spark.range(0).sparkSession.createDataFrame(
-        [(2,), (5,), (10,), (25,)], "k int"
-    )
+    ladder = local_frame(spark, [(2,), (5,), (10,), (25,)], "k int")
     return (
         F.broadcast(ladder)
         .crossJoin(g)

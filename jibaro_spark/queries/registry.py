@@ -17,11 +17,13 @@ Cross-engine determinism rules (Spark vs DuckDB value-hash):
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -60,8 +62,36 @@ def declare(name: str, oracle: str | None = None, description: str = ""):
     return deco
 
 
+#: Inferred schemas of the files ``load_tables`` read, by
+#: :func:`_schema_key`.
+_SCHEMAS: dict[tuple, StructType] = {}
+
+
+def _schema_key(path: str, confs: tuple) -> "tuple | None":
+    """What a parquet file's inferred schema depends on: its absolute
+    path, each data file's size and ``mtime_ns`` (one file, or every
+    file under a directory) and the session's parquet-inference confs.
+    None when nothing local is there to stamp (a remote URI)."""
+    path = os.path.abspath(path)
+    if os.path.isfile(path):
+        files = [path]
+    else:
+        files = sorted(os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs)
+    if not files:
+        return None
+    stats = tuple((f, st.st_size, st.st_mtime_ns) for f in files for st in [os.stat(f)])
+    return (path, stats, confs)
+
+
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
     """Load fixture parquet tables (TESTDATA.md layout).
+
+    A file that has not changed since its last load reuses the schema
+    inferred then, so a repeated load runs no Spark job (inference is
+    one job per file).  The cache key is the absolute path, the size
+    and ``mtime_ns`` of every data file under it, and the session's
+    ``spark.sql.parquet.*`` and ``spark.sql.legacy.parquet.*`` confs;
+    a rewritten file or a changed conf is inferred again.
 
     ``events.ts`` is written as parquet TIMESTAMP(NANOS).  Spark ≤ 4.0
     maps it to long only under ``spark.sql.legacy.parquet.nanosAsLong``
@@ -85,9 +115,26 @@ def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, Data
     from jibaro_spark.session import _ship_package
 
     _ship_package(spark)
+    # the conf names come in one py4j call (``conf.getAll`` costs one
+    # per entry)
+    conf_names = spark.conf._jconf.getAllAsJava().keySet().toString()[1:-1].split(", ")
+    confs = tuple(
+        sorted(
+            (k, spark.conf.get(k))
+            for k in conf_names
+            if k.startswith(("spark.sql.parquet.", "spark.sql.legacy.parquet."))
+        )
+    )
     out: dict[str, DataFrame] = {}
     for n in names:
-        df = spark.read.parquet(f"{sf_dir}/{n}.parquet")
+        path = f"{sf_dir}/{n}.parquet"
+        key = _schema_key(path, confs)
+        if key in _SCHEMAS:
+            df = spark.read.schema(_SCHEMAS[key]).parquet(path)
+        else:
+            df = spark.read.parquet(path)
+            if key is not None:
+                _SCHEMAS[key] = df.schema
         for fld in df.schema.fields:
             if n == "events" and fld.name == "ts":
                 if fld.dataType.simpleString() == "bigint":

@@ -16,6 +16,7 @@ from pyspark.sql.window import Window
 
 from jibaro_spark.operators import similarity as sim
 from jibaro_spark.operators import textops as tx
+from jibaro_spark.operators.util import local_frame
 from jibaro_spark.queries.registry import _TOKS, declare, load_tables
 
 
@@ -1859,13 +1860,13 @@ def q_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # covariance rounded at 1e-6 is ulp-noise the two engines resolve
     # differently — the sf0.01 lesson).  Rounding happens IN-ENGINE
     # (F.round ≡ DuckDB ROUND); Python's round() is banker's.
-    spark_ = spark
     num = F.lit(n) * F.col("sab") - F.col("sa") * F.col("sb")
     den = F.sqrt(
         (F.lit(n) * F.col("saa") - F.col("sa") * F.col("sa"))
         * (F.lit(n) * F.col("sbb") - F.col("sb") * F.col("sb"))
     )
-    cov = spark_.createDataFrame(
+    cov = local_frame(
+        spark,
         raw_rows,
         "i int, j int, sab double, sa double, sb double, saa double, sbb double",
     ).select(
@@ -1875,7 +1876,7 @@ def q_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.round(num / den, 10))
         .alias("c"),
     )
-    v = spark_.createDataFrame([(i, 0.5) for i in range(1, 5)], "i int, v double")
+    v = local_frame(spark, [(i, 0.5) for i in range(1, 5)], "i int, v double")
     nrm_df = None
     for _ in range(3):
         u = (

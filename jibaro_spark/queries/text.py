@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from jibaro_spark.operators import textops as tx
+from jibaro_spark.operators.util import local_frame
 from jibaro_spark.queries.registry import _NORM, _TOKS, _zipgrams, declare, load_tables
 
 
@@ -976,9 +977,7 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         .count()
     )
     merges = bpe_train(wc, "w", "count", num_merges=12)
-    return spark.createDataFrame(
-        merges, "round int, left string, right string, freq long"
-    )
+    return local_frame(spark, merges, "round int, left string, right string, freq long")
 
 
 # ---------------------------------------------------------------------------

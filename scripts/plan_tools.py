@@ -6,6 +6,7 @@ Usage:
     python scripts/plan_tools.py plan  q_a q_b ...   [--tag before|after] [--plan-dir DIR]
     python scripts/plan_tools.py both  q_a q_b ...   [--sf-dir DIR]
     python scripts/plan_tools.py sweep [q_a q_b ...]
+    python scripts/plan_tools.py sweep --jobs [q_a q_b ...]
 
 Timing methodology matches bench.py exactly: noop sink, N runs
 (default 2), report min.  Plans go to <plan-dir>/<name>_<tag>.txt
@@ -18,6 +19,15 @@ evals — one JSON line each, then lists the worst scan amplification
 (scans far above the distinct tables touched: a likely duplicated
 subtree).  Plan-only: probe jobs that run at construction execute,
 nothing is timed.
+
+``sweep --jobs`` (default: every registry query) builds and runs each
+query and counts the Spark jobs of each phase by job group: one JSON
+line per query with ``construct_jobs``/``construct_s`` (``fn(spark,
+sf_dir)``, eager probes and pins included), ``execute_jobs``/
+``execute_s`` (every row produced and dropped, as ``toRdd().count()``)
+and ``pyrdd`` (a ``PythonRDD`` in the executed RDD lineage: rows the
+driver pickled, unpickled again by Python workers), then the registry
+totals.
 """
 from __future__ import annotations
 
@@ -76,6 +86,43 @@ def _sweep(spark, sf_dir: str, names: list[str]) -> None:
               f"win={r['win']}  {r['q']}", flush=True)
 
 
+def _jobs_sweep(spark, sf_dir: str, names: list[str]) -> None:
+    from jibaro_spark.queries import REGISTRY
+
+    sc = spark.sparkContext
+    tot = {"queries": 0, "errors": 0, "construct_jobs": 0, "construct_s": 0.0,
+           "execute_jobs": 0, "execute_s": 0.0, "pyrdd": 0}
+
+    def phase(group: str, action):
+        sc.setJobGroup(group, group)
+        t0 = time.perf_counter()
+        try:
+            out = action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group)), time.perf_counter() - t0
+
+    for i, name in enumerate(names):
+        try:
+            df, cj, cs = phase(f"{i}/{name}/construct", lambda: REGISTRY[name].fn(spark, sf_dir))
+            qe = df._jdf.queryExecution()
+            # toRdd runs the adaptive plan's shuffle stages, count the rest
+            _, ej, es = phase(f"{i}/{name}/execute", lambda: qe.toRdd().count())
+        except Exception as e:  # noqa: BLE001
+            tot["errors"] += 1
+            print(f"{name}: ERROR {str(e)[:300]}", flush=True)
+            continue
+        row = {"q": name, "construct_jobs": cj, "construct_s": round(cs, 3),
+               "execute_jobs": ej, "execute_s": round(es, 3),
+               "pyrdd": "PythonRDD" in qe.toRdd().toDebugString()}
+        print(json.dumps(row, separators=(",", ":")), flush=True)
+        for k in ("construct_jobs", "construct_s", "execute_jobs", "execute_s", "pyrdd"):
+            tot[k] += row[k]
+        tot["queries"] += 1
+    tot["construct_s"], tot["execute_s"] = round(tot["construct_s"], 1), round(tot["execute_s"], 1)
+    print(json.dumps({"totals": tot}, separators=(",", ":")), flush=True)
+
+
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("mode", choices=("time", "plan", "both", "sweep"))
@@ -84,7 +131,9 @@ def main() -> None:
     ap.add_argument("--tag", default="before")
     ap.add_argument("--plan-dir", default="plans")
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR"))
-    args = ap.parse_args()
+    ap.add_argument("--jobs", action="store_true",
+                    help="sweep: count and time each phase's Spark jobs")
+    args = ap.parse_intermixed_args()
     if not args.sf_dir:
         ap.error("no fixture: pass --sf-dir or set SPARK_GRAFT_SF_DIR")
     if not args.names and args.mode != "sweep":
@@ -104,6 +153,10 @@ def main() -> None:
         except Exception:
             pass
 
+    if args.mode == "sweep" and args.jobs:
+        _jobs_sweep(spark, sf_dir, args.names or sorted(REGISTRY))
+        spark.stop()
+        return
     if args.mode == "sweep":
         from bench import HEADLINE
 
