@@ -23,7 +23,6 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -62,25 +61,15 @@ def declare(name: str, oracle: str | None = None, description: str = ""):
     return deco
 
 
-#: Inferred schemas of the files ``load_tables`` read, by
-#: :func:`_schema_key`.
-_SCHEMAS: dict[tuple, StructType] = {}
-
-
-def _schema_key(path: str, confs: tuple) -> "tuple | None":
-    """What a parquet file's inferred schema depends on: its absolute
-    path, each data file's size and ``mtime_ns`` (one file, or every
-    file under a directory) and the session's parquet-inference confs.
-    None when nothing local is there to stamp (a remote URI)."""
-    path = os.path.abspath(path)
+def _file_stamp(path: str) -> tuple:
+    """Size and ``mtime_ns`` of each data file under ``path`` (one
+    file, or every file of a directory table); empty when nothing local
+    is there (a remote URI)."""
     if os.path.isfile(path):
         files = [path]
     else:
         files = sorted(os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs)
-    if not files:
-        return None
-    stats = tuple((f, st.st_size, st.st_mtime_ns) for f in files for st in [os.stat(f)])
-    return (path, stats, confs)
+    return tuple((f, st.st_size, st.st_mtime_ns) for f in files for st in [os.stat(f)])
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
@@ -88,10 +77,11 @@ def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, Data
 
     A file that has not changed since its last load reuses the schema
     inferred then, so a repeated load runs no Spark job (inference is
-    one job per file).  The cache key is the absolute path, the size
-    and ``mtime_ns`` of every data file under it, and the session's
-    ``spark.sql.parquet.*`` and ``spark.sql.legacy.parquet.*`` confs;
-    a rewritten file or a changed conf is inferred again.
+    one job per file).  The session keeps one schema per absolute
+    path, with what it was inferred under: the size and ``mtime_ns``
+    of every data file under the path, and the session's
+    ``spark.sql.parquet.*`` and ``spark.sql.legacy.parquet.*`` confs.
+    A rewritten file or a changed conf is inferred again.
 
     ``events.ts`` is written as parquet TIMESTAMP(NANOS).  Spark ≤ 4.0
     maps it to long only under ``spark.sql.legacy.parquet.nanosAsLong``
@@ -125,16 +115,22 @@ def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, Data
             if k.startswith(("spark.sql.parquet.", "spark.sql.legacy.parquet."))
         )
     )
+    schemas = getattr(spark, "_jibaro_schemas", None)
+    if schemas is None:
+        schemas = {}
+        setattr(spark, "_jibaro_schemas", schemas)
     out: dict[str, DataFrame] = {}
     for n in names:
         path = f"{sf_dir}/{n}.parquet"
-        key = _schema_key(path, confs)
-        if key in _SCHEMAS:
-            df = spark.read.schema(_SCHEMAS[key]).parquet(path)
+        full = os.path.abspath(path)
+        key = (_file_stamp(full), confs)
+        known = schemas.get(full)
+        if key[0] and known and known[0] == key:
+            df = spark.read.schema(known[1]).parquet(path)
         else:
             df = spark.read.parquet(path)
-            if key is not None:
-                _SCHEMAS[key] = df.schema
+            if key[0]:
+                schemas[full] = (key, df.schema)
         for fld in df.schema.fields:
             if n == "events" and fld.name == "ts":
                 if fld.dataType.simpleString() == "bigint":

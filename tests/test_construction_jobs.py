@@ -74,7 +74,9 @@ def test_parquet_conf_change_is_inferred_again(spark, tmp_path):
         assert _load(spark, tmp_path, "c", "conf-2")[0] == 1
     finally:
         spark.conf.unset(key)
-    assert _load(spark, tmp_path, "c", "conf-3")[0] == 0
+    # one schema per path: the one inferred under the last confs
+    assert _load(spark, tmp_path, "c", "conf-3")[0] == 1
+    assert _load(spark, tmp_path, "c", "conf-4")[0] == 0
 
 
 def test_dtw_construction_job_count(spark):
