@@ -16,11 +16,14 @@ are no old versions to reclaim); at 100 TB you run a versioned format.
 
 from __future__ import annotations
 
+import json
 import math
 import os
+import shutil
 import uuid
 from dataclasses import dataclass
 from functools import cached_property
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -221,12 +224,11 @@ def _replace(
         writer.save(snap.path)
     else:
         new_files = _swap_files(snap, old, df)
-    sidecars = _bloom_sidecars(snap.local)
-    if sidecars:
+    if os.path.isdir(os.path.join(snap.local, "_bloom")):
         if snap.format != "parquet":
             after = _snapshot(snap.spark, snap.path).files
             new_files = sorted(set(after) - set(snap.files))
-        _update_bloom_sidecars(snap.spark, sidecars, df.schema, old, new_files)
+        _update_bloom_sidecars(snap.spark, snap.local, df.schema, old, new_files)
     return version
 
 
@@ -275,9 +277,9 @@ def compact(
     count that gates the rewrite is the snapshot's, not the
     directory's (which also holds not-yet-vacuumed history).
 
-    ``_bloom`` sidecars (:func:`build_bloom_file_index`) are keyed by
-    file; :func:`_replace` drops the rows of the rewritten files and
-    indexes the new ones with the original parameters.
+    ``_bloom`` sidecars (:func:`build_bloom_file_index`) hold one
+    directory per file; :func:`_replace` deletes the rewritten files'
+    and indexes the new ones with the original parameters.
     """
     s = catalog.settings
     snap = _snapshot(spark, catalog.path(ref))
@@ -655,57 +657,61 @@ def build_bloom_file_index(
     (every file's range covers the probe); a per-file Bloom does,
     with zero false negatives by construction.
 
-    One scan builds every file's filter simultaneously:
-    ``input_file_name()`` keys the rows, each value explodes to its
-    ``num_hashes`` bit positions (the seeded-xxhash64 family of
-    ``operators/bloom.py``, ``_positions``, so filters are portable),
-    and a ``bit_or`` per (file, word) folds map-side.  The sparse (file,
-    word_idx, word) rows — at most ``files × num_bits/64``, zero
-    words omitted — land in a ``_bloom`` sidecar dir (the leading
-    underscore keeps every parquet reader from listing it as data).
+    One scan of the snapshot's files (:func:`_bloom_words`) builds
+    every file's filter; on a txlog table a directory read would also
+    index dead versions' files.  The sidecar at ``<path>/_bloom/<col>`` (the
+    underscore hides it from parquet readers) is ``meta.json``
+    (``num_bits``, ``num_hashes``) plus ``words/file=<data-file
+    basename>/``, one directory per data file, so a rewrite's upkeep
+    (:func:`_update_bloom_sidecars`) touches only the files it
+    replaces and writes.  ``meta.json`` is removed before the words are
+    written and written last: a sidecar without it is not an index.
 
-    ``num_bits=None`` (the default) SIZES THE FILTER TO THE DATA: a
-    fixed width silently saturates on dense files — 20k keys into the
-    old 2¹⁶-bit default left ~70% of bits set, a ~25% false-positive
-    rate PER KEY per file, so a multi-key probe admitted nearly every
-    file and "pruned" reads/deletes regressed to table scans (measured
-    in ``scripts/delete_scale_demo.py`` before this fix).  Auto-sizing
-    reads per-file row counts from the parquet FOOTERS (no data scan)
-    and allocates ~10 bits per row of the largest file (the standard
-    m = −n·ln p/ln²2 at p≈1%), clamped to [2¹³, 2²⁴] — ≤2 MiB of
-    filter per file, a ~2% overhead on 128 MiB files.  Explicit
-    ``num_bits`` is honored unchanged (rewrites keep the original
-    parameters via the sidecar's meta).
+    ``num_bits=None`` (the default) sizes the filter to the data: a
+    fixed width saturates on dense files (20k keys in 2¹⁶ bits is a
+    ~25% false-positive rate per key per file, so a multi-key probe
+    admits nearly every file).  The largest file's row count, from the
+    parquet footers, gets ~10 bits per row (m = −n·ln p/ln²2 at
+    p≈1%), clamped to [2¹³, 2²⁴]: ≤2 MiB of filter per file.  An
+    explicit ``num_bits`` is honored unchanged.
 
     Returns the sidecar path.  Every rewrite through :func:`_replace`
     (compaction, OPTIMIZE ZORDER, DELETE, the CDC merge) updates the
     index; a plain append does not, and readers then treat the new
-    files as unindexed.  The build scans the current snapshot's files
-    (on a txlog table a whole-directory read would index dead
-    versions' files — phantom candidates — and double-count rows).
+    files as unindexed.
     """
-    idx_path = f"{path.rstrip('/')}/_bloom/{col}"
     snap = _snapshot(spark, path)
     if num_bits is None:
         rows = parquet_file_stats(path, [], files=snap.files)
         max_rows = max((r["num_rows"] for r in rows), default=1)
         num_bits = 1 << max(13, min(24, math.ceil(math.log2(max(10 * max_rows, 2)))))
+    idx_dir = os.path.join(snap.local, "_bloom", col)
+    meta = os.path.join(idx_dir, "meta.json")
+    if os.path.exists(meta):
+        os.remove(meta)
     words = _bloom_words(snap.df, col, num_bits, num_hashes)
-    meta = local_frame(spark, [(num_bits, num_hashes)], "num_bits int, num_hashes int")
-    words.write.mode("overwrite").parquet(f"{idx_path}/words")
-    meta.write.mode("overwrite").parquet(f"{idx_path}/meta")
-    return idx_path
+    words.write.mode("overwrite").partitionBy("file").parquet(os.path.join(idx_dir, "words"))
+    with open(meta + ".tmp", "w") as f:
+        json.dump({"num_bits": int(num_bits), "num_hashes": int(num_hashes)}, f)
+    os.replace(meta + ".tmp", meta)
+    return f"{path.rstrip('/')}/_bloom/{col}"
 
 
 def _bloom_words(df: DataFrame, col: str, num_bits: int, num_hashes: int) -> DataFrame:
-    """The (file, word_idx, word) sparse Bloom rows for ``df``'s files
-    — the shared kernel of :func:`build_bloom_file_index` (full table)
-    and the incremental sidecar update in :func:`_update_bloom_sidecars`
-    (new files only)."""
+    """The sparse (file, word_idx, word) Bloom rows of ``df``'s files,
+    ``file`` being the data file's basename: each value explodes to its
+    ``num_hashes`` bit positions (``operators/bloom.py``'s
+    ``_positions``, so filters are portable), a ``bit_or`` per (file,
+    word) folds map-side, and zero words are omitted.  The rows are
+    then clustered by file, so each ``words/file=`` directory is
+    written whole by one task."""
     pos = F.col("__pos")
     word_idx, bit = _word_bit(pos)
     return (
-        df.select(F.input_file_name().alias("file"), F.col(col).alias("__k"))
+        df.select(
+            F.element_at(F.split(F.input_file_name(), "/"), -1).alias("file"),
+            F.col(col).alias("__k"),
+        )
         .filter(F.col("__k").isNotNull())
         .select(
             "file",
@@ -716,6 +722,7 @@ def _bloom_words(df: DataFrame, col: str, num_bits: int, num_hashes: int) -> Dat
         .select("file", word_idx.alias("word_idx"), bit.alias("__bit"))
         .groupBy("file", "word_idx")
         .agg(F.bit_or("__bit").alias("word"))
+        .repartition("file")
     )
 
 
@@ -765,7 +772,7 @@ def delete_by_keys(
     1. a ``_bloom`` sidecar for ``col`` (:func:`build_bloom_file_index`)
        → probe every key (:func:`_bloom_candidates`): a file is a
        candidate iff SOME key's bits are all set, or the index has no
-       rows for it (written after the build) — zero false negatives,
+       directory for it (written after the build) — zero false negatives,
        so skipping non-candidates is always safe;
     2. else parquet footer min/max (:func:`parquet_file_stats`) →
        range overlap (files without stats are candidates).
@@ -779,10 +786,9 @@ def delete_by_keys(
     trade as ``compact``); on Delta an error, since that is Delta's
     own DELETE.  Either way erasing k keys rewrites O(k) files, never
     the table — including ``_bloom`` sidecar upkeep, which is
-    INCREMENTAL (ADVICE r8 / VERDICT r8 item 2): rows of rewritten
-    files are dropped from each sidecar and rows for the new files
-    are computed by scanning ONLY those, with ``num_bits``/
-    ``num_hashes`` unchanged.
+    INCREMENTAL (:func:`_update_bloom_sidecars`): the rewritten files'
+    directories are deleted and ONLY the new files are scanned, with
+    ``num_bits``/``num_hashes`` unchanged.
 
     Returns ``{"files_total", "files_rewritten", "rows_deleted"}``
     (plus ``"version"`` on a txlog table: the DELETE commit, or None
@@ -836,20 +842,20 @@ def _bloom_candidates(
     snap: _Snapshot, col: str, values: list
 ) -> "list[str] | None":
     """The snapshot's files that may hold one of ``values`` per the
-    ``_bloom/<col>`` sidecar, or None when there is no sidecar.  A file
+    ``_bloom/<col>`` index, or None when there is no index.  A file
     is a candidate iff some key finds all its probe bits set (zero
     false negatives over the files the index covers) or the index has
-    no rows for it (written after the build, so the index cannot rule
-    it out).  Index-bounded: values × num_hashes probe rows join the
-    index rows at their word slots, and each collect is at most the
-    index's file list.  Files match on basenames: part files of one
-    table are uuid-unique, and ``input_file_name()`` (index rows) and
-    the snapshot may spell the ``file:`` scheme differently."""
-    idx_path = os.path.join(snap.local, "_bloom", col)
-    if not os.path.isdir(os.path.join(idx_path, "words")):
+    no directory for it (written after the build, so the index cannot
+    rule it out).  The probe joins values × num_hashes rows to the
+    index rows at their word slots, and only the probe runs Spark
+    jobs: the meta and the covered files come from the sidecar's
+    ``meta.json`` and directory names.  Files match on basenames: part
+    files of one table are uuid-unique."""
+    index = _bloom_index(os.path.join(snap.local, "_bloom", col))
+    if index is None:
         return None
+    meta, covered, words_dir = index
     spark = snap.spark
-    meta = spark.read.parquet(f"{idx_path}/meta").collect()[0]
     num_bits, num_hashes = meta["num_bits"], meta["num_hashes"]
     key_type = snap.df.schema[col].dataType
     word_idx, bit = _word_bit(F.col("__pos"))
@@ -863,7 +869,7 @@ def _bloom_candidates(
         )
         .select("__k", word_idx.alias("word_idx"), bit.alias("__bit"))
     )
-    words = spark.read.parquet(f"{idx_path}/words")
+    words = spark.read.schema("word_idx int, word bigint, file string").parquet(words_dir)
     hits = (
         pos.join(words, "word_idx")
         .withColumn("__set", F.col("word").bitwiseAND(F.col("__bit")) != 0)
@@ -877,15 +883,9 @@ def _bloom_candidates(
             (F.col("__nslot") == num_hashes) & (F.col("__nset") == num_hashes)
         )
         .select("file")
-        .distinct()
         .collect()
     )
-    indexed = words.select("file").distinct().collect()
-
-    def names(rows):
-        return {r["file"].rsplit("/", 1)[-1] for r in rows}
-
-    hit, covered = names(hits), names(indexed)
+    hit = {r["file"] for r in hits}
     return [
         f
         for f in snap.files
@@ -893,53 +893,48 @@ def _bloom_candidates(
     ]
 
 
-def _bloom_sidecars(local: str) -> "list[str]":
-    """The intact ``_bloom/<col>`` index dirs of the table at ``local``."""
-    root = os.path.join(local, "_bloom")
-    if not os.path.isdir(root):
-        return []
-    return [
-        os.path.join(root, c)
-        for c in sorted(os.listdir(root))
-        if os.path.isdir(os.path.join(root, c, "meta"))
-        and os.path.isdir(os.path.join(root, c, "words"))
-    ]
+def _bloom_index(idx_dir: str) -> "tuple[dict, dict[str, str], str] | None":
+    """(meta, covered, words dir) of the index at ``idx_dir``:
+    ``covered`` maps each indexed data file's basename to its
+    ``words/file=`` directory.  None without a ``meta.json``: no index,
+    an unfinished build, or a sidecar of an older layout."""
+    try:
+        with open(os.path.join(idx_dir, "meta.json")) as f:
+            meta = json.load(f)
+    except FileNotFoundError:
+        return None
+    words = os.path.join(idx_dir, "words")
+    names = os.listdir(words) if os.path.isdir(words) else []
+    covered = {unquote(n[5:]): os.path.join(words, n) for n in names if n.startswith("file=")}
+    return meta, covered, words
 
 
 def _update_bloom_sidecars(
     spark: SparkSession,
-    sidecars: "list[str]",
+    local: str,
     schema,
     removed_files: list[str],
     new_files: list[str],
 ) -> None:
-    """Incrementally reconcile each ``_bloom/<col>`` sidecar dir after
-    a rewrite: drop words rows whose file is one of ``removed_files``,
-    append words built by scanning ONLY ``new_files`` (same
-    ``num_bits``/``num_hashes`` as the original build, so the filters
-    stay one family).  Cost is O(index size + new-file bytes),
-    independent of table size — the property that keeps
-    :func:`delete_by_keys` O(k files) end-to-end (ADVICE r8).  Files
-    match on basenames, as in :func:`_bloom_candidates`."""
-    removed_names = [
-        f.replace("file:", "").rsplit("/", 1)[-1] for f in removed_files
-    ]
-    for idx_dir in sidecars:
-        m = spark.read.parquet(os.path.join(idx_dir, "meta")).collect()[0]
-        words_dir = os.path.join(idx_dir, "words")
-        merged = spark.read.parquet(words_dir).filter(
-            ~F.element_at(F.split(F.col("file"), "/"), -1).isin(removed_names)
-        )
+    """Bring each ``_bloom/<col>`` index of the table at ``local`` up
+    to date after a rewrite: delete the ``words/file=`` directories of
+    ``removed_files``, then append the words of ``new_files`` (scanned
+    alone, with the index's ``num_bits``/``num_hashes``) in one write.
+    No index row is read, so upkeep is O(removed files + new-file
+    bytes) whatever the table's size.  Each new file's directory is
+    written by one task, and the committer moves it into ``words``
+    whole.  A crash part-way leaves directories of files no snapshot
+    lists (never candidates) or new files without one (always
+    candidates)."""
+    removed = {f.rsplit("/", 1)[-1] for f in removed_files}
+    for col in sorted(os.listdir(os.path.join(local, "_bloom"))):
+        index = _bloom_index(os.path.join(local, "_bloom", col))
+        if index is None:
+            continue
+        meta, covered, words_dir = index
+        for name in removed & covered.keys():
+            shutil.rmtree(covered[name])
         if new_files:
-            merged = merged.unionByName(
-                _bloom_words(
-                    spark.read.schema(schema).parquet(*new_files),
-                    os.path.basename(idx_dir),
-                    int(m["num_bits"]),
-                    int(m["num_hashes"]),
-                )
-            )
-        # overwriting the directory we are reading from — materialize
-        # the merged rows first (the sidecar is index-sized, tiny next
-        # to the table)
-        merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(words_dir)
+            new = spark.read.schema(schema).parquet(*new_files)
+            words = _bloom_words(new, col, meta["num_bits"], meta["num_hashes"])
+            words.write.mode("append").partitionBy("file").parquet(words_dir)

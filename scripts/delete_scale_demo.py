@@ -9,6 +9,8 @@ index the key, delete the same k keys from each, and compare:
 * wall time of the delete — should be near-flat across the 8× tables
   (the r8 implementation rescanned the whole table per indexed column
   to rebuild the sidecar, which made this ratio track table size);
+* Spark jobs the delete runs, counted by job group — should not grow
+  with table size;
 * a follow-up bloom point read stays exact on both.
 
 Prints one JSON line; paste into SCALE.md.
@@ -22,6 +24,7 @@ import shutil
 import sys
 import tempfile
 import time
+import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -54,9 +57,17 @@ def build(spark, root: str, n_files: int) -> str:
 def run_delete(spark, out: str, n_files: int) -> dict:
     n = n_files * ROWS_PER_FILE
     doomed = [int(n * (i + 0.5) / K_KEYS) for i in range(K_KEYS)]
+    sc = spark.sparkContext
+    group = f"delete_scale_demo-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "delete_by_keys")
     t0 = time.perf_counter()
-    stats = delete_by_keys(spark, out, "k", doomed)
+    try:
+        stats = delete_by_keys(spark, out, "k", doomed)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
     wall = time.perf_counter() - t0
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     assert stats["rows_deleted"] == K_KEYS, stats
     survivor = doomed[0] + 1
     assert read_bloom_pruned(spark, out, "k", survivor).count() == 1
@@ -65,6 +76,7 @@ def run_delete(spark, out: str, n_files: int) -> dict:
         "files_total": stats["files_total"],
         "files_rewritten": stats["files_rewritten"],
         "delete_wall_s": round(wall, 2),
+        "delete_jobs": jobs,
     }
 
 

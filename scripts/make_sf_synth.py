@@ -1,4 +1,4 @@
-"""Synthesize a ~10x scale fixture from /root/testdata/sf0.1 by shard
+"""Synthesize a ~10x scale fixture from an sf0.1 fixture by shard
 replication with consistent key offsets (VERDICT r5 §Next-5).
 
 Each shard i in 0..R-1 offsets every PK/FK by i*OFF, so joins stay
@@ -17,8 +17,9 @@ replicas:
 
 Shard 0 is the identity, so sf0.1's answers embed in the synth set.
 
-Usage: python scripts/make_sf_synth.py [out_dir] [R]
+Usage: python scripts/make_sf_synth.py --sf-dir <sf0.1 dir> --out <dir> [--shards R]
 """
+import argparse
 import os
 import shutil
 import string
@@ -28,9 +29,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession, functions as F
 
-SRC = "/root/testdata/sf0.1"
-OUT = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.scratch/sf1-synth"
-R = int(sys.argv[2]) if len(sys.argv) > 2 else 10
+ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+ap.add_argument("--sf-dir", required=True,
+                help="source fixture directory of <table>.parquet files")
+ap.add_argument("--out", required=True, help="synth fixture directory (replaced)")
+ap.add_argument("--shards", type=int, default=10, help="replication factor R")
+args = ap.parse_args()
+SRC, OUT, R = args.sf_dir, args.out, args.shards
 OFF = 10_000_000
 
 KEYS = {

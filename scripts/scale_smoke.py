@@ -4,10 +4,13 @@ queries at sf0.1 and at the sharded ~sf1 synth fixture
 scales linearly by construction, so ratio >> R signals a super-linear
 operator (candidate blowup, driver accumulation, partition cliff).
 
-Usage: python scripts/scale_smoke.py [runs_per_point] [query ...]
-(query names override the default heavy-headline list)
+Usage: python scripts/scale_smoke.py --sf-dir <sf0.1 dir> --synth-dir <dir>
+           [--replication R] [--runs N] [query ...]
+(query names override the default heavy-headline list; pass the
+replication the synth dir was built with, e.g. 50 for a 50-shard set)
 Prints one JSON line per query and a summary.
 """
+import argparse
 import json
 import os
 import sys
@@ -19,12 +22,16 @@ from pyspark.sql import SparkSession
 
 from jibaro_spark.queries import REGISTRY
 
-SF01 = "/root/testdata/sf0.1"
-# Point SPARK_GRAFT_SYNTH_DIR at a different replication (e.g. the
-# 50-shard .scratch/sf5-synth) for a second scaling datapoint.
-SF1 = os.environ.get("SPARK_GRAFT_SYNTH_DIR", "/root/repo/.scratch/sf1-synth")
-REPL = int(os.environ.get("SPARK_GRAFT_SYNTH_REPL", "10"))
-RUNS = int(sys.argv[1]) if len(sys.argv) > 1 else 1
+ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+ap.add_argument("--sf-dir", required=True, help="sf0.1 fixture directory")
+ap.add_argument("--synth-dir", required=True,
+                help="synth fixture directory (scripts/make_sf_synth.py --out)")
+ap.add_argument("--replication", type=int, default=10,
+                help="the synth dir's shard count (make_sf_synth.py --shards)")
+ap.add_argument("--runs", type=int, default=1, help="runs per point (min is kept)")
+ap.add_argument("queries", nargs="*", help="query names (default: heavy headline set)")
+args = ap.parse_args()
+SF01, SF1, REPL, RUNS = args.sf_dir, args.synth_dir, args.replication, args.runs
 
 QUERIES = [
     "q_bfs_hops",
@@ -38,8 +45,8 @@ QUERIES = [
     "q_minhash_near_dup",
     "q_pagerank_nations",
 ]
-if len(sys.argv) > 2:
-    QUERIES = sys.argv[2:]
+if args.queries:
+    QUERIES = args.queries
 
 spark = (
     SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")

@@ -104,6 +104,8 @@ def test_delete_updates_bloom_incrementally_no_table_rescan(
         (r["file"].rsplit("/", 1)[-1], r["word_idx"]): r["word"]
         for r in spark.read.parquet(words_dir).collect()
     }
+    dirs_before = _index_dirs(words_dir)
+    live_before = _names(spark.read.parquet(out).inputFiles())
 
     def _forbid(*a, **kw):  # a full rebuild would rescan the table
         raise AssertionError("full build_bloom_file_index called during delete")
@@ -122,8 +124,8 @@ def test_delete_updates_bloom_incrementally_no_table_rescan(
         assert read_bloom_pruned(spark, out, "k", probe).count() == 1, probe
     assert read_bloom_pruned(spark, out, "k", 100).count() == 0
     assert read_bloom_pruned(spark, out, "k", 200).count() == 0
-    # untouched files' index rows survive byte-identical (anti-filter,
-    # not recompute), and rewritten originals are gone from the index
+    # untouched files' index rows survive byte-identical (left in
+    # place, not recomputed), and rewritten originals are gone
     live_names = {f.rsplit("/", 1)[-1] for f in after_df.inputFiles()}
     after = {
         (r["file"].rsplit("/", 1)[-1], r["word_idx"]): r["word"]
@@ -135,6 +137,24 @@ def test_delete_updates_bloom_incrementally_no_table_rescan(
     for key, word in after.items():
         if key in before:
             assert word == before[key], "surviving rows must be unchanged"
+    # per file: the rewritten files' index dirs are gone, and every
+    # other file's dir is left as it was (same files, sizes, mtimes)
+    dirs_after = _index_dirs(words_dir)
+    removed = live_before - live_names
+    assert removed and not {f"file={n}" for n in removed} & dirs_after.keys()
+    for name in live_before & live_names:
+        assert dirs_after[f"file={name}"] == dirs_before[f"file={name}"], name
+
+
+def _index_dirs(words_dir):
+    """``{file=<name> dir: sorted (entry, size, mtime_ns)}`` of an index."""
+    return {
+        d.name: sorted(
+            (e.name, e.stat().st_size, e.stat().st_mtime_ns) for e in os.scandir(d.path)
+        )
+        for d in os.scandir(words_dir)
+        if d.name.startswith("file=")
+    }
 
 
 # --------------------------------------------------------- txlog delete path

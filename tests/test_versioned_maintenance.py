@@ -16,6 +16,7 @@ the index build.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
@@ -211,7 +212,8 @@ def test_bloom_auto_sizing_prevents_saturation(spark, tmp_path):
     )
     df.repartition(8, "k").write.parquet(out)  # ~20k keys per file
     build_bloom_file_index(spark, out, "k")
-    meta = spark.read.parquet(os.path.join(out, "_bloom", "k", "meta")).collect()[0]
+    with open(os.path.join(out, "_bloom", "k", "meta.json")) as f:
+        meta = json.load(f)
     assert meta["num_bits"] >= (1 << 17), "must out-size the dense file"
     # an 8-key delete rewrites ~8 files + rare FPs — never most of them
     doomed = [int(160_000 * (i + 0.5) / 8) for i in range(8)]
@@ -222,9 +224,8 @@ def test_bloom_auto_sizing_prevents_saturation(spark, tmp_path):
     out2 = os.path.join(str(tmp_path), "explicit")
     df.limit(1000).write.parquet(out2)
     build_bloom_file_index(spark, out2, "k", num_bits=1 << 14)
-    meta2 = spark.read.parquet(
-        os.path.join(out2, "_bloom", "k", "meta")
-    ).collect()[0]
+    with open(os.path.join(out2, "_bloom", "k", "meta.json")) as f:
+        meta2 = json.load(f)
     assert meta2["num_bits"] == 1 << 14
 
 
