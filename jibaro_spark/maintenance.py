@@ -239,7 +239,10 @@ def _swap_files(snap: _Snapshot, old_files: "list[str]", df: DataFrame) -> "list
     fs, root = _fs(snap.spark, snap.path)
     jpath = snap.spark.sparkContext._jvm.org.apache.hadoop.fs.Path
     tmp = jpath(root, f"_tmp_rewrite_{uuid.uuid4().hex[:12]}")
-    df.write.parquet(tmp.toString())
+    # only the part files are moved; no _SUCCESS marker
+    df.write.option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false").parquet(
+        tmp.toString()
+    )
     for f in old_files:
         fs.delete(jpath(f), False)
     new_files = []

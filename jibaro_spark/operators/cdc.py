@@ -118,7 +118,7 @@ def cdc_merge_table(
     (``jibaro_spark.txlog``) table a new version — snapshot-isolated
     readers, MERGE history, crash-safe (an aborted write leaves the
     table unchanged), the Delta semantics without the jars (see
-    ``tests/test_round5_txlog.py``); on bare parquet a file swap that
+    ``tests/test_txlog.py``); on bare parquet a file swap that
     is correct but not atomic (the bare-environment emulation).  A
     table that does not exist yet is created by an ``INITIAL_LOAD``
     of the batch: as txlog when ``Settings.use_txlog`` is set and

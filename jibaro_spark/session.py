@@ -29,6 +29,13 @@ SCALE_DEFAULTS: dict[str, str] = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # 128 MiB input splits — a sane default for large parquet scans.
     "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
+    # Streaming metadata logs (offsets, commits, source logs, a file
+    # sink's _spark_metadata) through FileSystem rather than FileContext:
+    # see build_session.
+    "spark.sql.streaming.checkpointFileManagerClass": (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    ),
 }
 
 
@@ -44,6 +51,21 @@ def build_session(
     ``local[*]``) so tests and bench share one entry point; on a real
     cluster the caller simply passes ``master=None`` with a cluster
     submit and the defaults still apply.
+
+    Streaming metadata logs go through Spark's
+    ``FileSystemBasedCheckpointFileManager`` on every scheme (a
+    :data:`SCALE_DEFAULTS` entry; ``extra_conf`` overrides it).  Without
+    libhadoop, Spark's FileContext default shells out to ``readlink``
+    eight times per metadata file on ``file:``.  No guarantee is lost.
+    The FileSystem manager's create-if-absent checks ``exists(dst)``,
+    renames, and raises ``FileAlreadyExistsException`` when the rename
+    fails with the target present.  FileContext's is check-then-rename
+    on ``file:`` (``ChecksumFs``) and on the object stores bound through
+    ``DelegateToFileSystem`` (S3A, ABFS, GCS).  On HDFS, FileContext
+    asks the NameNode for a rename that refuses an existing target; the
+    FileSystem manager's ``DistributedFileSystem.rename`` is the older
+    NameNode rename, which also fails when the target file exists, so of
+    two racing writers one still wins and the other raises.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")

@@ -416,7 +416,10 @@ def write_versioned(
     schema = _nullable(df.schema.jsonValue())
     os.makedirs(_log_path(table), exist_ok=True)
     staging = os.path.join(table, f"_staging_{uuid.uuid4().hex[:12]}")
-    df.write.parquet(staging)
+    # only the part files are read back; no _SUCCESS marker
+    df.write.option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false").parquet(
+        staging
+    )
     adds = []
     for fname in sorted(os.listdir(staging)):
         if not fname.endswith(".parquet"):

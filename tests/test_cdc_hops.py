@@ -1,7 +1,8 @@
 """The CDC hops' per-micro-batch work (fast core): the Spark jobs each
 hop runs in steady state, the schema record a hop hands to the next
-(``_schema.json``, ``jibaro_spark.io.update_schema_record``), and the
-zero-row leaf file a staged write can leave.
+(``_schema.json``, ``jibaro_spark.io.update_schema_record``), the
+zero-row leaf file a staged write can leave, and the manager that
+writes the hops' checkpoint files.
 
 Every batch is landed as one source file per Kafka partition, with an
 unregistered value-schema id beside the registered pair, the way
@@ -17,6 +18,7 @@ import struct
 
 import pyarrow.parquet as pq
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql.types import StructType
 
 from jibaro_spark import io as jio
@@ -25,6 +27,7 @@ from jibaro_spark.catalog import Catalog, Layer, TableRef
 from jibaro_spark.codecs.confluent import InMemorySchemaRegistry
 from jibaro_spark.config import Settings
 from jibaro_spark.operators.cdc import cdc_apply, initial_load
+from jibaro_spark.session import SCALE_DEFAULTS, build_session
 from jibaro_spark.streaming import pipeline as pl
 
 KAFKA_SCHEMA = (
@@ -264,3 +267,54 @@ def test_zero_row_leaf_file_commits_no_extra_merge(spark, lake, reg):
     assert spark.read.parquet(lake.history_path(CURATED)).count() == 2
     assert sorted(r["name"] for r in txlog.read_versioned(spark, path).collect()) == [
         "a", "b2", "c"]
+
+
+MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+
+
+def _checkpoint_manager(spark, path: str):
+    """The manager Spark's streaming queries and file sinks build for
+    ``path`` on this session."""
+    jvm = spark._jvm
+    hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
+    return jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager \
+        .create(jvm.org.apache.hadoop.fs.Path(path), hadoop_conf)
+
+
+def test_session_writes_checkpoints_through_filesystem(spark, lake):
+    """The hops' checkpoint files go through the FileSystem manager,
+    whose create-if-absent still refuses an existing file; a caller's
+    own manager in ``extra_conf`` keeps Spark's choice."""
+    fs_manager = SCALE_DEFAULTS[MANAGER_KEY]
+    assert fs_manager.endswith(".FileSystemBasedCheckpointFileManager")
+    ckpt = lake.checkpoint_path(STAGED)
+    manager = _checkpoint_manager(spark, ckpt)
+    assert manager.getClass().getName() == fs_manager
+
+    jvm = spark._jvm
+    os.makedirs(ckpt, exist_ok=True)
+    target = os.path.join(ckpt, "0")
+
+    def create(data: bytes) -> None:
+        out = manager.createAtomic(jvm.org.apache.hadoop.fs.Path(target), False)
+        out.write(data)
+        out.close()
+
+    create(b"first")
+    with pytest.raises(Py4JJavaError) as err:
+        create(b"second")
+    exists = jvm.java.lang.Class.forName("org.apache.hadoop.fs.FileAlreadyExistsException")
+    assert exists.isInstance(err.value.java_exception)
+    with open(target, "rb") as f:
+        assert f.read() == b"first"
+
+    file_context = fs_manager.replace("FileSystemBased", "FileContextBased")
+    try:
+        session = build_session(app_name="jibaro_spark_tests", shuffle_partitions=8,
+                                extra_conf={MANAGER_KEY: file_context})
+        assert session is spark
+        assert spark.conf.get(MANAGER_KEY) == file_context
+        assert _checkpoint_manager(spark, ckpt).getClass().getName() == file_context
+    finally:
+        spark.conf.set(MANAGER_KEY, fs_manager)
+    assert _checkpoint_manager(spark, ckpt).getClass().getName() == fs_manager
